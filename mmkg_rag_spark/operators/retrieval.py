@@ -1,7 +1,9 @@
 """Query-side operators (SURVEY.md §2.6 R2-R4) as DataFrame plans.
 
 The reference's retrieval walks in-memory lists and a networkx graph
-(retrieval/search.py). Here:
+(retrieval/search.py). ``search_eris`` does the same on the driver when the
+graph is small enough to broadcast (see "Driver path" below); otherwise it
+runs these plans:
 
 - R2 fuzzy top-k  : keywords (tiny) are **broadcast** against the scored
   table; rapidfuzz-style token_ratio runs in an Arrow-batched pandas UDF
@@ -13,13 +15,32 @@ The reference's retrieval walks in-memory lists and a networkx graph
   table — no shuffle of the edges at all.
 - R4 composition  : seeds ∪ hop-expansion with set subtraction (anti-join)
   and caps, mirroring search_eris (search.py:277-322).
+
+Driver path: when the planner's size estimates of nodes + edges + images
+sum to at most ``spark.sql.autoBroadcastJoinThreshold`` (−1 turns it off),
+the three frames are collected with ``toArrow()`` into a driver-resident
+index — entity and image match fields, plain and ``#image*`` edges, an
+undirected adjacency — and the query is answered from it with the same
+``token_ratio`` kernel, BFS and edge filters, returning Arrow-backed
+frames with the Spark plan's schemas and rows. One index is kept per
+process, keyed by each frame's plan hash and data files (part-file names
+carry the writing job's UUID, so a rewritten snapshot changes the key);
+frames that are not plain file scans are re-collected on every call.
 """
 
 from __future__ import annotations
 
+import time
+from decimal import ROUND_HALF_UP, Decimal
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from ..kernels.similarity import token_ratio
 
 SIMILARITY_THRESHOLD = 15  # search.py:81 default
 MAX_NUM = 3                # search.py:277-283
@@ -172,8 +193,16 @@ def search_eris(
     5. images capped at ``max_images_num`` (search.py:312-313)
 
     Returns small result DataFrames (reference caps everything at ≤ a few
-    rows) — the expensive inputs are only scanned, never collected.
+    rows). A graph whose size estimate fits the broadcast threshold is
+    collected once into a cached driver index and answered there (module
+    docstring); a larger one is only scanned by Spark plans, never
+    collected. Both paths return the same rows and schemas.
     """
+    if _fits_driver(nodes, edges, images):
+        return _driver_index(nodes, edges, images).search(
+            nodes.sparkSession, keywords, max_num, max_images_num,
+            similarity_threshold, hop,
+        )
     ent_items = nodes.select(
         "name",
         F.array_union(F.array("name"), F.coalesce("aliases", F.array())).alias("fields"),
@@ -219,6 +248,190 @@ def search_eris(
         "related_edges": related_edges,
         "image_edges": image_edges,
     }
+
+
+# ---------------------------------------------------------------------------
+# Driver path
+# ---------------------------------------------------------------------------
+
+def spark_round(x: float, digits: int = 4) -> float:
+    """``F.round(x, digits)`` on a double: HALF_UP on its decimal form.
+
+    Python's ``round`` rounds half to even on the binary value, which
+    differs on real scores (100·13/128 = 10.15625 → Spark 10.1563).
+    """
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` (metadata only, no job)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _fits_driver(*frames: DataFrame) -> bool:
+    spark = frames[0].sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return limit >= 0 and sum(_plan_bytes(df) for df in frames) <= limit
+
+
+def _file_scan_key(df: DataFrame):
+    """(plan hash, data files) of a deterministic plan over file scans
+    only — two such frames with equal keys hold the same rows. None for
+    anything else (in-memory or RDD leaves, nondeterministic plans)."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation" or (
+            leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return None
+    if not plan.deterministic():
+        return None
+    return df.semanticHash(), tuple(sorted(df.inputFiles()))
+
+
+def _fields(ids: list, heads: list, rests: list) -> list[tuple]:
+    """(id, fields) per row; fields = ``array_union([head], rest)``."""
+    return [
+        (i, [f for f in dict.fromkeys([h, *(r or [])]) if f is not None])
+        for i, h, r in zip(ids, heads, rests)
+        if i is not None
+    ]
+
+
+class _GraphIndex:
+    """Driver-resident copy of one graph, enough to answer ``search_eris``."""
+
+    def __init__(self, nodes: pa.Table, edges: pa.Table, images: pa.Table,
+                 schemas: tuple[StructType, StructType, StructType]):
+        self.node_schema, self.edge_schema, self.image_schema = schemas
+        self.entities = _fields(nodes["name"].to_pylist(), nodes["name"].to_pylist(),
+                                nodes["aliases"].to_pylist())
+        self.images = _fields(images["path"].to_pylist(), images["caption"].to_pylist(),
+                              images["texts"].to_pylist())
+        # null labels are neither plain nor image edges, as in the Spark plan
+        is_image = pc.starts_with(edges["label"], "#image")
+        self.image_edges = edges.filter(is_image)
+        plain = edges.filter(pc.invert(is_image))
+        # dropDuplicates(source, label, target) commutes with the endpoint
+        # filter (the key holds both endpoints), so dedup once here
+        src, lbl, dst = (plain[c].to_pylist() for c in ("source", "label", "target"))
+        first: dict[tuple, int] = {}
+        for i, key in enumerate(zip(src, lbl, dst)):
+            first.setdefault(key, i)
+        self.plain_edges = plain.take(list(first.values()))
+        self.adj: dict[str, set[str]] = {}
+        for a, b in zip(src, dst):
+            if a is not None and b is not None:
+                self.adj.setdefault(a, set()).add(b)
+                self.adj.setdefault(b, set()).add(a)
+
+    def search(self, spark, keywords, max_num, max_images_num, threshold, hop):
+        from ..metrics import record_pairs
+
+        t0 = time.perf_counter_ns()
+        ents, n_ent = _topk(self.entities, keywords, max_num, threshold)
+        imgs, n_img = _topk(self.images, keywords, max_images_num, threshold)
+        record_pairs("fuzzy_search", n_ent + n_img, time.perf_counter_ns() - t0)
+
+        depth = {name: 0 for name, _, _ in ents}
+        frontier = set(depth)
+        for d in range(1, hop + 1):
+            frontier = {b for a in frontier for b in self.adj.get(a, ()) if b not in depth}
+            depth.update(dict.fromkeys(frontier, d))
+        related = sorted(((h, n) for n, h in depth.items() if h > 0))
+
+        def touches(col: str, table: pa.Table):
+            keys = pa.array(sorted(depth), type=table.schema.field(col).type)
+            return pc.is_in(table[col], value_set=keys, skip_nulls=True)
+
+        plain = self.plain_edges
+        name = self.node_schema["name"]
+        src, dst = self.edge_schema["source"], self.edge_schema["target"]
+        return {
+            "seed_entities": _seed_frame(spark, ents, name),
+            "seed_images": _seed_frame(spark, imgs, self.image_schema["path"]),
+            "related_entities": _frame(
+                spark,
+                pa.table({"name": [n for _, n in related],
+                          "hop": pa.array([h for h, _ in related], pa.int32())}),
+                StructType([
+                    StructField("name", name.dataType,
+                                name.nullable or src.nullable or dst.nullable),
+                    StructField("hop", IntegerType(), False),
+                ]),
+            ),
+            "related_edges": _frame(
+                spark,
+                plain.filter(pc.or_(touches("source", plain), touches("target", plain))),
+                self.edge_schema,
+            ),
+            "image_edges": _frame(
+                spark,
+                self.image_edges.filter(touches("source", self.image_edges)),
+                self.edge_schema,
+            ),
+        }
+
+
+def _topk(items: list[tuple], keywords: list[str], k: int, threshold: float):
+    """R2 on the driver: (id, score, rank) rows as ``fuzzy_topk`` returns
+    them, and the number of keyword×field pairs scored."""
+    best: dict = {}
+    pairs = 0
+    for i, fields in items:
+        pairs += len(keywords) * len(fields)
+        s = max((token_ratio(kw, f) for kw in keywords for f in fields), default=None)
+        if s is not None and (i not in best or s > best[i]):
+            best[i] = s
+    top = sorted(((-s, i) for i, s in best.items() if s >= threshold))[:max(k, 0)]
+    return [(i, spark_round(-s), r) for r, (s, i) in enumerate(top, 1)], pairs
+
+
+def _seed_frame(spark, rows: list[tuple], id_field: StructField) -> DataFrame:
+    ids, scores, ranks = (list(c) for c in zip(*rows)) if rows else ([], [], [])
+    return _frame(
+        spark,
+        pa.table({id_field.name: ids,
+                  "score": pa.array(scores, pa.float64()),
+                  "rank": pa.array(ranks, pa.int32())}),
+        StructType([
+            id_field,
+            StructField("score", DoubleType()),
+            StructField("rank", IntegerType(), False),
+        ]),
+    )
+
+
+def _frame(spark, table: pa.Table, schema: StructType) -> DataFrame:
+    """An Arrow-backed (LocalRelation) frame: collecting it runs no job."""
+    if not table.num_rows:  # pyspark rejects the zero-chunk columns of an empty filter
+        table = table.schema.empty_table()
+    return spark.createDataFrame(table, schema)
+
+
+_cached: tuple | None = None  # (key, _GraphIndex) of the last file-scan graph
+
+
+def _driver_index(nodes: DataFrame, edges: DataFrame, images: DataFrame) -> _GraphIndex:
+    """The graph's index: from the cache while its key holds, else collected
+    (one ``toArrow`` job per frame) and, for file-scan graphs, cached."""
+    global _cached
+    keys = tuple(_file_scan_key(df) for df in (nodes, edges, images))
+    key = None if None in keys else (nodes.sparkSession.sparkContext, keys)
+    hit = _cached  # one read: another thread may replace the entry
+    if key is not None and hit is not None and hit[0] == key:
+        return hit[1]
+    index = _GraphIndex(
+        nodes.select("name", "aliases").toArrow(),
+        edges.toArrow(),
+        images.select("path", "caption", "texts").toArrow(),
+        (nodes.schema, edges.schema, images.schema),
+    )
+    if key is not None:
+        _cached = (key, index)
+    return index
 
 
 def assemble_context(

@@ -16,6 +16,11 @@ semantics run on a directory layout:
     {warehouse}/{table}/manifest.json          — snapshot list (atomic rename)
     {warehouse}/{table}/snap-{fingerprint}/    — parquet data files
 
+Each manifest entry stores the schema its files read back as, so ``read``
+passes it to the reader instead of launching a parquet schema-inference job
+(Iceberg keeps the schema in table metadata for the same reason). Entries
+written without one fall back to inference.
+
 Fingerprints are content-addressed: sha256 of (stage name, params, input
 fingerprints) — deterministic across runs, so resume needs no mutable state.
 """
@@ -29,12 +34,18 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def fingerprint(*parts: Any) -> str:
     """Deterministic 16-hex-char fingerprint of stage name + params + inputs."""
     raw = json.dumps(parts, sort_keys=True, default=str).encode()
     return hashlib.sha256(raw).hexdigest()[:16]
+
+
+def _file_schema(df: DataFrame) -> dict:
+    """``df``'s schema as its parquet files read back: every field nullable."""
+    return json.loads(df._jdf.schema().asNullable().json())
 
 
 class ParquetCatalog:
@@ -69,7 +80,9 @@ class ParquetCatalog:
     def has_snapshot(self, table: str, snap: str) -> bool:
         return any(s["id"] == snap for s in self._load_manifest(table))
 
-    def _commit(self, table: str, snap: str, path: str, meta: dict | None) -> None:
+    def _commit(
+        self, table: str, snap: str, path: str, meta: dict | None, df: DataFrame
+    ) -> None:
         """Append a manifest entry with a monotonic sequence number.
 
         ``seq`` (append order) — not wall-clock ts — defines "latest":
@@ -84,6 +97,7 @@ class ParquetCatalog:
                 "seq": seq,
                 "ts": time.time(),
                 "path": path,
+                "schema": _file_schema(df),
                 **(meta or {}),
             }
         )
@@ -93,7 +107,7 @@ class ParquetCatalog:
         """Materialize df as snapshot ``snap`` of ``table``; returns data dir."""
         path = self.snapshot_dir(table, snap)
         df.write.mode("overwrite").parquet(path)
-        self._commit(table, snap, path, meta)
+        self._commit(table, snap, path, meta, df)
         return path
 
     def write_all(
@@ -115,20 +129,26 @@ class ParquetCatalog:
             path = self.snapshot_dir(table, snap)
             df.write.mode("overwrite").parquet(path)
             paths[table] = path
-        for table, path in paths.items():
-            self._commit(table, snap, path, meta)
+        for df, table in writes:
+            self._commit(table, snap, paths[table], meta, df)
         return paths
 
-    def read(self, table: str, snap: str | None = None) -> DataFrame:
-        """Read a snapshot (default: latest committed = highest seq)."""
+    def _entry(self, table: str, snap: str | None) -> dict:
+        """Manifest entry of ``snap`` (default: latest = highest seq)."""
         manifest = self._load_manifest(table)
         if not manifest:
             raise FileNotFoundError(f"no snapshots for table {table}")
         if snap is None:
-            entry = max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
-        else:
-            entry = next(s for s in manifest if s["id"] == snap)
-        return self.spark.read.parquet(entry["path"])
+            return max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
+        return next(s for s in manifest if s["id"] == snap)
+
+    def read(self, table: str, snap: str | None = None) -> DataFrame:
+        """Read a snapshot (default: latest committed = highest seq)."""
+        entry = self._entry(table, snap)
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(entry["path"])
 
     def snapshots(self, table: str) -> list[dict]:
         return self._load_manifest(table)
@@ -163,13 +183,7 @@ class ParquetCatalog:
         one full-shuffle alternative (repartition) buys nothing here.
         Returns stats {files_before, files_after, bytes, snapshot}.
         """
-        manifest = self._load_manifest(table)
-        if not manifest:
-            raise FileNotFoundError(f"no snapshots for table {table}")
-        if snap is None:
-            entry = max(manifest, key=lambda s: (s.get("seq", 0), s["ts"]))
-        else:
-            entry = next(s for s in manifest if s["id"] == snap)
+        entry = self._entry(table, snap)
         files = self._data_files(entry["path"])
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, -(-total // target_file_bytes))
@@ -183,7 +197,7 @@ class ParquetCatalog:
                 "compacted": False,
             }
         new_snap = fingerprint("compact", entry["id"], target_file_bytes)
-        df = self.spark.read.parquet(entry["path"]).coalesce(int(n_out))
+        df = self.read(table, entry["id"]).coalesce(int(n_out))
         path = self.snapshot_dir(table, new_snap)
         df.write.mode("overwrite").parquet(path)
         self._commit(
@@ -191,6 +205,7 @@ class ParquetCatalog:
             new_snap,
             path,
             {"compacted_from": entry["id"], "files_before": len(files)},
+            df,
         )
         return {
             "table": table,

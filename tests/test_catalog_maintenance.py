@@ -92,3 +92,57 @@ def test_compact_plan_is_narrow_no_shuffle(spark, tmp_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Coalesce" in plan
+
+
+def test_read_uses_stored_schema_without_a_job(spark, tmp_path):
+    """Snapshots written by write, write_all and compact store the schema
+    their files read back as; read passes it on instead of inferring it
+    (no job), and an entry without one still reads by inference."""
+    import json
+
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, LongType, MapType, StringType, StructField, StructType)
+
+    cat = _cat(spark, tmp_path)
+    schema = StructType([
+        StructField("name", StringType(), False),
+        StructField("n", LongType()),
+        StructField("tags", ArrayType(StringType(), False)),
+        StructField("w", MapType(StringType(), DoubleType(), False)),
+    ])
+    df = spark.createDataFrame(
+        [("a", 1, ["x", "y"], {"k": 1.0}), ("b", None, None, None)], schema)
+    cat.write(df.repartition(3), "t", "w1")
+    cat.write_all([(df, "u"), (df.select("name"), "v")], "w2")
+    cat.compact("t", target_file_bytes=1 << 30)
+    sc = spark.sparkContext
+    probes = iter(range(100))
+
+    def jobs_during(fn):
+        group = f"catalog-read-probe-{next(probes)}"
+        sc.setJobGroup(group, "catalog read")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for table, snap in [("t", "w1"), ("t", None), ("u", "w2"), ("v", "w2")]:
+        entry = cat._entry(table, snap)
+        inferred, n_inferred = jobs_during(lambda: spark.read.parquet(entry["path"]))
+        stored, n_stored = jobs_during(lambda: cat.read(table, snap))
+        assert n_inferred >= 1 and n_stored == 0, (table, snap)
+        assert stored.schema == inferred.schema
+        assert sorted(stored.collect()) == sorted(inferred.collect())
+
+    # entries written before schemas were stored fall back to inference
+    mpath = cat._manifest_path("u")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    for e in manifest:
+        del e["schema"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    legacy, n_legacy = jobs_during(lambda: cat.read("u"))
+    assert n_legacy >= 1
+    assert sorted(legacy.collect()) == sorted(df.collect())

@@ -1,9 +1,16 @@
-"""R4 retrieval composition (search_eris) over a small planted graph."""
+"""R4 retrieval composition (search_eris) over small planted graphs, and
+parity of its driver path with its Spark plan."""
 
 from __future__ import annotations
 
-import pytest
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
+import pytest
+from pyspark.sql import functions as F
+
+from mmkg_rag_spark import metrics
+from mmkg_rag_spark.operators import retrieval
 from mmkg_rag_spark.operators.retrieval import search_eris
 
 
@@ -111,3 +118,236 @@ def test_khop_large_frontier_unhinted_path(spark):
     assert f == b
     assert ("n7", 1) in b and ("leaf7", 2) in b and ("hub", 0) in b
     assert len(b) == 1001
+
+
+# ---------------------------------------------------------------------------
+# Driver path vs Spark plan
+# ---------------------------------------------------------------------------
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def _spark_plan(spark):
+    """Turn the driver path off (threshold −1), restoring the setting."""
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+def _rows(res) -> dict:
+    return {
+        k: (v.schema, sorted((tuple(r) for r in v.collect()), key=repr))
+        for k, v in res.items()
+    }
+
+
+def _assert_parity(nodes, edges, images, cases):
+    """Both paths return the same rows and schemas for every frame of every
+    ``(keywords, kwargs)`` case."""
+    assert retrieval._fits_driver(nodes, edges, images)
+    driver = []
+    for keywords, kw in cases:
+        res = search_eris(nodes, edges, images, keywords, **kw)
+        assert all(
+            v._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LocalRelation"
+            for v in res.values()
+        )
+        driver.append(_rows(res))
+    # each Spark-plan call is ~23 small jobs, mostly scheduling latency:
+    # run four at once
+    with _spark_plan(nodes.sparkSession), ThreadPoolExecutor(4) as pool:
+        assert not retrieval._fits_driver(nodes, edges, images)
+        plan = pool.map(
+            lambda c: _rows(search_eris(nodes, edges, images, c[0], **c[1])), cases)
+        for case, d, p in zip(cases, driver, plan):
+            assert d == p, case
+    return driver
+
+
+PLANTED_NODES = [
+    ("Ada Lovelace", "PERSON", "pioneer", ["Ada", "Countess of Lovelace"]),
+    ("Charles Babbage", "PERSON", "inventor", ["Babbage"]),
+    ("Analytical Engine", "TECH", "machine", []),
+    ("Difference Engine", "TECH", "calculator", ["Engine No. 2"]),
+    ("Alan Turing", "PERSON", "codebreaker", ["Turing"]),
+    ("Bletchley Park", "LOC", "estate", []),
+    ("Enigma Machine", "TECH", "cipher", ["Enigma"]),
+    ("Grace Hopper", "PERSON", "admiral", ["Amazing Grace"]),
+    ("COBOL", "TECH", "language", None),
+    ("Lovelace Society", "ORG", "club", ["Ada"]),
+    ("Zurich Office", "ORG", "site", []),
+]
+PLANTED_EDGES = [
+    ("Ada Lovelace", "worked on", "Analytical Engine", "notes", ["p1"]),
+    ("Charles Babbage", "designed", "Analytical Engine", "", []),
+    ("Charles Babbage", "designed", "Difference Engine", "", []),
+    ("Charles Babbage", "designed", "Difference Engine", "", []),  # duplicate
+    ("Alan Turing", "worked at", "Bletchley Park", "", ["p2"]),
+    ("Alan Turing", "broke", "Enigma Machine", "", []),
+    ("Alan Turing", "read", "Ada Lovelace", "", []),
+    ("Grace Hopper", "created", "COBOL", "", []),
+    ("Lovelace Society", "honours", "Ada Lovelace", "", []),
+    ("Zurich Office", "hosts", "Archive", "", []),
+    ("Zurich Office", None, "Ada Lovelace", "", []),  # no label: no edge kind
+    ("Ada Lovelace", "#imagedepicts", "images/ada.png", "", []),
+    ("Alan Turing", "#imagedepicts", "images/bombe.png", "", []),
+    ("Enigma Machine", "#imageshows", "images/bombe.png", "", []),
+]
+PLANTED_IMAGES = [
+    ("images/ada.png", "Ada Lovelace portrait", ["a daguerreotype", "Ada"]),
+    ("images/bombe.png", "The Bombe at Bletchley", None),
+    ("images/cobol.png", "COBOL manual cover", ["Grace Hopper"]),
+]
+# exact names, aliases, case changes, misspellings, partial and
+# multi-token queries, and one that matches nothing; grouped, one
+# search_eris call per group, to bound the Spark-plan calls
+KEYWORD_GROUPS = [
+    ["Ada Lovlace", "Charles Babage", "quantum gravity"],
+    ["ada lovelace", "Bletchly Park", "Countess", "Engine No 2"],
+    ["Analytic Engin", "Zurich", "Grace Hoper"],
+    ["Babbage", "Difference Engine", "Bombe", "Amazing Grace"],
+    ["Alan Turring", "Engine", "COBOL manual"],
+    ["Enigma", "Lovelace", "portrait of Ada", "Turing Enigma"],
+]
+
+
+@pytest.fixture(scope="module")
+def planted(spark, tmp_path_factory):
+    """The planted graph as parquet scans (in-memory frames are RDD-backed
+    and sized at defaultSizeInBytes, so they never take the driver path)."""
+    root = tmp_path_factory.mktemp("planted")
+    frames = {
+        "nodes": spark.createDataFrame(
+            PLANTED_NODES,
+            "name string, label string, description string, aliases array<string>"),
+        "edges": spark.createDataFrame(
+            PLANTED_EDGES,
+            "source string, label string, target string, description string, "
+            "references array<string>"),
+        "images": spark.createDataFrame(
+            PLANTED_IMAGES, "path string, caption string, texts array<string>"),
+    }
+    for name, df in frames.items():
+        df.write.parquet(str(root / name))
+    return tuple(spark.read.parquet(str(root / n)) for n in ("nodes", "edges", "images"))
+
+
+def test_driver_path_matches_spark_plan(planted):
+    combos = [dict(hop=1, max_num=1), dict(hop=2, max_num=3),
+              dict(hop=1, max_num=3), dict(hop=2, max_num=1)]
+    cases = [(group, combos[k % len(combos)]) for k, group in enumerate(KEYWORD_GROUPS)]
+    cases += [(["Ada Lovelace"], dict(max_num=1, similarity_threshold=50)), ([], {})]
+    _assert_parity(*planted, cases)
+
+
+def test_driver_path_counts_scored_pairs(planted):
+    nodes, edges, images = planted
+    keywords = ["Ada Lovelace", "Enigma"]
+
+    def driver_pairs():
+        return metrics._PAIR_SITES.get("fuzzy_search", {}).get("driver_pairs", 0)
+
+    before = driver_pairs()
+    search_eris(nodes, edges, images, keywords)
+    fields = sum(len(set([n[0], *(n[3] or [])])) for n in PLANTED_NODES) + sum(
+        len(set([i[1], *(i[2] or [])])) for i in PLANTED_IMAGES)
+    assert driver_pairs() - before == len(keywords) * fields
+    assert metrics.similarity_throughput()["fuzzy_search"]["pairs"] >= len(keywords) * fields
+
+
+def test_spark_round_matches_spark(spark):
+    from mmkg_rag_spark.operators.retrieval import spark_round
+
+    # exact binary halves (k/128·100) and ratios token_ratio really yields
+    values = [100 * k / 128 for k in range(129)] + [
+        100 * (1 - d / t) for t in range(1, 40) for d in range(t + 1)]
+    df = spark.createDataFrame([(v,) for v in values], "x double")
+    got = [r.r for r in df.select(F.round("x", 4).alias("r")).collect()]
+    assert [spark_round(v) for v in values] == got
+    assert spark_round(10.15625) == 10.1563 != round(10.15625, 4)
+
+
+def test_build_kg_graph_parity_and_fold(spark, tmp_path_factory):
+    """A build_kg graph of generated pages: parity on its own names and
+    misspellings; a fold into it is seen by the next query."""
+    from mmkg_rag_spark.pipeline import build_kg
+    from mmkg_rag_spark.sinks import write_graph
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+    from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
+    from mmkg_rag_spark.streaming import process_pages_batch
+
+    cat = ParquetCatalog(spark, str(tmp_path_factory.mktemp("kg")))
+    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
+    r = build_kg(spark, gen_pages_df(spark, 12), manifest)
+    edges = r.edges.unionByName(
+        r.image_edges.withColumn("chunks", F.array().cast("array<int>")))
+    write_graph(cat, r.nodes, edges, "kg", r.images)
+
+    def graph():
+        return cat.read("nodes"), cat.read("edges"), cat.read("images")
+
+    names = sorted(row.name for row in cat.read("nodes").select("name").collect())
+    new = "Hedy Lamarr"
+    assert new not in names
+    _assert_parity(*graph(), [
+        ([new, *names[:3]], dict(hop=1, max_num=3)),
+        ([n[:-2] + n[-1] for n in names[3:6]], dict(hop=2, max_num=1)),
+    ])
+
+    pages = spark.createDataFrame(
+        [("u-fold", f"**{new}** is a person that invented frequency hopping. "
+                    f"**{names[0]}** is an organization that builds radios. "
+                    f"**{new}** collaborates with **{names[0]}**.")],
+        "url string, text string")
+    process_pages_batch(spark, cat, pages, 0)
+    res = _assert_parity(*graph(), [([new], {})])[0]
+    assert [r[:3] for r in res["seed_entities"][1] if r[2] == 1] == [(new, 100.0, 1)]
+    assert any(e[0] == new for e in res["related_edges"][1])
+
+
+def test_cache_follows_rewrites_and_plans(spark, tmp_path):
+    """A query on a new snapshot collects the graph (one job per frame), a
+    repeated one runs no job. write_graph re-committing the same input
+    fingerprint changes the data files, and a filtered frame over the same
+    files has another plan: neither may be answered from the cached index."""
+    from mmkg_rag_spark.sinks import write_graph
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(spark, str(tmp_path))
+    node_schema = "name string, label string, description string, aliases array<string>"
+    edge_schema = ("source string, label string, target string, description string, "
+                   "references array<string>")
+    images = spark.createDataFrame(PLANTED_IMAGES, "path string, caption string, texts array<string>")
+    sc = spark.sparkContext
+    groups = iter(range(100))
+
+    def commit(nodes, edges):
+        write_graph(cat, spark.createDataFrame(nodes, node_schema),
+                    spark.createDataFrame(edges, edge_schema), "same-input", images)
+
+    def seeds(nodes=None):
+        """Seed names of one query, and the Spark jobs it ran."""
+        group = f"cache-probe-{next(groups)}"
+        sc.setJobGroup(group, "query")
+        try:
+            n = cat.read("nodes") if nodes is None else nodes
+            res = search_eris(n, cat.read("edges"), cat.read("images"), ["Grace Hopper"],
+                              max_num=1, similarity_threshold=90)
+            names = [r.name for r in res["seed_entities"].collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return names, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    commit(PLANTED_NODES[:4], PLANTED_EDGES[:3])
+    assert seeds() == ([], 3)
+    assert seeds() == ([], 0)
+    commit(PLANTED_NODES, PLANTED_EDGES)
+    assert seeds() == (["Grace Hopper"], 3)
+    filtered = cat.read("nodes").filter(F.col("name") != "Grace Hopper")
+    assert seeds(filtered) == ([], 3)
+    assert seeds()[0] == ["Grace Hopper"]

@@ -245,7 +245,7 @@ def test_ktruss_matches_python_peeling(spark):
 def test_ktruss_delta_branch_matches_python_peeling(spark):
     # K8 (28 edges, intra-clique support 6) + a pendant triangle via
     # node 8 attached to {0, 1}: edges (0,8) and (1,8) have support 1
-    # and drop in round 1 — 2/30 ≈ 6.7% ≤ the 10% delta threshold, so
+    # and drop in round 1 — 2/30 ≈ 6.7% ≤ the 20% delta threshold, so
     # the round takes the DELTA path: one dead triangle {0,1,8} must
     # decrement exactly edge (0,1) from 7 to 6. Also exercises the
     # fixed-point early exit (rounds 2-4 drop nothing).
