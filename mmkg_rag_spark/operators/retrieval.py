@@ -2,8 +2,7 @@
 
 The reference's retrieval walks in-memory lists and a networkx graph
 (retrieval/search.py). ``search_eris`` does the same on the driver when the
-graph is small enough to broadcast (see "Driver path" below); otherwise it
-runs these plans:
+graph is small (see "Driver path" below); otherwise it runs these plans:
 
 - R2 fuzzy top-k  : keywords (tiny) are **broadcast** against the scored
   table; rapidfuzz-style token_ratio runs in an Arrow-batched pandas UDF
@@ -17,15 +16,13 @@ runs these plans:
   and caps, mirroring search_eris (search.py:277-322).
 
 Driver path: when the planner's size estimates of nodes + edges + images
-sum to at most ``spark.sql.autoBroadcastJoinThreshold`` (−1 turns it off),
-the three frames are collected with ``toArrow()`` into a driver-resident
-index — entity and image match fields, plain and ``#image*`` edges, an
-undirected adjacency — and the query is answered from it with the same
-``token_ratio`` kernel, BFS and edge filters, returning Arrow-backed
-frames with the Spark plan's schemas and rows. One index is kept per
-process, keyed by each frame's plan hash and data files (part-file names
-carry the writing job's UUID, so a rewritten snapshot changes the key);
-frames that are not plain file scans are re-collected on every call.
+sum to at most ``DRIVER_MAX_BYTES``, the three frames are collected with
+``toArrow()`` (one job each) into a driver-resident index — entity and
+image match fields, plain and ``#image*`` edges, an undirected adjacency —
+and the query is answered from it with the same ``token_ratio`` kernel,
+BFS and edge filters, returning Arrow-backed frames with the Spark plan's
+schemas and rows. The index is rebuilt on every call, so a query always
+sees the frames' current contents.
 """
 
 from __future__ import annotations
@@ -193,19 +190,23 @@ def search_eris(
     5. images capped at ``max_images_num`` (search.py:312-313)
 
     Returns small result DataFrames (reference caps everything at ≤ a few
-    rows). A graph whose size estimate fits the broadcast threshold is
-    collected once into a cached driver index and answered there (module
-    docstring); a larger one is only scanned by Spark plans, never
-    collected. Both paths return the same rows and schemas.
+    rows). A graph whose size estimate is at most ``DRIVER_MAX_BYTES`` is
+    collected into a driver index and answered there (module docstring); a
+    larger one is only scanned by Spark plans, never collected. Both paths
+    return the same rows and schemas; items with a null id and null match
+    fields are skipped by both.
     """
     if _fits_driver(nodes, edges, images):
-        return _driver_index(nodes, edges, images).search(
-            nodes.sparkSession, keywords, max_num, max_images_num,
-            similarity_threshold, hop,
+        index = _GraphIndex(
+            nodes.select("name", "aliases").toArrow(),
+            edges.toArrow(),
+            images.select("path", "caption", "texts").toArrow(),
+            (nodes.schema, edges.schema, images.schema),
         )
-    ent_items = nodes.select(
-        "name",
-        F.array_union(F.array("name"), F.coalesce("aliases", F.array())).alias("fields"),
+        return index.search(nodes.sparkSession, keywords, max_num, max_images_num,
+                            similarity_threshold, hop)
+    ent_items = nodes.filter(F.col("name").isNotNull()).select(
+        "name", _match_fields("name", "aliases")
     )
     # result frames are ≤ a few rows but feed several consumers (expansion,
     # unions, semi-joins) — cache each or every consumer re-runs the fuzzy
@@ -214,9 +215,8 @@ def search_eris(
         ent_items, keywords, "fields", ["name"], max_num, similarity_threshold
     ).cache()
 
-    img_items = images.select(
-        "path",
-        F.array_union(F.array("caption"), F.coalesce("texts", F.array())).alias("fields"),
+    img_items = images.filter(F.col("path").isNotNull()).select(
+        "path", _match_fields("caption", "texts")
     )
     seed_images = fuzzy_topk(
         img_items, keywords, "fields", ["path"], max_images_num, similarity_threshold
@@ -224,7 +224,10 @@ def search_eris(
 
     # non-image edge universe (image edges are '#image*'-labelled, mmodal.py:293-300)
     plain_edges = edges.filter(~F.col("label").startswith("#image"))
-    related = expand_seeds(plain_edges, seed_entities.select("name"), hops=hop).cache()
+    # an edge with a null endpoint links no two vertices
+    related = expand_seeds(
+        plain_edges.dropna(subset=["source", "target"]), seed_entities.select("name"), hops=hop
+    ).cache()
 
     universe = (
         seed_entities.select("name").unionByName(related.select("name")).distinct().cache()
@@ -250,9 +253,25 @@ def search_eris(
     }
 
 
+def _match_fields(head: str, rest: str):
+    """``[head] ∪ rest`` without nulls: a null field has no score."""
+    fields = F.array_union(F.array(head), F.coalesce(rest, F.array()))
+    return F.filter(fields, lambda f: f.isNotNull()).alias("fields")
+
+
 # ---------------------------------------------------------------------------
 # Driver path
 # ---------------------------------------------------------------------------
+
+# Largest graph answered on the driver: the sum of the planner's size
+# estimates of nodes, edges and images (on-disk bytes for parquet scans);
+# −1 turns the driver path off. tools/bench_search_paths.py measures the
+# crossover. On 4 vCPUs, with graphs of 15 edges and one image per node,
+# the driver path stops winning at ~1.5 MiB (3k nodes, 45k edges) for 4
+# keywords and ~2 MiB for one. At 1 MiB it is 1.2-2× faster than the Spark
+# plan and adds < 50 MiB to the Python heap.
+DRIVER_MAX_BYTES = 1 << 20
+
 
 def spark_round(x: float, digits: int = 4) -> float:
     """``F.round(x, digits)`` on a double: HALF_UP on its decimal form.
@@ -269,26 +288,9 @@ def _plan_bytes(df: DataFrame) -> int:
 
 
 def _fits_driver(*frames: DataFrame) -> bool:
-    spark = frames[0].sparkSession
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return limit >= 0 and sum(_plan_bytes(df) for df in frames) <= limit
-
-
-def _file_scan_key(df: DataFrame):
-    """(plan hash, data files) of a deterministic plan over file scans
-    only — two such frames with equal keys hold the same rows. None for
-    anything else (in-memory or RDD leaves, nondeterministic plans)."""
-    plan = df._jdf.queryExecution().analyzed()
-    leaves = plan.collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "LogicalRelation" or (
-            leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
-        ):
-            return None
-    if not plan.deterministic():
-        return None
-    return df.semanticHash(), tuple(sorted(df.inputFiles()))
+    return DRIVER_MAX_BYTES >= 0 and (
+        sum(_plan_bytes(df) for df in frames) <= DRIVER_MAX_BYTES
+    )
 
 
 def _fields(ids: list, heads: list, rests: list) -> list[tuple]:
@@ -409,29 +411,6 @@ def _frame(spark, table: pa.Table, schema: StructType) -> DataFrame:
     if not table.num_rows:  # pyspark rejects the zero-chunk columns of an empty filter
         table = table.schema.empty_table()
     return spark.createDataFrame(table, schema)
-
-
-_cached: tuple | None = None  # (key, _GraphIndex) of the last file-scan graph
-
-
-def _driver_index(nodes: DataFrame, edges: DataFrame, images: DataFrame) -> _GraphIndex:
-    """The graph's index: from the cache while its key holds, else collected
-    (one ``toArrow`` job per frame) and, for file-scan graphs, cached."""
-    global _cached
-    keys = tuple(_file_scan_key(df) for df in (nodes, edges, images))
-    key = None if None in keys else (nodes.sparkSession.sparkContext, keys)
-    hit = _cached  # one read: another thread may replace the entry
-    if key is not None and hit is not None and hit[0] == key:
-        return hit[1]
-    index = _GraphIndex(
-        nodes.select("name", "aliases").toArrow(),
-        edges.toArrow(),
-        images.select("path", "caption", "texts").toArrow(),
-        (nodes.schema, edges.schema, images.schema),
-    )
-    if key is not None:
-        _cached = (key, index)
-    return index
 
 
 def assemble_context(

@@ -124,18 +124,15 @@ def test_khop_large_frontier_unhinted_path(spark):
 # Driver path vs Spark plan
 # ---------------------------------------------------------------------------
 
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-
-
 @contextmanager
-def _spark_plan(spark):
-    """Turn the driver path off (threshold −1), restoring the setting."""
-    old = spark.conf.get(THRESHOLD)
-    spark.conf.set(THRESHOLD, "-1")
+def _spark_plan():
+    """Turn the driver path off (``DRIVER_MAX_BYTES`` −1), restoring it."""
+    old = retrieval.DRIVER_MAX_BYTES
+    retrieval.DRIVER_MAX_BYTES = -1
     try:
         yield
     finally:
-        spark.conf.set(THRESHOLD, old)
+        retrieval.DRIVER_MAX_BYTES = old
 
 
 def _rows(res) -> dict:
@@ -159,8 +156,8 @@ def _assert_parity(nodes, edges, images, cases):
         )
         driver.append(_rows(res))
     # each Spark-plan call is ~23 small jobs, mostly scheduling latency:
-    # run four at once
-    with _spark_plan(nodes.sparkSession), ThreadPoolExecutor(4) as pool:
+    # run them all at once
+    with _spark_plan(), ThreadPoolExecutor(len(cases)) as pool:
         assert not retrieval._fits_driver(nodes, edges, images)
         plan = pool.map(
             lambda c: _rows(search_eris(nodes, edges, images, c[0], **c[1])), cases)
@@ -177,10 +174,11 @@ PLANTED_NODES = [
     ("Alan Turing", "PERSON", "codebreaker", ["Turing"]),
     ("Bletchley Park", "LOC", "estate", []),
     ("Enigma Machine", "TECH", "cipher", ["Enigma"]),
-    ("Grace Hopper", "PERSON", "admiral", ["Amazing Grace"]),
+    ("Grace Hopper", "PERSON", "admiral", ["Amazing Grace", None]),
     ("COBOL", "TECH", "language", None),
     ("Lovelace Society", "ORG", "club", ["Ada"]),
     ("Zurich Office", "ORG", "site", []),
+    (None, "PERSON", "unnamed", ["Ada"]),  # no id: never a seed
 ]
 PLANTED_EDGES = [
     ("Ada Lovelace", "worked on", "Analytical Engine", "notes", ["p1"]),
@@ -194,6 +192,7 @@ PLANTED_EDGES = [
     ("Lovelace Society", "honours", "Ada Lovelace", "", []),
     ("Zurich Office", "hosts", "Archive", "", []),
     ("Zurich Office", None, "Ada Lovelace", "", []),  # no label: no edge kind
+    ("Bletchley Park", "houses", None, "", []),  # no target: links nothing
     ("Ada Lovelace", "#imagedepicts", "images/ada.png", "", []),
     ("Alan Turing", "#imagedepicts", "images/bombe.png", "", []),
     ("Enigma Machine", "#imageshows", "images/bombe.png", "", []),
@@ -202,17 +201,18 @@ PLANTED_IMAGES = [
     ("images/ada.png", "Ada Lovelace portrait", ["a daguerreotype", "Ada"]),
     ("images/bombe.png", "The Bombe at Bletchley", None),
     ("images/cobol.png", "COBOL manual cover", ["Grace Hopper"]),
+    ("images/rotor.png", None, ["Enigma rotor"]),  # matched on its texts only
+    (None, "Enigma", None),  # no id: never a seed
 ]
 # exact names, aliases, case changes, misspellings, partial and
 # multi-token queries, and one that matches nothing; grouped, one
 # search_eris call per group, to bound the Spark-plan calls
 KEYWORD_GROUPS = [
-    ["Ada Lovlace", "Charles Babage", "quantum gravity"],
-    ["ada lovelace", "Bletchly Park", "Countess", "Engine No 2"],
-    ["Analytic Engin", "Zurich", "Grace Hoper"],
-    ["Babbage", "Difference Engine", "Bombe", "Amazing Grace"],
-    ["Alan Turring", "Engine", "COBOL manual"],
-    ["Enigma", "Lovelace", "portrait of Ada", "Turing Enigma"],
+    ["Ada Lovlace", "Charles Babage", "quantum gravity", "Alan Turring", "Engine"],
+    ["ada lovelace", "Bletchly Park", "Countess", "Engine No 2", "COBOL manual"],
+    ["Analytic Engin", "Zurich", "Grace Hoper", "Enigma", "Lovelace"],
+    ["Babbage", "Difference Engine", "Bombe", "Amazing Grace", "portrait of Ada",
+     "Turing Enigma", "rotor"],
 ]
 
 
@@ -240,7 +240,7 @@ def planted(spark, tmp_path_factory):
 def test_driver_path_matches_spark_plan(planted):
     combos = [dict(hop=1, max_num=1), dict(hop=2, max_num=3),
               dict(hop=1, max_num=3), dict(hop=2, max_num=1)]
-    cases = [(group, combos[k % len(combos)]) for k, group in enumerate(KEYWORD_GROUPS)]
+    cases = list(zip(KEYWORD_GROUPS, combos))
     cases += [(["Ada Lovelace"], dict(max_num=1, similarity_threshold=50)), ([], {})]
     _assert_parity(*planted, cases)
 
@@ -254,8 +254,11 @@ def test_driver_path_counts_scored_pairs(planted):
 
     before = driver_pairs()
     search_eris(nodes, edges, images, keywords)
-    fields = sum(len(set([n[0], *(n[3] or [])])) for n in PLANTED_NODES) + sum(
-        len(set([i[1], *(i[2] or [])])) for i in PLANTED_IMAGES)
+    def n_fields(i, head, rest):
+        return 0 if i is None else len({head, *(rest or [])} - {None})
+
+    fields = sum(n_fields(n[0], n[0], n[3]) for n in PLANTED_NODES) + sum(
+        n_fields(*i) for i in PLANTED_IMAGES)
     assert driver_pairs() - before == len(keywords) * fields
     assert metrics.similarity_throughput()["fuzzy_search"]["pairs"] >= len(keywords) * fields
 
@@ -272,14 +275,13 @@ def test_spark_round_matches_spark(spark):
     assert spark_round(10.15625) == 10.1563 != round(10.15625, 4)
 
 
-def test_build_kg_graph_parity_and_fold(spark, tmp_path_factory):
-    """A build_kg graph of generated pages: parity on its own names and
-    misspellings; a fold into it is seen by the next query."""
+def test_build_kg_graph_parity(spark, tmp_path_factory):
+    """A build_kg graph of generated pages, on its own names and
+    misspellings of them."""
     from mmkg_rag_spark.pipeline import build_kg
     from mmkg_rag_spark.sinks import write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog
     from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
-    from mmkg_rag_spark.streaming import process_pages_batch
 
     cat = ParquetCatalog(spark, str(tmp_path_factory.mktemp("kg")))
     manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
@@ -287,38 +289,26 @@ def test_build_kg_graph_parity_and_fold(spark, tmp_path_factory):
     edges = r.edges.unionByName(
         r.image_edges.withColumn("chunks", F.array().cast("array<int>")))
     write_graph(cat, r.nodes, edges, "kg", r.images)
-
-    def graph():
-        return cat.read("nodes"), cat.read("edges"), cat.read("images")
-
-    names = sorted(row.name for row in cat.read("nodes").select("name").collect())
-    new = "Hedy Lamarr"
-    assert new not in names
-    _assert_parity(*graph(), [
-        ([new, *names[:3]], dict(hop=1, max_num=3)),
+    graph = cat.read("nodes"), cat.read("edges"), cat.read("images")
+    names = sorted(row.name for row in graph[0].select("name").collect())
+    _assert_parity(*graph, [
+        (["Hedy Lamarr", *names[:3]], dict(hop=1, max_num=3)),
         ([n[:-2] + n[-1] for n in names[3:6]], dict(hop=2, max_num=1)),
     ])
 
-    pages = spark.createDataFrame(
-        [("u-fold", f"**{new}** is a person that invented frequency hopping. "
-                    f"**{names[0]}** is an organization that builds radios. "
-                    f"**{new}** collaborates with **{names[0]}**.")],
-        "url string, text string")
-    process_pages_batch(spark, cat, pages, 0)
-    res = _assert_parity(*graph(), [([new], {})])[0]
-    assert [r[:3] for r in res["seed_entities"][1] if r[2] == 1] == [(new, 100.0, 1)]
-    assert any(e[0] == new for e in res["related_edges"][1])
 
+def test_driver_path_reads_current_files(spark, tmp_path):
+    """The index is rebuilt per query from one collect per frame, so a
+    snapshot re-committed under the same input fingerprint, or a parquet
+    file overwritten in place under the same name, is answered from its
+    new contents."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-def test_cache_follows_rewrites_and_plans(spark, tmp_path):
-    """A query on a new snapshot collects the graph (one job per frame), a
-    repeated one runs no job. write_graph re-committing the same input
-    fingerprint changes the data files, and a filtered frame over the same
-    files has another plan: neither may be answered from the cached index."""
     from mmkg_rag_spark.sinks import write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog
 
-    cat = ParquetCatalog(spark, str(tmp_path))
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     node_schema = "name string, label string, description string, aliases array<string>"
     edge_schema = ("source string, label string, target string, description string, "
                    "references array<string>")
@@ -326,28 +316,34 @@ def test_cache_follows_rewrites_and_plans(spark, tmp_path):
     sc = spark.sparkContext
     groups = iter(range(100))
 
-    def commit(nodes, edges):
-        write_graph(cat, spark.createDataFrame(nodes, node_schema),
-                    spark.createDataFrame(edges, edge_schema), "same-input", images)
-
-    def seeds(nodes=None):
+    def seeds(*reads):
         """Seed names of one query, and the Spark jobs it ran."""
-        group = f"cache-probe-{next(groups)}"
+        frames = [read() for read in reads]  # may infer a schema: a job
+        group = f"fresh-probe-{next(groups)}"
         sc.setJobGroup(group, "query")
         try:
-            n = cat.read("nodes") if nodes is None else nodes
-            res = search_eris(n, cat.read("edges"), cat.read("images"), ["Grace Hopper"],
-                              max_num=1, similarity_threshold=90)
+            res = search_eris(*frames, ["Grace Hopper"], max_num=1, similarity_threshold=90)
             names = [r.name for r in res["seed_entities"].collect()]
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return names, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    commit(PLANTED_NODES[:4], PLANTED_EDGES[:3])
-    assert seeds() == ([], 3)
-    assert seeds() == ([], 0)
-    commit(PLANTED_NODES, PLANTED_EDGES)
-    assert seeds() == (["Grace Hopper"], 3)
-    filtered = cat.read("nodes").filter(F.col("name") != "Grace Hopper")
-    assert seeds(filtered) == ([], 3)
-    assert seeds()[0] == ["Grace Hopper"]
+    def commit(nodes):
+        write_graph(cat, spark.createDataFrame(nodes, node_schema),
+                    spark.createDataFrame(PLANTED_EDGES[:3], edge_schema), "same-input",
+                    images)
+
+    graph = (lambda: cat.read("nodes"), lambda: cat.read("edges"), lambda: cat.read("images"))
+    commit(PLANTED_NODES[:4])
+    assert seeds(*graph) == ([], 3)
+    commit(PLANTED_NODES)
+    assert seeds(*graph) == (["Grace Hopper"], 3)
+
+    part = tmp_path / "nodes" / "part-0.parquet"
+    part.parent.mkdir()
+    rows = [dict(zip(("name", "aliases"), (n[0], n[3]))) for n in PLANTED_NODES[:4]]
+    pq.write_table(pa.Table.from_pylist(rows), part)
+    scan = (lambda: spark.read.parquet(str(part.parent)), graph[1], graph[2])
+    assert seeds(*scan) == ([], 3)
+    pq.write_table(pa.Table.from_pylist(rows + [{"name": "Grace Hopper", "aliases": []}]), part)
+    assert seeds(*scan) == (["Grace Hopper"], 3)
