@@ -83,10 +83,11 @@ def generate_answer(
 ) -> str:
     """R5 composition driver (generate.py:67-152): retrieve → prompt → answer.
 
-    ``search_eris`` answers a broadcast-sized graph from a driver index and
-    a larger one with Spark plans; the knowledge block is the text half
-    (assemble_context ≙ generate_text_prompts) plus the image half
-    (assemble_image_context ≙ generate_image_prompts).
+    ``search_eris`` answers a graph of at most
+    ``retrieval.DRIVER_MAX_BYTES`` from a driver index and a larger one with
+    Spark plans; the knowledge block is the text half (assemble_context ≙
+    generate_text_prompts) plus the image half (assemble_image_context ≙
+    generate_image_prompts).
     """
     if not keywords or not query:
         raise ValueError("Keywords and query cannot be empty")  # generate.py:80-81
