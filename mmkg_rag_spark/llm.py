@@ -17,8 +17,12 @@ Executors get an extractor via a picklable zero-arg *factory* so each
 worker builds its own client (sockets don't survive pickling). Swapping
 mock → endpoint is a constructor argument, not a code change:
 
-    extract_mentions(chunks, extractor_factory=lambda: EndpointExtractor(
+    build_kg(spark, pages, extractor_factory=lambda: EndpointExtractor(
         base_url=..., api_key=..., model=...))
+
+The factory reaches the one extraction pass
+(operators/extract.extract_page_artifacts) from ``build_kg``,
+``streaming.process_pages_batch`` / ``stream_build`` alike.
 """
 
 from __future__ import annotations

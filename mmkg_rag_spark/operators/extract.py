@@ -1,17 +1,20 @@
-"""Map-side extraction stages: html→text, chunking, ER mention extraction.
+"""Map-side extraction: pages → E / R / I artifact rows in one pass.
 
-Pipeline position (SURVEY.md §3.1 steps 2-4): all three stages are
-shuffle-free — pure ``mapInPandas`` / ``pandas_udf`` over the pages scan, so
-they scale linearly with input partitions and stay inside one stage.
+Pipeline position (SURVEY.md §3.1 steps 2-4 and M1): shuffle-free
+``mapInPandas`` over the pages scan, so it scales linearly with input
+partitions and stays inside one stage.
 
-- ``with_text``     : html binary → text, byte-identical per url
-                      (north-star invariant; reference pipe.py:35-36).
-- ``chunk_pages``   : markdown-aware recursive split, 1-based ids
-                      (reference split_text, pipe.py:23-44).
-- ``extract_mentions``: per-chunk LLM (mock) extraction + alias promotion +
-                      reference completion (reference text.py:63-198) in ONE
-                      model pass, emitting a union mention table split into
-                      entity/relation views by the caller.
+- ``extract_page_artifacts``: the one pass ``build_kg``, the fold
+  (``streaming.process_pages_batch``) and the staged runner (``run.py``)
+  extract through — html→text (byte-identical per url, reference
+  pipe.py:35-36), markdown-aware chunking with 1-based ids (reference
+  split_text, pipe.py:23-44), per-chunk ER extraction + alias promotion +
+  reference completion (reference text.py:63-198) and the image-instance
+  scan, emitted as one union table.
+- ``chunk_pages`` / ``extract_mentions``: the same chunking and the same
+  per-chunk extraction as two stages, for callers that want the chunk
+  table itself.
+- ``split_mentions`` / ``split_image_instances``: the E/R and I views.
 """
 
 from __future__ import annotations
@@ -42,17 +45,6 @@ MENTION_COLS = [
 ]
 
 
-def with_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Replace/add the ``text`` column extracted from html (byte-identical)."""
-
-    @F.pandas_udf("string")
-    def _extract(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(html_to_text)
-
-    return pages.withColumn("text", _extract(F.col(html_col)))
-
-
 def chunk_pages(
     pages: DataFrame, chunk_size: int = 8000, overlap: int = 400
 ) -> DataFrame:
@@ -69,6 +61,72 @@ def chunk_pages(
             yield pd.DataFrame({"url": urls, "chunk_id": ids, "text": texts})
 
     return pages.select("url", "text").mapInPandas(gen, schema=CHUNK_SCHEMA)
+
+
+def _extract_chunks(chunks: list[Chunk], extractor, loop: int) -> list[tuple]:
+    """Per-chunk (entities, relations) for one Arrow batch of chunks.
+
+    ``extractor`` None = the deterministic mock kernel; otherwise every
+    model call (index, gleaning rounds, continuation, alias) is batched
+    over the whole list.
+    """
+    if extractor is None:
+        return [extract_chunk(c) for c in chunks]
+
+    from ..kernels.parsers import parse_er as _parse_er
+    from ..kernels.refpipeline import extract_chunk_from_responses
+    from ..llm import INDEX_PROMPT, LOOP_PROMPT
+
+    texts = [c.text for c in chunks]
+    index_texts = extractor.index(texts)
+    responses: list[list[str]] = [[ix] for ix in index_texts]
+    if loop > 1:
+        histories = [
+            [
+                {"role": "user", "content": INDEX_PROMPT + t},
+                {"role": "assistant", "content": ix},
+            ]
+            for t, ix in zip(texts, index_texts)
+        ]
+        active = list(range(len(chunks)))
+        for _ in range(loop - 1):
+            if not active:
+                break
+            gleaned = extractor.glean([histories[i] for i in active])
+            for i, g in zip(active, gleaned):
+                responses[i].append(g)
+                histories[i].extend(
+                    [
+                        {"role": "user", "content": LOOP_PROMPT},
+                        {"role": "assistant", "content": g},
+                    ]
+                )
+            cont = extractor.should_continue([histories[i] for i in active])
+            # reference text.py:129: break when "NO" in answer
+            active = [i for i, c in zip(active, cont) if "NO" not in c.upper()]
+    names = [[e.name for resp in rs for e in _parse_er(resp)[0]] for rs in responses]
+    alias_texts = extractor.alias(texts, names)
+    return [
+        extract_chunk_from_responses(c, rs, al)
+        for c, rs, al in zip(chunks, responses, alias_texts)
+    ]
+
+
+def _er_rows(urls, chunks: list[Chunk], results: list[tuple]) -> list[tuple]:
+    """Provenance-tagged 'E' / 'R' rows (MENTION_COLS order)."""
+    rows: list[tuple] = []
+    for url, c, (ents, rels) in zip(urls, chunks, results):
+        for e in ents:
+            rows.append((
+                "E", url, c.id, e.name, e.label, e.description,
+                None, e.aliases or [], e.references or [],
+            ))
+        for r in rels:
+            rows.append((
+                "R", url, c.id, r.source, r.label, r.description,
+                r.target, None, r.references or [],
+            ))
+    return rows
 
 
 def extract_mentions(
@@ -96,71 +154,14 @@ def extract_mentions(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         extractor = extractor_factory() if extractor_factory is not None else None
         for pdf in batches:
-            rows: list[tuple] = []
             chunk_objs = [
                 Chunk(id=int(cid), text=t)
                 for cid, t in zip(pdf["chunk_id"], pdf["text"])
             ]
-            if extractor is not None:
-                from ..kernels.parsers import parse_er as _parse_er
-                from ..kernels.refpipeline import extract_chunk_from_responses
-                from ..llm import INDEX_PROMPT, LOOP_PROMPT
-
-                texts = [c.text for c in chunk_objs]
-                index_texts = extractor.index(texts)
-                responses: list[list[str]] = [[ix] for ix in index_texts]
-                if loop > 1:
-                    histories = [
-                        [
-                            {"role": "user", "content": INDEX_PROMPT + t},
-                            {"role": "assistant", "content": ix},
-                        ]
-                        for t, ix in zip(texts, index_texts)
-                    ]
-                    active = list(range(len(chunk_objs)))
-                    for _ in range(loop - 1):
-                        if not active:
-                            break
-                        gleaned = extractor.glean([histories[i] for i in active])
-                        for i, g in zip(active, gleaned):
-                            responses[i].append(g)
-                            histories[i].extend(
-                                [
-                                    {"role": "user", "content": LOOP_PROMPT},
-                                    {"role": "assistant", "content": g},
-                                ]
-                            )
-                        cont = extractor.should_continue(
-                            [histories[i] for i in active]
-                        )
-                        # reference text.py:129: break when "NO" in answer
-                        active = [
-                            i for i, c in zip(active, cont) if "NO" not in c.upper()
-                        ]
-                names = [
-                    [e.name for resp in rs for e in _parse_er(resp)[0]]
-                    for rs in responses
-                ]
-                alias_texts = extractor.alias(texts, names)
-                results = [
-                    extract_chunk_from_responses(c, rs, al)
-                    for c, rs, al in zip(chunk_objs, responses, alias_texts)
-                ]
-            else:
-                results = [extract_chunk(c) for c in chunk_objs]
-            for url, c, (ents, rels) in zip(pdf["url"], chunk_objs, results):
-                chunk_id = c.id
-                for e in ents:
-                    rows.append((
-                        "E", url, int(chunk_id), e.name, e.label,
-                        e.description, None, e.aliases or [], e.references or [],
-                    ))
-                for r in rels:
-                    rows.append((
-                        "R", url, int(chunk_id), r.source, r.label,
-                        r.description, r.target, None, r.references or [],
-                    ))
-            yield pd.DataFrame(rows, columns=MENTION_COLS)
+            results = _extract_chunks(chunk_objs, extractor, loop)
+            yield pd.DataFrame(
+                _er_rows(pdf["url"], chunk_objs, results), columns=MENTION_COLS
+            )
 
     return chunks.mapInPandas(gen, schema=MENTION_SCHEMA)
 
@@ -214,22 +215,22 @@ def extract_page_artifacts(
     *,
     use_html: bool = True,
     html_col: str = "html",
+    extractor_factory=None,
+    loop: int = 1,
 ) -> DataFrame:
-    """Fused S2+S3+E1+M1: html→text, chunking, mention extraction and the
-    image-instance scan in ONE ``mapInPandas`` pass (mock-extractor path —
-    the hermetic default ``build_kg`` runs; a remote-LLM extractor keeps
-    the staged composition, whose per-stage batching it needs).
+    """S2+S3+E1+M1 in ONE ``mapInPandas`` pass: html→text (``use_html``;
+    else the ``text`` column is read as is), chunking, mention extraction
+    and the image-instance scan.
 
-    Why fuse: the staged composition moves the full page text across the
-    JVM↔Python Arrow boundary three times (html→text UDF out, chunk rows
-    out of the chunker, chunk rows back INTO the extractor) plus a
-    pages-wide ``.cache()`` so the image branch can rescan it. At the
-    DRAM-bandwidth-bound high-core level those crossings are pure memory
-    traffic — each is a serialize+copy of ~corpus bytes. Fused, the page
-    payload crosses ONCE (into the pass) and only mention/instance rows —
-    orders of magnitude smaller — ever return. Same kernels, same rows:
-    equality with the staged composition is pinned by
-    tests/test_spark_pipeline.py::test_fused_artifacts_equal_staged.
+    Per Arrow batch of pages, every page is chunked and the batch's chunks
+    go through the same per-chunk extraction as ``extract_mentions`` —
+    ``extractor_factory`` / ``loop`` have its contract, so a remote model
+    gets its calls batched over all chunks of the batch. The page payload
+    crosses the JVM↔Python Arrow boundary once and only the artifact rows
+    — orders of magnitude smaller — return; chaining ``chunk_pages`` into
+    ``extract_mentions`` instead sends the chunk text out and back in.
+    tests/test_spark_pipeline.py pins the E/R rows equal to that chain and
+    the I rows equal to the per-page image scan.
 
     Output: the union MENTION_SCHEMA with a third kind — 'I' rows carry
     image instances as (name=path, description=context) with chunk_id 0.
@@ -239,29 +240,20 @@ def extract_page_artifacts(
     src_col = html_col if use_html else "text"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        extractor = extractor_factory() if extractor_factory is not None else None
         for pdf in batches:
             rows: list[tuple] = []
+            urls: list[str] = []
+            chunk_objs: list[Chunk] = []
             for url, payload in zip(pdf["url"], pdf[src_col]):
                 text = html_to_text(payload) if use_html else payload
                 for path, ctx in extract_images_with_context(text):
-                    rows.append(
-                        ("I", url, 0, path, None, ctx, None, None, None)
-                    )
-                for i, ck in enumerate(
-                    split_markdown(text, chunk_size, overlap)
-                ):
-                    ents, rels = extract_chunk(Chunk(id=i + 1, text=ck))
-                    for e in ents:
-                        rows.append((
-                            "E", url, i + 1, e.name, e.label, e.description,
-                            None, e.aliases or [], e.references or [],
-                        ))
-                    for r in rels:
-                        rows.append((
-                            "R", url, i + 1, r.source, r.label,
-                            r.description, r.target, None,
-                            r.references or [],
-                        ))
+                    rows.append(("I", url, 0, path, None, ctx, None, None, None))
+                for i, ck in enumerate(split_markdown(text, chunk_size, overlap)):
+                    urls.append(url)
+                    chunk_objs.append(Chunk(id=i + 1, text=ck))
+            results = _extract_chunks(chunk_objs, extractor, loop)
+            rows.extend(_er_rows(urls, chunk_objs, results))
             yield pd.DataFrame(rows, columns=MENTION_COLS)
 
     cols = [pages["url"], pages[src_col]]

@@ -600,7 +600,6 @@ def bfs_distances(
     *,
     undirected: bool = True,
     broadcast_nodes: int = 1_000_000,
-    checkpoint_every: int = 2,
     canonical: bool = False,
 ) -> DataFrame:
     """Unweighted single/multi-source shortest paths → (node, dist).
@@ -700,7 +699,6 @@ def bfs_distances_per_seed(
     dst: str = "dst",
     *,
     undirected: bool = True,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Per-seed BFS distances → (seed, node, dist) in ONE synchronized loop.
 
@@ -765,7 +763,6 @@ def shortest_path_counts(
     dst: str = "dst",
     *,
     undirected: bool = True,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Shortest-path multiplicities σ_s(v) from sampled seeds → (seed,
     node, dist, sigma).
@@ -869,7 +866,6 @@ def sssp_distances(
     weight: str = "w",
     *,
     undirected: bool = True,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """WEIGHTED single/multi-source shortest paths → (node, dist).
 
@@ -1554,7 +1550,6 @@ def temporal_reachability(
     ts: str = "ts",
     *,
     start: int = 0,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Time-respecting reachability → (node, arrival): the earliest time
     each node can be reached from the seeds along paths whose edge

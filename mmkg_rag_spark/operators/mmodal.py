@@ -1,9 +1,9 @@
 """Multimodal linking phase (SURVEY.md §2 M1-M5).
 
-pages → image instances (M1 regex + sentence-trimmed context, M2
-suffix/manifest filters) → VLM description (M3, mock) → entity relevance
-scoring (M4) with top-8 per image → link decisions (M5) emitted as
-``#image``-labelled edges.
+image instances (M1 regex + sentence-trimmed context, scanned inside
+operators/extract.extract_page_artifacts) → M2 suffix/manifest filters →
+VLM description (M3, mock) → entity relevance scoring (M4) with top-8 per
+image → link decisions (M5) emitted as ``#image``-labelled edges.
 
 Scale design:
 - M1/M3 are map-only pandas stages.
@@ -23,8 +23,6 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,34 +30,10 @@ from pyspark.sql import functions as F
 from ..kernels.mockllm import LINK_MIN_SCORE, describe_image_response
 from ..kernels.parsers import parse_image_description
 from ..kernels.similarity import image_entity_relevance
-from ..kernels.textops import VALID_IMAGE_SUFFIXES, extract_images_with_context
+from ..kernels.textops import VALID_IMAGE_SUFFIXES
 
 IMAGE_CANDIDATE_CAP = 8  # mmodal.py:69-71
 IMAGE_MIN_RELEVANCE = 0.1  # mmodal.py:223
-
-_INSTANCE_SCHEMA = "url string, path string, context string"
-
-
-def extract_image_instances(pages: DataFrame) -> DataFrame:
-    """M1: one row per (url, path, context) markdown image occurrence.
-
-    Distinct per url ↔ the reference's per-document lru_cache dedup of
-    identical (path, context) describe calls (mmodal.py:123).
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                for path, ctx in extract_images_with_context(text):
-                    rows.append((url, path, ctx))
-            yield pd.DataFrame(rows, columns=["url", "path", "context"])
-
-    return (
-        pages.select("url", "text")
-        .mapInPandas(gen, schema=_INSTANCE_SCHEMA)
-        .dropDuplicates(["url", "path", "context"])
-    )
 
 
 def filter_valid_images(instances: DataFrame, manifest: DataFrame) -> DataFrame:

@@ -1,11 +1,11 @@
 """End-to-end KG construction pipeline (engine composition root).
 
-pages(url, warc_ts, html, text, lang) ─┬─ with_text (byte-identical html→text)
-                                       ├─ chunk_pages ─ extract_mentions (map)
-                                       │    ├─ entity mentions ─ canonicalize (D)
-                                       │    └─ relation mentions ─ remap+merge
-                                       └─ image instances ─ describe ─ score/top8
-                                            └─ link → #image edges (M)
+pages(url, warc_ts, html, text, lang)
+  └─ extract_page_artifacts (one map pass: html→text, chunk, extract, image scan)
+       ├─ entity mentions ─ canonicalize (D)
+       ├─ relation mentions ─ remap+merge
+       └─ image instances ─ describe ─ score/top8
+            └─ link → #image edges (M)
 Outputs: nodes (canonical entities), edges (triples ∪ image edges), images.
 
 Mirrors index_graph (reference pipe.py:47-111) restructured as a DAG of
@@ -47,14 +47,12 @@ def aqe_size_coalesce(spark: SparkSession):
 
 from .operators.dedup import canonicalize_entities, remap_and_merge_relations
 from .operators.extract import (
-    chunk_pages,
-    extract_mentions,
+    extract_page_artifacts,
+    split_image_instances,
     split_mentions,
-    with_text,
 )
 from .operators.mmodal import (
     describe_images,
-    extract_image_instances,
     filter_valid_images,
     images_table,
     link_images,
@@ -116,31 +114,22 @@ def build_kg(
     overlap: int = 400,
     link_strategy: str = "auto",
     use_html: bool = True,
-    fused: bool = True,
     extractor_factory=None,
     loop: int = 1,
 ) -> KGResult:
     """Run the full construction pipeline on a pages DataFrame.
 
-    ``fused=True`` (default) runs S2+S3+E1+M1 as ONE map pass
-    (operators/extract.extract_page_artifacts): the page payload crosses
-    the JVM↔Python boundary once and only mention/instance rows return —
-    at the DRAM-bandwidth-bound high-core level the staged composition's
-    three full-text Arrow crossings plus the pages-wide text cache are
-    pure memory traffic. ``fused=False`` keeps the staged composition
-    (what a remote-LLM extractor's per-stage batching needs, and the
-    equality control: tests pin identical nodes/edges/images between the
-    two paths).
+    Extraction is ONE map pass (operators/extract.extract_page_artifacts:
+    html→text when ``use_html``, else the ``text`` column; chunking,
+    mention extraction and the image scan): the page payload crosses the
+    JVM↔Python boundary once and only mention/instance rows return.
 
     ``extractor_factory``: picklable zero-arg callable building an
     ``mmkg_rag_spark.llm`` Extractor per python worker (e.g.
-    ``functools.partial(EndpointExtractor, base_url=...)``); forces the
-    staged path, whose per-stage batching is what a remote model needs
-    (the fused single-pass is mock-kernel-only). ``loop`` = gleaning
-    rounds, forwarded to extract_mentions (reference text.py:97-130).
+    ``functools.partial(EndpointExtractor, base_url=...)``); None = the
+    hermetic mock kernel. ``loop`` = gleaning rounds (reference
+    text.py:97-130). Both are forwarded to the extraction pass.
     """
-    if extractor_factory is not None:
-        fused = False
     # Re-split under-partitioned inputs: per-page UDF cost varies ~50×
     # (long docs), so at partitions ≈ cores one straggler sets the stage
     # wall; 4 waves/core lets the scheduler balance. But partition count is
@@ -161,37 +150,16 @@ def build_kg(
         target = min(cores * 4, max(cores, pages.count() // rows_floor))
         if current < target:
             pages = pages.repartition(target)
-    if fused:
-        from .operators.extract import (
-            extract_page_artifacts,
-            split_image_instances,
-        )
-
-        # ONE pass: html→text→chunk→extract + image scan; only the small
-        # artifact rows return to the JVM, and THEY carry the cache (the
-        # artifact table feeds E/R canonicalization and the image branch).
-        artifacts = extract_page_artifacts(
-            pages, chunk_size, overlap, use_html=use_html
-        ).cache()
-        entity_mentions, relation_mentions = split_mentions(artifacts)
-        raw_instances = split_image_instances(artifacts)
-    else:
-        if use_html:
-            pages = with_text(pages)
-        # pages feeds two branches (chunking and M1 image scan) and mentions
-        # feed many downstream actions (LSH, CC iterations, merges, both edge
-        # unions): cache both or every action re-runs the extraction UDF
-        # chain. In the staged runner (run.py) the same role is played by
-        # snapshot parquet between stages — the correct shape at cluster
-        # scale, where caching a pages-wide projection would not fit and a
-        # re-scan is the norm.
-        pages = pages.select("url", "text").cache()
-        chunks = chunk_pages(pages, chunk_size, overlap)
-        mentions = extract_mentions(
-            chunks, extractor_factory=extractor_factory, loop=loop
-        ).cache()
-        entity_mentions, relation_mentions = split_mentions(mentions)
-        raw_instances = extract_image_instances(pages)
+    # Only the small artifact rows return to the JVM, and THEY carry the
+    # cache: the artifact table feeds E/R canonicalization (LSH, CC
+    # iterations, merges) and the image branch, and uncached every action
+    # would re-run the extraction pass.
+    artifacts = extract_page_artifacts(
+        pages, chunk_size, overlap, use_html=use_html,
+        extractor_factory=extractor_factory, loop=loop,
+    ).cache()
+    entity_mentions, relation_mentions = split_mentions(artifacts)
+    raw_instances = split_image_instances(artifacts)
 
     nodes, mapping = canonicalize_entities(entity_mentions)
     nodes = nodes.cache()

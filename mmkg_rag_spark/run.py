@@ -11,8 +11,9 @@ kill this process at any point and re-invoke with the same args to verify).
 Each stage also appends per-partition lineage/metrics rows (metrics.py).
 
 Stage DAG (SURVEY.md §3.1 restructured):
-  pages → mentions(map) → nodes+mapping(D-phase) → edges(remap)
-        ↘ images+image_edges(M-phase, needs nodes)  → summary
+  pages → mentions(map: E/R mentions + I image instances)
+            ├→ nodes+mapping(D-phase) → edges(remap)
+            └→ images+image_edges(M-phase, needs nodes)  → summary
 """
 
 from __future__ import annotations
@@ -101,10 +102,13 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from mmkg_rag_spark.operators.dedup import canonicalize_entities, remap_and_merge_relations
-    from mmkg_rag_spark.operators.extract import chunk_pages, extract_mentions, split_mentions, with_text
+    from mmkg_rag_spark.operators.extract import (
+        extract_page_artifacts,
+        split_image_instances,
+        split_mentions,
+    )
     from mmkg_rag_spark.operators.mmodal import (
         describe_images,
-        extract_image_instances,
         filter_valid_images,
         link_images,
         score_image_entities,
@@ -167,20 +171,17 @@ def main(argv: list[str] | None = None) -> int:
         )
         pages_fp = dedup_fp
 
+    # -- stage 2: extraction (map-only): E/R mentions + I image instances --
     # WARC pages already carry extracted text (WET rows have no html at
     # all); synthetic/sf pages re-derive it from html to exercise the
-    # byte-identity kernel.
-    def _texted():
-        if args.warc:
-            return pages.select("url", "text")
-        return with_text(pages).select("url", "text")
-
-    # -- stage 2: mention extraction (map-only) ----------------------------
-    mentions_fp = fingerprint("mentions", args.chunk_size, args.overlap, pages_fp)
+    # byte-identity kernel. The stage keeps its "mentions" name; the
+    # "artifacts" tag keeps an older warehouse's E/R-only snapshot from
+    # being resumed as artifacts.
+    mentions_fp = fingerprint("artifacts", args.chunk_size, args.overlap, pages_fp)
     mentions = _stage(
         catalog, "mentions", mentions_fp, pages_fp,
-        lambda: extract_mentions(
-            chunk_pages(_texted(), args.chunk_size, args.overlap)
+        lambda: extract_page_artifacts(
+            pages, args.chunk_size, args.overlap, use_html=not args.warc
         ),
         args.force,
     )
@@ -222,13 +223,11 @@ def main(argv: list[str] | None = None) -> int:
 
     # -- stage 5: multimodal image edges -----------------------------------
     img_fp = fingerprint("image_edges", nodes_fp, pages_fp)
+    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
+    instances = filter_valid_images(split_image_instances(mentions), manifest)
 
     def _image_edges():
-        manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
-        inst = filter_valid_images(
-            extract_image_instances(_texted()), manifest
-        )
-        top = score_image_entities(describe_images(inst), nodes)
+        top = score_image_entities(describe_images(instances), nodes)
         return link_images(top)
 
     image_edges = _stage(catalog, "image_edges", img_fp, nodes_fp, _image_edges, args.force)
@@ -238,16 +237,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.ask:
         from mmkg_rag_spark.operators.mmodal import images_table
 
-        def _images():
-            manifest = spark.createDataFrame(
-                [(p,) for p in image_manifest()], "path string"
-            )
-            inst = filter_valid_images(
-                extract_image_instances(_texted()), manifest
-            )
-            return images_table(describe_images(inst))
-
-        images = _stage(catalog, "images", img_fp, nodes_fp, _images, args.force)
+        images = _stage(
+            catalog, "images", img_fp, nodes_fp,
+            lambda: images_table(describe_images(instances)), args.force,
+        )
 
     # -- summary -----------------------------------------------------------
     all_edges = edges.select("source", "label", "target").unionByName(

@@ -9,7 +9,9 @@ a second engine.
 Shape:
     readStream(parquet pages dir)
       → foreachBatch:
-          micro-batch pages → mention extraction (map-only)
+          micro-batch pages → extract_page_artifacts (the build's one
+            extraction pass, over the ``text`` column; its image rows are
+            dropped — folds link no images yet)
           → incremental_canonicalize(batch ∪ stored graph)
           → snapshot write (nodes/edges) + lineage metrics row
 The graph tables stay Iceberg-semantics snapshots (sources/catalog.py), so a
@@ -31,7 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.extract import chunk_pages, extract_mentions, split_mentions
+from .operators.extract import extract_page_artifacts, split_mentions
 from .operators.incremental import incremental_canonicalize
 from .sources.catalog import ParquetCatalog, fingerprint
 from .sources.pages import PAGES_SCHEMA
@@ -53,8 +55,8 @@ def process_pages_batch(
     batch (restart replay) finds its snapshot committed and no-ops.
 
     ``extractor_factory``/``loop``: same contract as
-    operators.extract.extract_mentions — swap the mock for an endpoint
-    client and/or enable gleaning rounds on the streaming path too.
+    operators.extract.extract_page_artifacts — swap the mock for an
+    endpoint client and/or enable gleaning rounds on the streaming path too.
     """
     snap = fingerprint("stream-batch", batch_id, chunk_size, overlap, loop)
     # Idempotence must check BOTH tables: a crash between the nodes and
@@ -65,12 +67,11 @@ def process_pages_batch(
         return {"batch_id": batch_id, "skipped": 1}
 
     t0 = time.time()
-    mentions = extract_mentions(
-        chunk_pages(batch_pages.select("url", "text"), chunk_size, overlap),
-        extractor_factory=extractor_factory,
-        loop=loop,
+    artifacts = extract_page_artifacts(
+        batch_pages, chunk_size, overlap, use_html=False,
+        extractor_factory=extractor_factory, loop=loop,
     ).localCheckpoint()
-    em, rm = split_mentions(mentions)
+    em, rm = split_mentions(artifacts)
 
     prior_nodes = prior_edges = None
     try:

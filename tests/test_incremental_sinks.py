@@ -238,3 +238,25 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
 
     assert rows(torn, "edges") == rows(ctl, "edges") and len(rows(ctl, "edges")) > 0
     assert rows(torn, "nodes") == rows(ctl, "nodes")
+
+    # an injected extractor folds through the same extraction pass and
+    # commits the same nodes and edges, every column, as the default
+    from mmkg_rag_spark.llm import MockExtractor
+
+    mock = ParquetCatalog(spark, str(tmp_path / "wh_mock"))
+    for batch_id, batch in enumerate((pages0, pages1)):
+        process_pages_batch(
+            spark, mock, batch, batch_id=batch_id, extractor_factory=MockExtractor
+        )
+
+    def full_rows(cat, table):
+        return sorted(
+            (
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in cat.read(table).collect()
+            ),
+            key=repr,
+        )
+
+    for table in ("nodes", "edges"):
+        assert full_rows(mock, table) == full_rows(ctl, table), table

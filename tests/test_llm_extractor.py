@@ -302,7 +302,7 @@ def test_build_kg_through_live_http_extractor(spark):
         live = build_kg(
             spark, pages, use_html=False, extractor_factory=factory
         )
-        mock = build_kg(spark, pages, use_html=False, fused=False)
+        mock = build_kg(spark, pages, use_html=False)
 
         def node_set(res):
             return {

@@ -15,10 +15,13 @@ from __future__ import annotations
 import pytest
 
 from mmkg_rag_spark.operators.dedup import canonicalize_entities
-from mmkg_rag_spark.operators.extract import chunk_pages, extract_mentions, split_mentions
+from mmkg_rag_spark.operators.extract import (
+    extract_page_artifacts,
+    split_image_instances,
+    split_mentions,
+)
 from mmkg_rag_spark.operators.mmodal import (
     describe_images,
-    extract_image_instances,
     filter_valid_images,
     link_images,
     score_image_entities,
@@ -34,13 +37,14 @@ def spark():
 
 
 def test_blocked_equals_broadcast_on_accepted_links(spark):
-    pages = gen_pages_df(spark, 60).select("url", "text").cache()
+    pages = gen_pages_df(spark, 60).select("url", "text")
     manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
-    em, _ = split_mentions(extract_mentions(chunk_pages(pages)).cache())
+    art = extract_page_artifacts(pages, use_html=False).cache()
+    em, _ = split_mentions(art)
     nodes, _ = canonicalize_entities(em)
     nodes = nodes.cache()
     described = describe_images(
-        filter_valid_images(extract_image_instances(pages), manifest)
+        filter_valid_images(split_image_instances(art), manifest)
     ).cache()
 
     pairs = {}

@@ -50,6 +50,30 @@ def test_staged_run_resumes(spark, tmp_path_factory):
     assert "[run   ] mentions" in third  # new chunking params ⇒ recomputed
 
 
+    # stage 5 links the image instances of the stored artifacts snapshot:
+    # the same image edges as a one-shot build over the same pages
+    from mmkg_rag_spark.pipeline import build_kg
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+    from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
+
+    def edge_rows(df):
+        return sorted(
+            (
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.select(
+                    "source", "label", "target", "description", "references"
+                ).collect()
+            ),
+            key=repr,
+        )
+
+    cat = ParquetCatalog(spark, wh)
+    staged = cat.read("image_edges", cat.snapshots("image_edges")[0]["id"])
+    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
+    built = build_kg(spark, gen_pages_df(spark, 30, 42), manifest).image_edges
+    assert edge_rows(staged) == edge_rows(built) and staged.count() > 0
+
+
 def test_partial_failure_resumes_midway(spark, tmp_path_factory):
     """Simulate a crash after stage 2: later stages compute, earlier resume."""
     from mmkg_rag_spark.run import main

@@ -10,9 +10,11 @@ from __future__ import annotations
 import pytest
 
 from mmkg_rag_spark.kernels.refpipeline import build_graph
+from mmkg_rag_spark.llm import MockExtractor
 from mmkg_rag_spark.sources.pages import (
     gen_pages_df,
     gen_pages_local,
+    html_to_text,
     image_manifest,
 )
 
@@ -42,12 +44,8 @@ def engine_result(spark):
         "image_edges": res.image_edges.collect(),
         "images": res.images.collect(),
         "pages_text": {
-            r["url"]: r["text"]
-            for r in __import__(
-                "mmkg_rag_spark.operators.extract", fromlist=["with_text"]
-            ).with_text(gen_pages_df(spark, N_DOCS).drop("text"))
-            .select("url", "text")
-            .collect()
+            r["url"]: html_to_text(r["html"])
+            for r in gen_pages_df(spark, N_DOCS).select("url", "html").collect()
         },
     }
 
@@ -136,34 +134,61 @@ def test_triple_parity_across_seeds(spark, seed, n):
     assert got == want and len(want) > 0
 
 
-def test_fused_artifacts_equal_staged(spark):
-    """The fused single-pass extraction (extract_page_artifacts) produces
-    a graph IDENTICAL to the staged composition (with_text → chunk_pages →
-    extract_mentions + extract_image_instances): same nodes, same edges
-    (entity and image), same images table. The fusion is purely physical —
-    fewer JVM↔Python crossings — never semantic."""
+def _norm(rows):
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows),
+        key=repr,
+    )
+
+
+def _rows(df):
+    return _norm(df.collect())
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, {"extractor_factory": MockExtractor, "loop": 2}],
+    ids=["default", "mock-extractor-loop2"],
+)
+def test_one_pass_artifacts_equal_staged(spark, kw):
+    """extract_page_artifacts' E/R rows equal chunk_pages → extract_mentions
+    with the same extractor arguments, and its I rows equal the per-page
+    image scan — one pass, same rows as the two-stage chain."""
+    from mmkg_rag_spark.kernels.textops import extract_images_with_context
+    from mmkg_rag_spark.operators.extract import (
+        chunk_pages,
+        extract_mentions,
+        extract_page_artifacts,
+    )
+
+    pages = gen_pages_df(spark, 20).cache()
+    art = extract_page_artifacts(pages, 500, 50, **kw).cache()
+
+    er = _rows(art.filter("kind != 'I'"))
+    staged = _rows(extract_mentions(chunk_pages(pages, 500, 50), **kw))
+    assert er == staged and {r[0] for r in er} == {"E", "R"}
+    assert max(r[2] for r in er) > 1  # multi-chunk pages exercised
+
+    got_i = _rows(art.filter("kind = 'I'").select("url", "name", "description"))
+    want_i = _norm(
+        (r.url, path, ctx)
+        for r in pages.select("url", "text").collect()
+        for path, ctx in extract_images_with_context(r.text)
+    )
+    assert got_i == want_i and len(want_i) > 0
+
+
+def test_build_kg_extractor_equals_default(spark, engine_result):
+    """build_kg with an injected MockExtractor runs the same one pass and
+    builds the same graph as the default mock kernel: nodes, every edge
+    (image edges included) and images."""
     from mmkg_rag_spark.pipeline import build_kg
 
     manifest = spark.createDataFrame(
         [(p,) for p in image_manifest()], "path string"
     )
     pages = gen_pages_df(spark, N_DOCS).drop("text")
+    res = build_kg(spark, pages, manifest, extractor_factory=MockExtractor)
 
-    def snap(res):
-        return {
-            "nodes": sorted(
-                (r.name, r.label, tuple(sorted(r.aliases or [])))
-                for r in res.nodes.collect()
-            ),
-            "edges": sorted(
-                (r.source, r.label, r.target)
-                for r in res.all_edges.collect()
-            ),
-            "images": sorted(
-                (r.path, r.caption) for r in res.images.collect()
-            ),
-        }
-
-    a = snap(build_kg(spark, pages, manifest, fused=True))
-    b = snap(build_kg(spark, pages, manifest, fused=False))
-    assert a == b and len(a["nodes"]) > 0 and len(a["edges"]) > 0
+    for table in ("nodes", "edges", "image_edges", "images"):
+        assert _rows(getattr(res, table)) == _norm(engine_result[table]), table
+    assert len(engine_result["image_edges"]) > 0
