@@ -13,15 +13,19 @@ re-expressed Spark-first:
   snapshot-checkpoint resume.
 
 Package layout:
-    kernels/    pure-Python parity kernels (reference-faithful parsers, similarity,
-                chunker, text ops) — shared by the Spark UDFs and the reference
-                replica used as the correctness oracle
-    functions/  columnar helpers & pandas UDF wrappers
-    operators/  DataFrame operators (extract, dedup, mmodal, retrieval,
-                text dedup, ANN, text stats)
-    sources/    pages generator, testdata tables, snapshot warehouse
-    plans/      staged pipeline driver, lineage/metrics
-    streaming/  incremental/streaming ingestion
+    kernels/      pure-Python parity kernels (reference-faithful parsers,
+                  similarity, chunker, text ops) — shared by the Spark UDFs and
+                  the reference replica used as the correctness oracle
+    functions/    columnar helpers & pandas UDF wrappers
+    operators/    DataFrame operators (extract, dedup, mmodal, retrieval,
+                  text dedup, ANN, text stats)
+    sources/      pages generator, testdata tables, snapshot warehouse
+    pipeline.py   one-shot build (build_kg)
+    streaming.py  fold of page micro-batches into the stored graph
+                  (process_pages_batch) and its stream driver (stream_build)
+    sinks.py      graph snapshot writes and exports
+    run.py        staged resumable runner
+    metrics.py    per-stage lineage rows and scoring-throughput counters
 """
 
 __version__ = "0.1.0"

@@ -10,10 +10,10 @@ in-bin linear interpolation whose expression tree is mirrored verbatim
 by the DuckDB oracle (``__spark_entry__.SQL_EVENTS_QUANTILE_SKETCH``),
 so the batch query hash-matches cross-engine.
 
-Shared by the batch query class (``q_events_value_quantile_sketch``)
-and the streaming register fold (``streaming.quantile_sketch_registers``
-— a native streaming aggregation whose state IS the registers, bounded
-by the value range, never by stream length).
+Used by the batch query class (``q_events_value_quantile_sketch``). A
+streaming fold of the same registers would be a native streaming
+aggregation whose state IS the registers, bounded by the value range,
+never by stream length.
 """
 
 from __future__ import annotations

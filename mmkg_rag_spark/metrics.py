@@ -1,30 +1,41 @@
 """Per-stage lineage + metrics rows (north-rule ops requirement).
 
-Every materialized stage appends one row per output *data file* (file ↔
-write-task partition) to the catalog's ``_metrics`` table:
+Every materialized stage appends one row per non-empty output *data file*
+(file ↔ write-task partition) to the catalog's ``_metrics`` table:
 
-    (stage, snapshot, input_snapshot, file, rows, wall_ms, ts)
+    (stage, snapshot, input_snapshot, file, rows, rows_in, wall_ms, ts)
 
-File-level row counts come from ``input_file_name()`` grouping over the
-just-written snapshot — a metadata-cheap scan (count-only aggregate over
-parquet footers after AQE prunes columns). This is the explicit accounting
-the north star asks for beyond what the Spark UI provides, and it lives next
-to the data so a resumed run appends to the same history.
+File-level row counts come from the just-written files' parquet footers,
+read on the driver — no Spark job, no re-scan of the snapshot. ``file`` is
+the data file's ``file://`` URI, the form ``input_file_name()`` reports.
+This is the explicit accounting the north star asks for beyond what the
+Spark UI provides, and it lives next to the data so a resumed run appends
+to the same history.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources.catalog import ParquetCatalog
 
-METRICS_SCHEMA = (
-    "stage string, snapshot string, input_snapshot string, file string, "
-    "rows long, rows_in long, wall_ms long, ts double"
-)
+METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("snapshot", pa.string()),
+    ("input_snapshot", pa.string()),
+    ("file", pa.string()),
+    ("rows", pa.int64()),
+    ("rows_in", pa.int64()),
+    ("wall_ms", pa.int64()),
+    ("ts", pa.float64()),
+])
 
 
 def record_stage(
@@ -35,38 +46,39 @@ def record_stage(
     data_path: str,
     wall_ms: int,
     rows_in: int = -1,
-) -> DataFrame:
-    """Append per-partition lineage rows for a just-written snapshot.
+) -> int:
+    """Append per-file lineage rows for a just-written snapshot; returns
+    the snapshot's total row count (the sum of its files' ``rows``).
 
     ``rows_in`` is the upstream snapshot's row count (-1 when unknown, e.g.
     streaming micro-batches) — with per-file ``rows`` out, each stage's
     row fan-in/fan-out is auditable straight from the metrics table."""
-    spark = catalog.spark
-    per_file = (
-        spark.read.parquet(data_path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.lit(snapshot).alias("snapshot"),
-            F.lit(input_snapshot).alias("input_snapshot"),
-            "file",
-            "rows",
-            F.lit(int(rows_in)).alias("rows_in"),
-            F.lit(int(wall_ms)).alias("wall_ms"),
-            F.lit(time.time()).alias("ts"),
-        )
-    )
-    import os
-
+    ts = time.time()
+    rows = []
+    for path in sorted(catalog._data_files(data_path)):
+        n = pq.read_metadata(path).num_rows
+        if n:  # an empty write-task file contributes no row to a scan
+            rows.append({
+                "stage": stage,
+                "snapshot": snapshot,
+                "input_snapshot": input_snapshot,
+                "file": Path(path).absolute().as_uri(),
+                "rows": n,
+                "rows_in": int(rows_in),
+                "wall_ms": int(wall_ms),
+                "ts": ts,
+            })
     out = os.path.join(catalog.warehouse, "_metrics", f"{stage}-{snapshot}")
-    per_file.write.mode("overwrite").parquet(out)
-    return per_file
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=METRICS_SCHEMA),
+        os.path.join(out, "part-00000.parquet"),
+    )
+    return sum(r["rows"] for r in rows)
 
 
 def read_metrics(spark: SparkSession, warehouse: str) -> DataFrame:
-    import os
-
     return (
         spark.read.option("basePath", os.path.join(warehouse, "_metrics"))
         .option("mergeSchema", "true")  # tolerate pre-rows_in history

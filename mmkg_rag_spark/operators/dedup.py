@@ -303,21 +303,16 @@ def edges_from_mentions(relation_mentions: DataFrame) -> DataFrame:
     )
 
 
-def remap_and_merge_edges(
-    edges: DataFrame, mapping: DataFrame, broadcast_mapping: bool = True
-) -> DataFrame:
+def remap_and_merge_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """Stages 7-8 on edge-shaped rows: canonical endpoints, merged triples.
 
     The mapping join is the north star's alias-dictionary broadcast join —
-    broadcast EXPLICITLY (default): the dictionary is the merged-away
-    entity vocabulary, bounded and small relative to the mention stream at
-    every scale, and relying on AQE instead costs the full exchange pair
-    per join before the runtime conversion can happen. Pass
-    ``broadcast_mapping=False`` for a pathological dictionary that cannot
-    fit an executor — the joins then shuffle on the name key.
+    broadcast EXPLICITLY: the dictionary is the merged-away entity
+    vocabulary, bounded and small relative to the mention stream at every
+    scale, and relying on AQE instead costs the full exchange pair per join
+    before the runtime conversion can happen.
     """
-    if broadcast_mapping:
-        mapping = F.broadcast(mapping)
+    mapping = F.broadcast(mapping)
     src_map = mapping.select(
         F.col("member").alias("source"), F.col("canonical").alias("_src_c")
     )

@@ -453,9 +453,8 @@ def cusum_drift(
 
     ``ref=(p, q)`` switches to a FIXED reference rate p/q per period
     (the SLA-target form, and the one a stream can fold incrementally:
-    dev_d = q·x_d − p, exact BIGINT, no retroactive mean) — the batch
-    anchor for streaming.cusum_stream, which carries (s_up, s_down)
-    across micro-batches and is pinned equal to this closed form.
+    dev_d = q·x_d − p, exact BIGINT, no retroactive mean — a fold carries
+    only (s_up, s_down) across micro-batches).
 
     Returns (key, day, n, dev_scaled, cusum_up, cusum_down) — consumers
     alarm on cusum thresholds in units of n_days·counts (q·counts in

@@ -112,7 +112,6 @@ def build_kg(
     manifest: DataFrame | None = None,
     chunk_size: int = 8000,
     overlap: int = 400,
-    link_strategy: str = "auto",
     use_html: bool = True,
     extractor_factory=None,
     loop: int = 1,
@@ -169,7 +168,7 @@ def build_kg(
         manifest = spark.createDataFrame([], "path string")
     instances = filter_valid_images(raw_instances, manifest)
     described = describe_images(instances).cache()
-    top = score_image_entities(described, nodes, strategy=link_strategy)
+    top = score_image_entities(described, nodes)
     # edges/image_edges each feed two consumers (their own output + the
     # all_edges union consumed by degree/exports) — cache or the whole
     # M-phase scoring join re-runs per downstream action.

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 
 
 # snapshot fingerprint → row count, so each stage's metrics row can carry
-# its upstream's rows_in without an extra count job (the count below is
-# printed anyway; resumed snapshots pay one parquet-stats count)
+# its upstream's rows_in without an extra count job (record_stage returns
+# the written rows; resumed snapshots pay one parquet-stats count)
 _STAGE_ROWS: dict[str, int] = {}
 
 
@@ -44,12 +44,11 @@ def _stage(catalog, name, snap, input_snap, compute, force=False):
     wall_ms = int((time.time() - t0) * 1000)
     from mmkg_rag_spark.metrics import record_stage
 
-    record_stage(
+    n = record_stage(
         catalog, name, snap, input_snap, path, wall_ms,
         rows_in=_STAGE_ROWS.get(input_snap, -1),
     )
     out = catalog.read(name, snap)
-    n = out.count()
     _STAGE_ROWS[snap] = n
     print(f"[run   ] {name} snap-{snap}: {n} rows in {wall_ms} ms")
     return out

@@ -84,10 +84,6 @@ def export_eris_jsonl(
     out.write.mode("overwrite").text(path)
 
 
-def read_eris_jsonl(spark, path: str) -> list[str]:
-    return [r.value for r in spark.read.text(os.path.join(path)).collect()]
-
-
 # --- W3: Neo4j export (SURVEY.md §2.5) -------------------------------------
 #
 # The reference replays the graph row-at-a-time over a live bolt driver

@@ -213,8 +213,34 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
 
     # control: two clean batches
     ctl = ParquetCatalog(spark, str(tmp_path / "wh_ctl"))
-    process_pages_batch(spark, ctl, pages0, batch_id=0)
-    process_pages_batch(spark, ctl, pages1, batch_id=1)
+    outs = [
+        process_pages_batch(spark, ctl, pages0, batch_id=0),
+        process_pages_batch(spark, ctl, pages1, batch_id=1),
+    ]
+
+    # each fold's lineage rows: one per non-empty data file, under the file
+    # URI a scan reports, summing to the committed snapshot's rows and to
+    # the counts the fold returned
+    from mmkg_rag_spark.metrics import read_metrics
+
+    lineage = read_metrics(spark, ctl.warehouse).collect()
+    for batch_id, out in enumerate(outs):
+        snap = fingerprint("stream-batch", batch_id, 8000, 400, 1)
+        for table in ("nodes", "edges"):
+            got = [
+                r for r in lineage
+                if r.stage == f"stream-{table}" and r.snapshot == snap
+            ]
+            assert {r.input_snapshot for r in got} == {f"batch-{batch_id}"}
+            scan = {
+                r.file: r.rows
+                for r in ctl.read(table, snap)
+                .groupBy(F.input_file_name().alias("file"))
+                .agg(F.count(F.lit(1)).alias("rows"))
+                .collect()
+            }
+            assert {r.file: r.rows for r in got} == scan
+            assert sum(scan.values()) == out[table] > 0
 
     # torn run: batch 1's edges manifest entry is removed post-commit
     torn = ParquetCatalog(spark, str(tmp_path / "wh_torn"))

@@ -98,59 +98,6 @@ def test_fingerprint_normalization_idempotent(text):
     assert norm == norm2
 
 
-# --- media codec properties (pure kernels, no Spark session needed) --------
-
-import numpy as np
-from mmkg_rag_spark.operators.media import (
-    _encode_ppm,
-    _parse_bmp,
-    _parse_pnm,
-    _resize_nearest,
-    decode_image_array,
-)
-
-
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_ppm_encode_decode_roundtrip(w, h, seed):
-    rng = np.random.RandomState(seed % 2**31)
-    arr = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-    assert np.array_equal(_parse_pnm(_encode_ppm(arr)), arr)
-
-
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=16),
-)
-@settings(max_examples=60, deadline=None)
-def test_resize_never_upsamples_and_bounds(w, h, max_side):
-    arr = np.zeros((h, w, 3), dtype=np.uint8)
-    out = _resize_nearest(arr, max_side)
-    assert 1 <= out.shape[0] <= max(h, max_side if h > w else out.shape[0])
-    assert max(out.shape[0], out.shape[1]) <= max(h, w)
-    if max(h, w) > max_side:
-        assert max(out.shape[0], out.shape[1]) <= max_side
-
-
-@given(st.binary(max_size=200))
-@settings(max_examples=200, deadline=None)
-def test_decode_total_on_unrecognized_bytes(b):
-    """Unrecognized magic → None (stub path), never an exception;
-    recognized-but-malformed → ValueError only."""
-    try:
-        out = decode_image_array(b)
-    except ValueError:
-        assert b[:2] in (b"P6", b"P5", b"BM")
-    else:
-        if out is None:
-            assert b[:2] not in (b"P6", b"P5", b"BM") or out is None
-
-
 @given(
     st.lists(
         st.sets(st.sampled_from("abcdefghij"), min_size=1, max_size=8),

@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
-from pyspark.sql import functions as F
 
 from mmkg_rag_spark.operators.dedup import canonicalize_entities, remap_and_merge_relations
 from mmkg_rag_spark.operators.extract import (
@@ -107,746 +105,3 @@ def test_normalize_image_refs(spark):
     assert o2 == "q.gif" and n2.endswith("_1.gif")
     assert "![](" in out["u1"].text and "![x](" not in out["u1"].text
     assert out["u2"].renames == [] and out["u2"].text == "no images"
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path_factory):
-    """Streaming watermarked window agg == batch groupBy on the same events."""
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.streaming import windowed_event_counts
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("events_in"))
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    events.write.mode("overwrite").parquet(in_dir)
-
-    agg = windowed_event_counts(spark, in_dir, "1 hour", "2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.window_start, r.event_type): (r.n, r.sum_value)
-        for r in spark.sql("select * from wincounts").collect()
-    }
-    want = {
-        (r.ws, r.event_type): (r.n, r.sum_value)
-        for r in events.groupBy(
-            F.date_trunc("hour", "ts").alias("ws"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
-            ).alias("sum_value"),
-        )
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_hopping_window_stream_matches_batch_driver_query(
-    spark, tmp_path_factory
-):
-    """Streaming hopping windows (10 min / 5 min slide) == the batch
-    events_hopping_window driver query on the same events: every event in
-    exactly len/hop = 2 windows, identical (type, win_start) → (n, sum)."""
-    import datetime as dt
-
-    import __spark_entry__ as se
-    from mmkg_rag_spark.streaming import windowed_event_counts
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("events_hop_in"))
-    spark.read.parquet(f"{sf}/events.parquet").write.mode("overwrite").parquet(
-        in_dir
-    )
-
-    agg = windowed_event_counts(
-        spark, in_dir, "10 minutes", "2 hours", slide_duration="5 minutes"
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("hopcounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        # window_start is NTZ wall-clock; the batch twin emits epoch longs
-        (int(r.window_start.replace(tzinfo=dt.timezone.utc).timestamp()),
-         r.event_type): (r.n, r.sum_value)
-        for r in spark.sql("select * from hopcounts").collect()
-    }
-    want = {
-        (r.win_start, r.event_type): (r.n, r.sum_value)
-        for r in se.queries()["events_hopping_window"](spark, sf).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stateful_sessionize_matches_batch(spark, tmp_path_factory):
-    """applyInPandasWithState sessionization across micro-batches == batch twin."""
-    import sys
-
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.streaming import sessionize_events
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as se
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("sess_in"))
-    # several files → several micro-batches (maxFilesPerTrigger=1); the
-    # operator's contract is a time-ordered feed, so stagger file mtimes to
-    # pin the file-source processing order to event-time order
-    import time as _time
-
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    bounds = events.selectExpr(
-        "percentile(unix_timestamp(ts), 0.33) p1",
-        "percentile(unix_timestamp(ts), 0.66) p2",
-    ).collect()[0]
-    slices = [
-        events.filter(F.unix_timestamp("ts") <= bounds.p1),
-        events.filter(
-            (F.unix_timestamp("ts") > bounds.p1)
-            & (F.unix_timestamp("ts") <= bounds.p2)
-        ),
-        events.filter(F.unix_timestamp("ts") > bounds.p2),
-    ]
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    q = (
-        sessionize_events(spark, in_dir)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from sessions").collect()
-    # update mode re-emits the open session each batch: keep max-n per
-    # (user, start) — stale open rows are strict prefixes of their update
-    final = {}
-    for r in rows:
-        k = (r.user_id, r.session_start)
-        if k not in final or r.n_events > final[k][0]:
-            final[k] = (r.n_events, r.duration_sec)
-    got = {(u, s, n, d) for (u, s), (n, d) in final.items()}
-
-    batch = {
-        (r.user_id, r.session_start, r.n_events, r.duration_sec)
-        for r in se.q_events_sessionize(spark, sf)
-        .withColumn("session_start", F.to_timestamp("session_start"))
-        .collect()
-    }
-    assert got == batch and len(got) > 0
-
-
-def test_stateful_transitions_match_batch(spark, tmp_path_factory):
-    """transition_events across micro-batches == the batch lead/lag matrix,
-    including pairs that straddle a batch boundary (carried by the saved
-    last-event state)."""
-    import sys
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.streaming import transition_events
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as se
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("trans_in"))
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    bounds = events.selectExpr(
-        "percentile(unix_timestamp(ts), 0.5) p1"
-    ).collect()[0]
-    slices = [
-        events.filter(F.unix_timestamp("ts") <= bounds.p1),
-        events.filter(F.unix_timestamp("ts") > bounds.p1),
-    ]
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    q = (
-        transition_events(spark, in_dir)
-        .writeStream.format("memory")
-        .queryName("transitions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.from_type, r.to_type): r.n
-        for r in spark.sql(
-            "select from_type, to_type, count(*) n from transitions "
-            "group by 1, 2"
-        ).collect()
-    }
-    batch = {
-        (r.from_type, r.to_type): r.n_transitions
-        for r in se.q_events_transition_matrix(spark, sf).collect()
-    }
-    assert got == batch and len(got) > 0
-
-
-def test_sessionize_tz_proof(spark, tmp_path_factory):
-    """VERDICT r2 #3: the stream under America/New_York must produce
-    IDENTICAL sessions to UTC. The event times straddle the 2024-03-10
-    US spring-forward gap (02:00→03:00 local doesn't exist), where
-    unix_timestamp-on-NTZ would shift epochs an hour mid-stream and
-    merge the two sessions."""
-    import datetime as dt
-
-    from mmkg_rag_spark.streaming import sessionize_events
-
-    times = [  # wall-clock (NTZ); gaps: 1200s, 4200s (>1800 → split), 1800s
-        dt.datetime(2024, 3, 10, 1, 0, 0),
-        dt.datetime(2024, 3, 10, 1, 20, 0),
-        dt.datetime(2024, 3, 10, 2, 30, 0),
-        dt.datetime(2024, 3, 10, 3, 0, 0),
-    ]
-    rows = [(i, t, 1, "click", 1.0, "{}") for i, t in enumerate(times)]
-    in_dir = str(tmp_path_factory.mktemp("sess_tz"))
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(in_dir)
-
-    def run(tz, name):
-        old = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", tz)
-        try:
-            q = (
-                sessionize_events(spark, in_dir)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {
-                (r.user_id, r.session_start, r.n_events, r.duration_sec, r.open)
-                for r in spark.sql(f"select * from {name}").collect()
-            }
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", old)
-
-    got_utc = run("UTC", "sess_utc")
-    got_ny = run("America/New_York", "sess_ny")
-    assert got_utc == got_ny
-    # and the sessions are the wall-clock-correct ones
-    assert got_utc == {
-        (1, dt.datetime(2024, 3, 10, 1, 0, 0), 2, 1200, False),
-        (1, dt.datetime(2024, 3, 10, 2, 30, 0), 2, 1800, True),
-    }
-
-
-def test_stream_near_dup_matches_batch(spark, tmp_path_factory):
-    """Streaming MinHash-LSH near-dup across micro-batches finds the same
-    duplicate PAIRS as the batch operator, first-seen-wins: the near-copy
-    arriving in a LATER batch is flagged against the original held in
-    bucket state."""
-    from mmkg_rag_spark.operators.textdedup import minhash_near_duplicates
-    from mmkg_rag_spark.streaming import near_dup_documents_stream
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while seventeen "
-        "sailors navigate the southern archipelago charting currents "
-        "and trading stories about distant harbors every evening"
-    )
-    near = base.replace("evening", "morning")  # one-word edit: J ≈ 0.9
-    other = (
-        "completely different content about industrial supply chains "
-        "logistics warehouses and freight optimization with no overlap "
-        "to the maritime narrative whatsoever in any shingle"
-    )
-    other2 = (
-        "yet another unrelated document describing alpine botany and "
-        "glacial meltwater chemistry across three mountain ranges with "
-        "long technical species inventories"
-    )
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    in_dir = str(tmp_path_factory.mktemp("ndup_in"))
-    b1 = spark.createDataFrame(
-        [(1, base, "en", "w", len(base)), (3, other, "en", "w", len(other))], schema
-    )
-    b2 = spark.createDataFrame(
-        [(2, near, "en", "w", len(near)), (4, other2, "en", "w", len(other2))], schema
-    )
-    import time as _time
-
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    _time.sleep(1.1)  # distinct file mtimes → two micro-batches
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-
-    q = (
-        near_dup_documents_stream(spark, in_dir, threshold=0.5)
-        .writeStream.format("memory")
-        .queryName("neardup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from neardup").collect()
-    got_pairs = {(r.dup_of, r.doc_id) for r in rows}
-    assert got_pairs == {(1, 2)}
-    assert all(r.est_jaccard >= 0.5 for r in rows)
-
-    batch_pairs = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_duplicates(
-            b1.unionByName(b2), n=3, threshold=0.5
-        ).collect()
-    }
-    assert batch_pairs == got_pairs
-
-
-def test_stream_dedup_matches_batch(spark, tmp_path_factory):
-    """Streaming dropDuplicates(fingerprint) keeps one row per distinct text
-    across micro-batches — same survivor keys as the batch exact dedup."""
-    import shutil
-
-    from mmkg_rag_spark.operators.textdedup import exact_duplicates
-    from mmkg_rag_spark.streaming import dedup_documents_stream
-
-    src = "/root/testdata/sf0.001/documents.parquet"
-    d = tmp_path_factory.mktemp("docs_stream")
-    # two copies -> re-deliveries of every doc in a later micro-batch
-    shutil.copy(src, d / "part-0.parquet")
-    docs = spark.read.parquet(src)
-    docs.withColumn("doc_id", F.col("doc_id") + 10_000).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(d / "later"))
-    for f in (d / "later").glob("part-*.parquet"):
-        shutil.move(str(f), d / "part-1.parquet")
-    shutil.rmtree(d / "later")
-
-    out = dedup_documents_stream(spark, str(d))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_docs")
-        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt")))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT fp FROM dedup_docs").collect()
-    fps = [r.fp for r in got]
-    assert len(fps) == len(set(fps))  # no fingerprint emitted twice
-    batch_fps = {r.fp for r in exact_duplicates(docs).collect()}
-    assert set(fps) == batch_fps  # same distinct-document universe
-
-
-def test_streaming_upsert_matches_batch(spark, tmp_path_factory):
-    """upsert_events changelog, folded to latest-per-key by the consumer,
-    == batch cdc.latest_snapshot over all events — including keys whose
-    latest arrived in an earlier micro-batch (state carry) and stale
-    late rows (older order loses, no spurious emission)."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.operators.cdc import latest_snapshot
-    from mmkg_rag_spark.streaming import upsert_events
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("upsert_in"))
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    bounds = events.selectExpr(
-        "percentile(unix_timestamp(ts), 0.5) p1"
-    ).collect()[0]
-    # second slice is the EARLIER half: late/stale arrivals must lose
-    slices = [
-        events.filter(F.unix_timestamp("ts") > bounds.p1),
-        events.filter(F.unix_timestamp("ts") <= bounds.p1),
-    ]
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    q = (
-        upsert_events(spark, in_dir)
-        .writeStream.format("memory")
-        .queryName("upserts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r.user_id: (r.epoch, r.event_id, r.event_type, r.value)
-        for r in latest_snapshot(
-            spark.table("upserts"), ["user_id"], ["epoch", "event_id"]
-        ).collect()
-    }
-    from mmkg_rag_spark.functions.timeops import ntz_epoch
-
-    want = {
-        r.user_id: (r.epoch, r.event_id, r.event_type, r.value)
-        for r in latest_snapshot(
-            events.select(
-                "user_id", ntz_epoch("ts").alias("epoch"), "event_id",
-                "event_type", "value",
-            ),
-            ["user_id"],
-            ["epoch", "event_id"],
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_quantile_sketch_registers_match_batch(spark, tmp_path_factory):
-    """Streaming register fold across multiple micro-batches ==
-    batch histogram register-for-register; quantiles derived from the
-    streamed registers == the batch driver query's per-type rows."""
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.functions import qsketch
-    from mmkg_rag_spark.streaming import quantile_sketch_registers
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("qsketch_in"))
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    # several files -> several micro-batches with maxFilesPerTrigger
-    events.repartition(4).write.mode("overwrite").parquet(in_dir)
-
-    regs = quantile_sketch_registers(spark, in_dir)
-    q = (
-        regs.writeStream.format("memory")
-        .queryName("qsketch_regs")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.event_type, r.b): r.cnt
-        for r in spark.sql("select * from qsketch_regs").collect()
-    }
-    want = {
-        (r.event_type, r.b): r.cnt
-        for r in qsketch.histogram(events).collect()
-    }
-    assert got == want and len(got) > 0
-
-    # quantiles off the streamed registers == the batch driver query
-    import __spark_entry__ as se
-
-    streamed_q = {
-        r.event_type: (r.n_events, r.p50, r.p90, r.p99)
-        for r in qsketch.quantiles_from_registers(
-            spark.sql("select event_type, b, cnt from qsketch_regs")
-        ).collect()
-    }
-    batch_q = {
-        r.event_type: (r.n_events, r.p50, r.p90, r.p99)
-        for r in se.q_events_value_quantile_sketch(spark, sf).collect()
-        if r.event_type != "__all__"
-    }
-    assert streamed_q == batch_q
-
-
-def test_cms_registers_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming CMS register fold across multiple micro-batches == batch
-    registers register-for-register, and point estimates read off the
-    streamed registers equal the batch query's estimates."""
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.functions import cms
-    from mmkg_rag_spark.streaming import cms_registers_stream
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("cms_in"))
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-
-    regs = cms_registers_stream(spark, in_dir)
-    q = (
-        regs.writeStream.format("memory")
-        .queryName("cms_regs")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = spark.sql("select row_j, bucket, reg_cnt from cms_regs")
-    got = {(r.row_j, r.bucket): r.reg_cnt for r in streamed.collect()}
-
-    toks = docs.select(
-        F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    want = {
-        (r.row_j, r.bucket): r.reg_cnt
-        for r in cms.cms_registers(toks, "term").collect()
-    }
-    assert got == want and len(got) > 0
-
-    keys = toks.select("term").distinct()
-    est_stream = {
-        r.term: r.cnt_est
-        for r in cms.cms_estimate(streamed, keys, "term").collect()
-    }
-    est_batch = {
-        r.term: r.cnt_est
-        for r in cms.cms_estimate(
-            cms.cms_registers(toks, "term"), keys, "term"
-        ).collect()
-    }
-    assert est_stream == est_batch
-
-
-def test_frequent_terms_stream_superset_and_bounded(spark, tmp_path_factory):
-    """Streaming MG candidates across micro-batches: the final per-bucket
-    summaries (max n_seen per bucket) are a SUPERSET of the batch heavy
-    hitters, with state hard-bounded at k counters per bucket."""
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.functions.heavyhitters import heavy_hitters
-    from mmkg_rag_spark.streaming import frequent_terms_stream
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("mg_in"))
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-
-    k = 31
-    out = frequent_terms_stream(spark, in_dir, k=k, buckets=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mg_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql(
-        """
-        SELECT bucket, term, mg_count FROM mg_stream m
-        WHERE n_seen = (SELECT max(n_seen) FROM mg_stream WHERE bucket = m.bucket)
-        """
-    ).collect()
-    final_terms = {r.term for r in rows}
-    per_bucket: dict[int, int] = {}
-    for r in rows:
-        per_bucket[r.bucket] = per_bucket.get(r.bucket, 0) + 1
-    assert all(n <= k for n in per_bucket.values())
-
-    heavy = {r.term for r in heavy_hitters(docs, k=k).collect()}
-    assert heavy, "batch heavy hitters unexpectedly empty"
-    assert heavy <= final_terms
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path_factory):
-    """click_error_join_stream across micro-batches == the batch bucketed
-    range join (q_events_range_join), including pairs whose click arrives
-    in a different micro-batch than its error (carried by join state).
-    The watermark is generous so no fixture row is evicted before its
-    partner arrives; state boundedness is Spark's documented contract for
-    the (two-sided watermark, time-range condition) pair."""
-    import sys
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.streaming import click_error_join_stream
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as se
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("ssj_in"))
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    bounds = events.selectExpr(
-        "percentile(unix_timestamp(ts), 0.5) p1"
-    ).collect()[0]
-    slices = [
-        events.filter(F.unix_timestamp("ts") <= bounds.p1),
-        events.filter(F.unix_timestamp("ts") > bounds.p1),
-    ]
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    q = (
-        click_error_join_stream(spark, in_dir, watermark="10 hours")
-        .writeStream.format("memory")
-        .queryName("ssj_pairs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r.user_id: r.n
-        for r in spark.sql(
-            "select user_id, count(*) n from ssj_pairs group by 1"
-        ).collect()
-    }
-    batch = {
-        r.user_id: r.n_pairs
-        for r in se.q_events_range_join(spark, sf).collect()
-    }
-    assert got == batch and len(got) > 0
-
-
-def test_streaming_sample_matches_batch(spark, tmp_path_factory):
-    """sample_per_group_stream's final emission per source (max n_seen) ==
-    batch curation.sample_per_group over the whole input — min-k under the
-    md5 total order is an order-insensitive mergeable fold, so the stream
-    arrives at the identical sample regardless of micro-batch boundaries
-    (two slices here, split so every source spans both batches)."""
-    import time as _time
-
-    from mmkg_rag_spark.operators.curation import sample_per_group
-    from mmkg_rag_spark.streaming import sample_per_group_stream
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("sample_in"))
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    slices = [
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    ]
-    for s in slices:
-        s.coalesce(1).write.mode("append").parquet(in_dir)
-        _time.sleep(1.1)
-
-    q = (
-        sample_per_group_stream(spark, in_dir, k=4)
-        .writeStream.format("memory")
-        .queryName("gsample")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    emitted = spark.table("gsample")
-    # window max instead of a self-semi-join: joining the memory table to an
-    # aggregate of itself trips conflicting-attribute resolution
-    got = {
-        (r.source, r.doc_id, r.rk)
-        for r in emitted.withColumn(
-            "max_seen",
-            F.max("n_seen").over(Window.partitionBy("source")),
-        )
-        .filter(F.col("n_seen") == F.col("max_seen"))
-        .select("source", "doc_id", "rk")
-        .collect()
-    }
-    want = {
-        (r.source, r.doc_id, r.rk)
-        for r in sample_per_group(docs, "source", 4, "doc_id").collect()
-    }
-    assert got == want and len(want) > 0
-    # bounded state: every emission carries at most k rows per source
-    per_emission = emitted.groupBy("source", "n_seen").count().collect()
-    assert all(r["count"] <= 4 for r in per_emission)
-
-
-def test_mentions_stream_matches_batch(spark, tmp_path_factory):
-    """Streaming gazetteer mention detection across micro-batches ==
-    the batch operator row-for-row in complete mode."""
-    from mmkg_rag_spark.operators.mentions import gazetteer_mentions
-    from mmkg_rag_spark.streaming import mentions_stream
-
-    sf = "/root/testdata/sf0.001"
-    in_dir = str(tmp_path_factory.mktemp("mentions_in"))
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-
-    out = mentions_stream(spark, in_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mentions_s")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.doc_id, r.surface): r.n_mentions
-        for r in spark.sql("select * from mentions_s").collect()
-    }
-    want = {
-        (r.doc_id, r.surface): r.n_mentions
-        for r in gazetteer_mentions(docs).collect()
-    }
-    assert got == want and len(want) > 100
-
-
-def test_cusum_stream_matches_batch_fixed_ref(spark, tmp_path_factory):
-    """Streaming fixed-reference CUSUM with O(1) per-key state, fed in
-    three chronological micro-batches == the batch closed form
-    (temporal.cusum_drift(ref=...)) row-for-row."""
-    import glob
-    import os
-    import time as _time
-    from datetime import date, timedelta
-
-    from mmkg_rag_spark.operators.temporal import cusum_drift
-    from mmkg_rag_spark.streaming import cusum_stream
-
-    import random as _random
-
-    rng = _random.Random(61)
-    d0 = date(2024, 3, 1)
-    rows = [
-        (k, d0 + timedelta(days=i), rng.randrange(0, 20))
-        for k in ("a", "b", "c")
-        for i in range(30)
-    ]
-    in_dir = str(tmp_path_factory.mktemp("cusum_in"))
-    # three chronological chunks — the daily-rollup feed contract
-    for j, lo, hi in ((0, 0, 10), (1, 10, 20), (2, 20, 30)):
-        chunk = [r for r in rows if lo <= (r[1] - d0).days < hi]
-        spark.createDataFrame(
-            chunk, "key string, day date, n long"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{in_dir}/part{j}")
-    # one flat dir with ascending mtimes so the file source batches in order
-    flat = str(tmp_path_factory.mktemp("cusum_flat"))
-    t0 = _time.time()
-    for j in range(3):
-        (src,) = glob.glob(f"{in_dir}/part{j}/part-*.parquet")
-        dst = f"{flat}/chunk{j}.parquet"
-        os.link(src, dst)
-        os.utime(dst, (t0 + j, t0 + j))
-
-    out = cusum_stream(spark, flat, ref=(8, 1))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cusum_s")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.key, r.day): (r.n, r.dev_scaled, r.cusum_up, r.cusum_down)
-        for r in spark.sql("select * from cusum_s").collect()
-    }
-    daily = spark.createDataFrame(rows, "key string, day date, n long")
-    want = {
-        (r.key, r.day): (r.n, r.dev_scaled, r.cusum_up, r.cusum_down)
-        for r in cusum_drift(daily, ref=(8, 1)).collect()
-    }
-    assert got == want and len(want) == 90
