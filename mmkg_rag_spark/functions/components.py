@@ -11,9 +11,13 @@ graphs are near-star-shaped, so 2-4 in practice.
 
 At 10^12-row scale the same loop holds: both sides are pre-partitioned on
 the vertex id, so every iteration reuses one hash-partitioning; a
-diameter-independent variant (large-star/small-star contraction) is
-unnecessary until components have extreme diameter, which name-similarity
-clusters do not.
+large-star/small-star variant is unnecessary until components have extreme
+diameter, which name-similarity clusters do not. For graphs that CAN have
+extreme diameter (lineage chains, citation paths, link graphs), this module
+also ships that variant — ``connected_components_star`` — the alternating
+star-contraction algorithm (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14) that converges in O(log n) rounds
+independent of diameter.
 """
 
 from __future__ import annotations
@@ -132,6 +136,105 @@ def connected_components(
         # merge, so fail loudly instead.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations; "
-            "raise max_iter (graph diameter exceeds the cap)"
+            "raise max_iter (graph diameter exceeds the cap), or use "
+            "connected_components_star (diameter-independent)"
         )
     return comp
+
+
+def _star_round(e: DataFrame, large: bool) -> DataFrame:
+    """One star-contraction round over parent-pointer edges (u > v means
+    v is a candidate parent; self-loops are implicit).
+
+    large-star: for every u, hook all STRICTLY LARGER neighbors onto
+    m = min(N(u) ∪ {u}).  small-star: orient each edge child→parent
+    (larger→smaller), and per u hook its ≤u neighborhood ∪ {u} onto m.
+    Both are one groupBy(u) + one join back — two shuffles on the same
+    vertex-id partitioning.
+    """
+    if large:
+        nbrs = e.select("u", "v").union(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+    else:
+        nbrs = e.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+    m = nbrs.groupBy("u").agg(
+        F.least(F.min("v"), F.first("u")).alias("m")
+    )
+    if large:
+        hooked = (
+            nbrs.join(m, "u")
+            .where(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+    else:
+        hooked = (
+            nbrs.join(m, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(m.select("u", F.col("m").alias("v")))
+        )
+    return hooked.where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
+
+
+def connected_components_star(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_rounds: int = 50,
+) -> DataFrame:
+    """Diameter-independent connected components: alternating
+    large-star/small-star contraction (Kiveris et al., SoCC'14).
+
+    Same contract as ``connected_components`` — DataFrame(id, component)
+    with component = min member id, isolated vertices absent — but
+    converges in O(log n) ROUNDS REGARDLESS OF DIAMETER: each round hooks
+    whole subtrees onto smaller ids, so a 10^6-long chain closes in ~20
+    rounds where min-label propagation needs 10^6. This is the variant for
+    graphs whose diameter is not bounded by construction (web link graphs,
+    lineage chains); for near-star similarity graphs the label-propagation
+    loop wins (fewer rounds, same per-round cost).
+
+    Convergence is detected with a fingerprint job per round (count +
+    xor-fold of edge hashes) — O(1) rows to the driver, never the edge
+    set. At fixpoint the edge set IS the star
+    forest (child → root); roots re-enter as their own component.
+    """
+    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    # same vertex universe as connected_components: every id seen in edges
+    # (self-loops included) gets a row, as its own component if unlinked
+    verts = (
+        raw.select(F.col("u").alias("id"))
+        .union(raw.select(F.col("v").alias("id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    e = (
+        raw.where(F.col("u") != F.col("v"))
+        .dropDuplicates(["u", "v"])
+        .localCheckpoint(eager=True)
+    )
+    prev_fp = None
+    for _ in range(max_rounds):
+        e = _star_round(e, large=True).localCheckpoint(eager=True)
+        e = _star_round(e, large=False).localCheckpoint(eager=True)
+        fp = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            # xor-fold: order-independent and overflow-free under ANSI mode
+            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
+        ).collect()[0]
+        if (fp.n, fp.h) == prev_fp:
+            break
+        prev_fp = (fp.n, fp.h)
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_rounds} "
+            "rounds"
+        )
+    # e is now the star forest child→root; roots (and unlinked vertices)
+    # label themselves via the left join over the vertex universe
+    stars = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    return verts.join(stars, "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
+    )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from mmkg_rag_spark.functions.components import (
     connected_components,
+    connected_components_star,
     union_find_local,
 )
 from mmkg_rag_spark.operators.dedup import canonicalize_entities
@@ -72,6 +73,51 @@ def test_connected_components_both_paths(spark):
             for r in connected_components(edges, collect_threshold=thr).collect()
         }
         assert {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "f")} == comp
+
+
+def test_star_contraction_matches_contract(spark):
+    """connected_components_star honours the exact connected_components
+    contract (self-loop vertices present, component = min member id)."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")],
+        "src string, dst string",
+    )
+    comp = {
+        (r.id, r.component)
+        for r in connected_components_star(edges).collect()
+    }
+    assert {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "f")} == comp
+
+
+def test_star_contraction_long_chain(spark):
+    """The case star contraction exists for: a 300-vertex path (diameter
+    299) closes in O(log n) rounds where min-label propagation would need
+    ~300; a tight max_rounds proves the logarithmic convergence."""
+    n = 300
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    comp = connected_components_star(edges, max_rounds=15).collect()
+    assert len(comp) == n
+    assert all(r.component == 0 for r in comp)
+
+
+def test_star_contraction_random_parity(spark):
+    """Random multigraphs: star contraction ≡ driver union-find."""
+    import random
+
+    rng = random.Random(7)
+    for trial in range(3):
+        pairs = [
+            (rng.randrange(80), rng.randrange(80)) for _ in range(60)
+        ]
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        got = {
+            (r.id, r.component)
+            for r in connected_components_star(edges).collect()
+        }
+        want = set(union_find_local(pairs).items())
+        assert got == want, f"trial {trial}"
 
 
 def test_union_find_local_transitive():

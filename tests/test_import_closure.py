@@ -33,6 +33,7 @@ OFF_PATH = [
     "functions.heavyhitters",
     "functions.qsketch",
     "functions.timeops",
+    "functions.zorder",
 ]
 
 # removed from the package; an import of any of them must not come back
@@ -41,7 +42,6 @@ DELETED = [
     "kernels.jpeg",
     "kernels.avi",
     "kernels.y4m",
-    "functions.zorder",
 ]
 
 

@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
-import pytest
+import datetime as dt
+import random
 
+import pytest
+from pyspark.sql import functions as F
+
+from mmkg_rag_spark.functions import qsketch
+from mmkg_rag_spark.functions.timeops import ntz_epoch, ntz_from_epoch
 from mmkg_rag_spark.operators.dedup import canonicalize_entities, remap_and_merge_relations
 from mmkg_rag_spark.operators.extract import (
     chunk_pages,
@@ -105,3 +111,79 @@ def test_normalize_image_refs(spark):
     assert o2 == "q.gif" and n2.endswith("_1.gif")
     assert "![](" in out["u1"].text and "![x](" not in out["u1"].text
     assert out["u2"].renames == [] and out["u2"].text == "no images"
+
+
+# Per-batch state the stream side relies on: NTZ epochs that no session zone
+# shifts, and quantile registers that merge across micro-batches by addition.
+
+
+def test_sessionize_tz_proof(spark):
+    """Wall-clock times straddling the 2024-03-10 US spring-forward gap
+    (02:00→03:00 local does not exist in America/New_York): epochs and
+    their inverse are identical under UTC and New York, and the gaps are
+    the wall-clock ones (unix_timestamp would shift them an hour)."""
+    times = [
+        dt.datetime(2024, 3, 10, 1, 0, 0),
+        dt.datetime(2024, 3, 10, 1, 20, 0),
+        dt.datetime(2024, 3, 10, 2, 30, 0),
+        dt.datetime(2024, 3, 10, 3, 0, 0),
+    ]
+    df = spark.createDataFrame([(t,) for t in times], "ts timestamp_ntz")
+
+    def run(tz):
+        old = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            rows = df.select(
+                ntz_epoch("ts").alias("ep"),
+                ntz_from_epoch(ntz_epoch("ts")).alias("back"),
+            ).collect()
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old)
+        return [(r.ep, r.back) for r in rows]
+
+    got_utc = run("UTC")
+    assert run("America/New_York") == got_utc
+    epoch0 = dt.datetime(1970, 1, 1)
+    assert got_utc == [(int((t - epoch0).total_seconds()), t) for t in times]
+    eps = [ep for ep, _ in got_utc]
+    assert [b - a for a, b in zip(eps, eps[1:])] == [1200, 4200, 1800]
+
+
+def test_quantile_sketch_registers_match_batch(spark):
+    """Registers of disjoint shards summed == registers of the union, and
+    the quantiles read off both are identical (also after merging every
+    group's registers into one)."""
+    rng = random.Random(11)
+    rows = [
+        (i, rng.choice(["click", "view", "buy"]), round(rng.uniform(0, 40), 3))
+        for i in range(600)
+    ]
+    events = spark.createDataFrame(rows, "id long, event_type string, value double")
+    whole = qsketch.histogram(events)
+    shards = [events.filter(F.col("id") % 3 == k) for k in range(3)]
+    partial = qsketch.histogram(shards[0])
+    for s in shards[1:]:
+        partial = partial.unionByName(qsketch.histogram(s))
+    merged = partial.groupBy("event_type", "b").agg(F.sum("cnt").alias("cnt"))
+
+    def regs(h):
+        return {(r.event_type, r.b): r.cnt for r in h.collect()}
+
+    assert regs(merged) == regs(whole) and len(regs(whole)) > 3
+
+    def quantiles(h):
+        return {
+            r.event_type: (r.n_events, r.p50, r.p90, r.p99)
+            for r in qsketch.quantiles_from_registers(h).collect()
+        }
+
+    q = quantiles(whole)
+    assert quantiles(merged) == q
+    assert {k: v[0] for k, v in q.items()} == {
+        t: sum(1 for _, et, _ in rows if et == t) for t in ("click", "view", "buy")
+    }
+    assert quantiles(qsketch.merge_registers(merged)) == quantiles(
+        qsketch.merge_registers(whole)
+    )
+    assert quantiles(qsketch.merge_registers(whole))["__all__"][0] == len(rows)
