@@ -684,7 +684,7 @@ def q_events_sessionize(spark, sf_dir):
 
     lag(ts) per user → gap > 30 min marks a session start → running sum of
     markers = session index → per-session aggregate. All native window +
-    aggregation; the streaming twin is streaming.sessionize_events.
+    aggregation.
     """
     e = _t(spark, sf_dir, "events")
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -4630,8 +4630,7 @@ def q_events_value_quantile_sketch(spark, sf_dir):
     floor(value·4) (one IEEE multiply), rank targets are exact integer
     ceilings, and the interpolation is the identical expression tree on
     both engines. Register/quantile logic lives in functions/qsketch.py,
-    shared with the streaming register fold
-    (streaming.quantile_sketch_registers) whose state IS the registers."""
+    whose registers merge across shards by summing per bin."""
     from mmkg_rag_spark.functions import qsketch
 
     e = _t(spark, sf_dir, "events")
@@ -9224,9 +9223,8 @@ FROM r
 def q_events_cusum_fixedref(spark, sf_dir):
     """Fixed-reference CUSUM (operators/temporal.cusum_drift with
     ref=(8,1)): drift vs an SLA-target rate of 8 events/day per type —
-    the form a STREAM folds with O(1) state (streaming.cusum_stream is
-    pinned equal to this closed form across micro-batches), unlike the
-    self-mean variant whose deviations re-scale retroactively. Same
+    the form a stream could fold with O(1) state, unlike the self-mean
+    variant whose deviations re-scale retroactively. Same
     Lindley windows; dev = n − 8 exact. Top-30 by (cusum_up desc, key,
     day)."""
     from mmkg_rag_spark.operators.temporal import cusum_drift

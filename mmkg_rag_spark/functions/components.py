@@ -11,19 +11,18 @@ graphs are near-star-shaped, so 2-4 in practice.
 
 At 10^12-row scale the same loop holds: both sides are pre-partitioned on
 the vertex id, so every iteration reuses one hash-partitioning; a
-large-star/small-star variant is unnecessary until components have extreme
-diameter, which name-similarity clusters do not. For graphs that CAN have
-extreme diameter (lineage chains, citation paths, link graphs), this module
-also ships that variant — ``connected_components_star`` — the alternating
-star-contraction algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) that converges in O(log n) rounds
-independent of diameter.
+diameter-independent large-star/small-star variant (Kiveris et al.,
+SoCC'14) is unnecessary because name-similarity clusters never have
+extreme diameter.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# rounds of the distributed min-label loop before it gives up
+MAX_ITER = 25
 
 
 def union_find_local(pairs: list[tuple]) -> dict:
@@ -50,7 +49,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     collect_threshold: int = 1_000_000,
     out_info: dict | None = None,
 ) -> DataFrame:
@@ -110,7 +108,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # candidate labels flowing along edges: neighbor's current component
         prop = (
             sym.join(comp.withColumnRenamed("id", "a"), "a")
@@ -135,106 +133,8 @@ def connected_components(
         # pathological chain — wrong components would silently corrupt the
         # merge, so fail loudly instead.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations; "
-            "raise max_iter (graph diameter exceeds the cap), or use "
-            "connected_components_star (diameter-independent)"
+            f"connected_components did not converge in {MAX_ITER} iterations "
+            "(graph diameter exceeds the cap)"
         )
     return comp
 
-
-def _star_round(e: DataFrame, large: bool) -> DataFrame:
-    """One star-contraction round over parent-pointer edges (u > v means
-    v is a candidate parent; self-loops are implicit).
-
-    large-star: for every u, hook all STRICTLY LARGER neighbors onto
-    m = min(N(u) ∪ {u}).  small-star: orient each edge child→parent
-    (larger→smaller), and per u hook its ≤u neighborhood ∪ {u} onto m.
-    Both are one groupBy(u) + one join back — two shuffles on the same
-    vertex-id partitioning.
-    """
-    if large:
-        nbrs = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    else:
-        nbrs = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-    m = nbrs.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("m")
-    )
-    if large:
-        hooked = (
-            nbrs.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-    else:
-        hooked = (
-            nbrs.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(m.select("u", F.col("m").alias("v")))
-        )
-    return hooked.where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Diameter-independent connected components: alternating
-    large-star/small-star contraction (Kiveris et al., SoCC'14).
-
-    Same contract as ``connected_components`` — DataFrame(id, component)
-    with component = min member id, isolated vertices absent — but
-    converges in O(log n) ROUNDS REGARDLESS OF DIAMETER: each round hooks
-    whole subtrees onto smaller ids, so a 10^6-long chain closes in ~20
-    rounds where min-label propagation needs 10^6. This is the variant for
-    graphs whose diameter is not bounded by construction (web link graphs,
-    lineage chains); for near-star similarity graphs the label-propagation
-    loop wins (fewer rounds, same per-round cost).
-
-    Convergence is detected with a fingerprint job per round (count +
-    xor-fold of edge hashes) — O(1) rows to the driver, never the edge
-    set. At fixpoint the edge set IS the star
-    forest (child → root); roots re-enter as their own component.
-    """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # same vertex universe as connected_components: every id seen in edges
-    # (self-loops included) gets a row, as its own component if unlinked
-    verts = (
-        raw.select(F.col("u").alias("id"))
-        .union(raw.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
-    )
-    prev_fp = None
-    for _ in range(max_rounds):
-        e = _star_round(e, large=True).localCheckpoint(eager=True)
-        e = _star_round(e, large=False).localCheckpoint(eager=True)
-        fp = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold: order-independent and overflow-free under ANSI mode
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        if (fp.n, fp.h) == prev_fp:
-            break
-        prev_fp = (fp.n, fp.h)
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} "
-            "rounds"
-        )
-    # e is now the star forest child→root; roots (and unlinked vertices)
-    # label themselves via the left join over the vertex universe
-    stars = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    return verts.join(stars, "id", "left").select(
-        "id", F.coalesce("component", "id").alias("component")
-    )

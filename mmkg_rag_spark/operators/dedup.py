@@ -71,10 +71,9 @@ def collapse_exact(entity_mentions: DataFrame) -> DataFrame:
 
 def similarity_edges(
     units: DataFrame,
-    similarity: float = DEDUP_SIMILARITY,
     pairwise_threshold: int = 300,
 ) -> DataFrame:
-    """Stages 2-4: uid pairs whose any-name/alias similarity ≥ threshold."""
+    """Stages 2-4: uid pairs whose any-name/alias similarity ≥ DEDUP_SIMILARITY."""
     strings = units.select(
         "uid",
         F.explode(
@@ -116,7 +115,7 @@ def similarity_edges(
             (a, b)
             for i, a in enumerate(vals)
             for b in vals[i + 1 :]
-            if _ratio_fn(a, b) >= similarity * 100.0
+            if _ratio_fn(a, b) >= DEDUP_SIMILARITY * 100.0
         ]
         record_pairs(
             "dedup_verify", len(vals) * (len(vals) - 1) // 2,
@@ -155,7 +154,7 @@ def similarity_edges(
 
         verified = (
             cand.withColumn("score", _ratio(F.col("id_a"), F.col("id_b")))
-            .filter(F.col("score") >= similarity * 100.0)
+            .filter(F.col("score") >= DEDUP_SIMILARITY * 100.0)
             .select("id_a", "id_b")
         )
     norm_uid = strings.select("norm", "uid").distinct()
@@ -170,7 +169,6 @@ def similarity_edges(
 
 def canonicalize_entities(
     entity_mentions: DataFrame,
-    similarity: float = DEDUP_SIMILARITY,
     pairwise_threshold: int = 300,
     cc_collect_threshold: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
@@ -181,8 +179,7 @@ def canonicalize_entities(
     set them to 0 to force the distributed path (the scale tests do).
     """
     return canonicalize_units(
-        collapse_exact(entity_mentions), similarity, pairwise_threshold,
-        cc_collect_threshold,
+        collapse_exact(entity_mentions), pairwise_threshold, cc_collect_threshold
     )
 
 
@@ -221,7 +218,6 @@ def merge_unit_tables(*unit_tables: DataFrame) -> DataFrame:
 
 def canonicalize_units(
     units: DataFrame,
-    similarity: float = DEDUP_SIMILARITY,
     pairwise_threshold: int = 300,
     cc_collect_threshold: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
@@ -229,7 +225,7 @@ def canonicalize_units(
     # units feeds three consumers (similarity edges, merge, mapping) and the
     # CC loop forces several actions — cache to avoid re-aggregating mentions.
     units = units.cache()
-    edges = similarity_edges(units, similarity, pairwise_threshold)
+    edges = similarity_edges(units, pairwise_threshold)
     cc_info: dict = {}
     comp = connected_components(
         edges, src="src", dst="dst", collect_threshold=cc_collect_threshold,

@@ -214,7 +214,6 @@ def extract_page_artifacts(
     overlap: int = 400,
     *,
     use_html: bool = True,
-    html_col: str = "html",
     extractor_factory=None,
     loop: int = 1,
 ) -> DataFrame:
@@ -237,7 +236,7 @@ def extract_page_artifacts(
     ``split_mentions`` reads E/R; ``split_image_instances`` recovers the
     (url, path, context) table M2 filters.
     """
-    src_col = html_col if use_html else "text"
+    src_col = "html" if use_html else "text"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         extractor = extractor_factory() if extractor_factory is not None else None

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .dedup import (
-    DEDUP_SIMILARITY,
     canonicalize_units,
     collapse_exact,
     edges_from_mentions,
@@ -35,7 +34,6 @@ def incremental_canonicalize(
     new_relation_mentions: DataFrame,
     prior_nodes: DataFrame | None = None,
     prior_edges: DataFrame | None = None,
-    similarity: float = DEDUP_SIMILARITY,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Re-canonicalize (stored graph ∪ new batch) → (nodes, mapping, edges).
 
@@ -45,7 +43,7 @@ def incremental_canonicalize(
     units = collapse_exact(new_entity_mentions)
     if prior_nodes is not None:
         units = merge_unit_tables(units, nodes_as_units(prior_nodes))
-    nodes, mapping = canonicalize_units(units, similarity)
+    nodes, mapping = canonicalize_units(units)
 
     edges = edges_from_mentions(new_relation_mentions)
     if prior_edges is not None:

@@ -34,6 +34,10 @@ from ..kernels.textops import VALID_IMAGE_SUFFIXES
 
 IMAGE_CANDIDATE_CAP = 8  # mmodal.py:69-71
 IMAGE_MIN_RELEVANCE = 0.1  # mmodal.py:223
+# ``auto`` strategy switches of score_image_entities: entity rows that can
+# still broadcast, and scored (image × entity) pairs the cross product may cost
+BROADCAST_LIMIT = 2_000_000
+PAIR_LIMIT = 500_000
 
 
 def filter_valid_images(instances: DataFrame, manifest: DataFrame) -> DataFrame:
@@ -109,8 +113,6 @@ def score_image_entities(
     images: DataFrame,
     entities: DataFrame,
     strategy: str = "auto",
-    broadcast_limit: int = 2_000_000,
-    pair_limit: int = 500_000,
     salt_buckets: int = 16,
     candidate_cap: int = IMAGE_CANDIDATE_CAP,
 ) -> DataFrame:
@@ -118,7 +120,7 @@ def score_image_entities(
 
     ``auto`` picks on BOTH axes: blocked when the entity table can't
     broadcast, AND when the cross-product |images|·|entities| would push
-    more than ``pair_limit`` pairs through the relevance UDF — the UDF is
+    more than ``PAIR_LIMIT`` pairs through the relevance UDF — the UDF is
     the cost, not the join, so a broadcastable entity table can still lose
     to token blocking by orders of magnitude in scored pairs. Blocking is
     the documented scale approximation (not exact): char-level indel
@@ -133,12 +135,12 @@ def score_image_entities(
     )
 
     if strategy == "auto":
-        n = ents.limit(broadcast_limit + 1).count()
-        if n > broadcast_limit:
+        n = ents.limit(BROADCAST_LIMIT + 1).count()
+        if n > BROADCAST_LIMIT:
             strategy = "blocked"
         else:
             n_imgs = imgs.count()
-            strategy = "broadcast" if n * n_imgs <= pair_limit else "blocked"
+            strategy = "broadcast" if n * n_imgs <= PAIR_LIMIT else "blocked"
 
     if strategy == "broadcast":
         pairs = imgs.crossJoin(F.broadcast(ents))

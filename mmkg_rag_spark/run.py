@@ -19,6 +19,7 @@ Stage DAG (SURVEY.md §3.1 restructured):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
@@ -120,8 +121,6 @@ def main(argv: list[str] | None = None) -> int:
     catalog = ParquetCatalog(spark, args.warehouse)
 
     if args.stream_warc:
-        import os
-
         from mmkg_rag_spark.streaming import stream_build
 
         ckpt = os.path.join(args.warehouse, "_stream_warc_ckpt")
@@ -224,10 +223,10 @@ def main(argv: list[str] | None = None) -> int:
     img_fp = fingerprint("image_edges", nodes_fp, pages_fp)
     manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
     instances = filter_valid_images(split_image_instances(mentions), manifest)
+    described = describe_images(instances)
 
     def _image_edges():
-        top = score_image_entities(describe_images(instances), nodes)
-        return link_images(top)
+        return link_images(score_image_entities(described, nodes))
 
     image_edges = _stage(catalog, "image_edges", img_fp, nodes_fp, _image_edges, args.force)
 
@@ -238,13 +237,13 @@ def main(argv: list[str] | None = None) -> int:
 
         images = _stage(
             catalog, "images", img_fp, nodes_fp,
-            lambda: images_table(describe_images(instances)), args.force,
+            lambda: images_table(described), args.force,
         )
 
     # -- summary -----------------------------------------------------------
-    all_edges = edges.select("source", "label", "target").unionByName(
-        image_edges.select("source", "label", "target")
-    )
+    # plain + image edges, the shape the degree summary, QA and evaluation read
+    edge_cols = ("source", "label", "target", "description", "references")
+    all_edges = edges.select(*edge_cols).unionByName(image_edges.select(*edge_cols))
     deg = (
         all_edges.select(F.col("source").alias("name"))
         .unionAll(all_edges.select(F.col("target").alias("name")))
@@ -266,53 +265,33 @@ def main(argv: list[str] | None = None) -> int:
                 + ("" if stats["compacted"] else " (already compact)")
             )
 
+    # QA and evaluation share one endpoint extractor (hermetic mock if unset)
+    extractor = None
+    if (args.ask or args.evaluate) and os.environ.get("MMKG_LLM_BASE_URL"):
+        from mmkg_rag_spark.llm import EndpointExtractor
+
+        extractor = EndpointExtractor(
+            base_url=os.environ["MMKG_LLM_BASE_URL"],
+            api_key=os.environ.get("MMKG_LLM_API_KEY", ""),
+            model=os.environ.get("MMKG_LLM_MODEL", "gpt-4o-mini"),
+        )
+
     # -- optional QA over the built graph (R6 driver) ----------------------
     if args.ask:
-        import os as _os
-
         from mmkg_rag_spark.qa import agent_response
 
-        extractor = None
-        if _os.environ.get("MMKG_LLM_BASE_URL"):
-            from mmkg_rag_spark.llm import EndpointExtractor
-
-            extractor = EndpointExtractor(
-                base_url=_os.environ["MMKG_LLM_BASE_URL"],
-                api_key=_os.environ.get("MMKG_LLM_API_KEY", ""),
-                model=_os.environ.get("MMKG_LLM_MODEL", "gpt-4o-mini"),
-            )
-        qa_edges = edges.select(
-            "source", "label", "target", "description", "references"
-        ).unionByName(
-            image_edges.select("source", "label", "target", "description", "references")
-        )
-        answer = agent_response(args.ask, nodes, qa_edges, images, extractor)
+        answer = agent_response(args.ask, nodes, all_edges, images, extractor)
         print(f"question: {args.ask}")
         print(f"answer: {answer}")
 
     # -- optional evaluation harness over the built graph ------------------
     if args.evaluate:
         import json as _json
-        import os as _os
 
         from mmkg_rag_spark.evaluation import evaluate
 
-        extractor = None
-        if _os.environ.get("MMKG_LLM_BASE_URL"):
-            from mmkg_rag_spark.llm import EndpointExtractor
-
-            extractor = EndpointExtractor(
-                base_url=_os.environ["MMKG_LLM_BASE_URL"],
-                api_key=_os.environ.get("MMKG_LLM_API_KEY", ""),
-                model=_os.environ.get("MMKG_LLM_MODEL", "gpt-4o-mini"),
-            )
-        ev_edges = edges.select(
-            "source", "label", "target", "description", "references"
-        ).unionByName(
-            image_edges.select("source", "label", "target", "description", "references")
-        )
         judged, stats = evaluate(
-            args.evaluate, nodes, ev_edges, images,
+            args.evaluate, nodes, all_edges, images,
             n=args.eval_n, extractor=extractor,
         )
         print(f"evaluated {len(judged)} questions (s vs m, 4 metrics):")
@@ -328,7 +307,5 @@ def main(argv: list[str] | None = None) -> int:
 if __name__ == "__main__":
     # spark-submit runs this file as a bare script (no package context);
     # the package itself arrives via --py-files or the repo root on sys.path.
-    import os
-
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.exit(main())

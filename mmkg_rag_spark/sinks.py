@@ -91,9 +91,8 @@ def export_eris_jsonl(
 # cannot load a 10^12-row graph; the Spark-first equivalent is Neo4j's bulk
 # import contract — neo4j-admin database import reads :ID/:LABEL/:START_ID/
 # :END_ID/:TYPE-headed CSVs, which we write distributed (one CSV part per
-# partition). Arrays use NEO4J_ARRAY_SEP (pass --array-delimiter). A live-driver
-# variant mirroring the reference's exact Cypher is provided behind an
-# import-guard for parity completeness (no neo4j package in this sandbox).
+# partition). Arrays use NEO4J_ARRAY_SEP (pass --array-delimiter). There is
+# no live-driver sink: the bulk CSVs are the only Neo4j output.
 
 # Array-element delimiter passed to neo4j-admin import via --array-delimiter.
 # U+241E (RECORD SEPARATOR symbol) instead of the default ';' because web-text
@@ -180,68 +179,6 @@ def export_neo4j_bulk(
         )
         _write(irels, "image_relations")
     return out
-
-
-def save_to_neo4j_live(
-    nodes: DataFrame,
-    edges: DataFrame,
-    url: str,
-    user: str,
-    password: str,
-    images: DataFrame | None = None,
-    clear: bool = True,
-) -> bool:
-    """Reference-faithful live export (storage/index.py:140-193 Cypher).
-
-    Row-at-a-time CREATE over the bolt driver — reference-scale graphs only
-    (the frames are collected); use ``export_neo4j_bulk`` at scale. Raises
-    ImportError when the ``neo4j`` package is unavailable (this sandbox).
-    """
-    from neo4j import GraphDatabase  # import-guard: not in the sandbox
-
-    with GraphDatabase.driver(url, auth=(user, password)) as driver:
-        with driver.session() as session:
-            if clear:
-                session.run("MATCH (n) DETACH DELETE n")
-            for e in nodes.collect():
-                session.run(
-                    "CREATE (n:Entity {name: $name, label: $label, "
-                    "description: $description, aliases: $aliases, "
-                    "references: $references})",
-                    name=e.name, label=e.label, description=e.description,
-                    aliases=list(e.aliases or []),
-                    references=list(e.references or []),
-                )
-            plain = edges.filter(~F.col("label").startswith("#image"))
-            for r in plain.collect():
-                session.run(
-                    "MATCH (source:Entity {name: $source}), "
-                    "(target:Entity {name: $target}) "
-                    "CREATE (source)-[:RELATION {label: $label, "
-                    "description: $description, references: $references}]->(target)",
-                    source=r.source, target=r.target, label=r.label,
-                    description=r.description,
-                    references=list(r.references or []),
-                )
-            if images is not None:
-                for i in images.collect():
-                    session.run(
-                        "CREATE (n:Image {path: $path, caption: $caption, "
-                        "description: $description, texts: $texts})",
-                        path=i.path, caption=i.caption,
-                        description=i.description, texts=list(i.texts or []),
-                    )
-                for r in edges.filter(F.col("label").startswith("#image")).collect():
-                    session.run(
-                        "MATCH (source:Entity {name: $source}), "
-                        "(target:Image {path: $target}) "
-                        "CREATE (source)-[:RELATION {label: $label, "
-                        "description: $description, references: $references}]->(target)",
-                        source=r.source, target=r.target, label=r.label,
-                        description=r.description,
-                        references=list(r.references or []),
-                    )
-    return True
 
 
 def write_bucketed_graph(

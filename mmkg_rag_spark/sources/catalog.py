@@ -167,7 +167,6 @@ class ParquetCatalog:
         snap: str | None = None,
         *,
         target_file_bytes: int = 128 * 1024 * 1024,
-        min_files: int = 2,
     ) -> dict:
         """Small-file compaction — the ``rewrite_data_files`` maintenance
         action every long-running table needs: streaming commits and
@@ -187,7 +186,8 @@ class ParquetCatalog:
         files = self._data_files(entry["path"])
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, -(-total // target_file_bytes))
-        if len(files) < max(min_files, n_out + 1):
+        # already at or under the target file count (a one-file snapshot too)
+        if len(files) <= n_out:
             return {
                 "table": table,
                 "snapshot": entry["id"],

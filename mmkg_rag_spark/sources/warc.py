@@ -16,6 +16,12 @@ module closes the gap between raw crawl archives and the engine's
   records) so round-trip tests run hermetically with zero network.
 - ``read_warc`` — the Spark entry point: archive inventory → one task per
   file → ``mapInPandas`` parse → the exact ``input_hint`` schema.
+- ``stream_warc`` — the same parser over a ``binaryFile`` file stream of a
+  landing directory, for ``streaming.stream_build(source="warc")``.
+
+The module only reads archives into pages: it keeps no CDX index, does no
+ranged record fetch and writes no archives of its own beyond the test
+fixtures above.
 
 Scale design (100 TB): Common Crawl writes archives at ~1 GiB precisely so
 the *file inventory* carries the parallelism — a monthly crawl is ~90k
@@ -478,429 +484,3 @@ def stream_warc(spark, input_dir: str, *, lenient: bool = False,
     paths = reader.load(input_dir).select("path")
     df = paths.mapInPandas(_paths_to_pages_gen(lenient), schema=_pages.PAGES_SCHEMA)
     return df.withColumn("lang", F.coalesce(F.col("lang"), lang_id(F.col("text"))))
-
-
-def stream_ingest_warc(spark, input_dir: str, warehouse: str,
-                       checkpoint_dir: str, *, table: str = "pages_warc",
-                       lenient: bool = False, available_now: bool = True,
-                       max_files_per_trigger: int = 4):
-    """Continuous crawl ingestion: archives → catalog snapshots, exactly-once.
-
-    Push-style twin of the poll/diff `ingest_warc`: Spark's file-stream
-    checkpoint decides WHICH files form each micro-batch; the snapshot id
-    is the content fingerprint of that file set, so a replayed batch
-    (restart after crash) finds its snapshot committed and no-ops, and a
-    crash mid-write leaves no manifest entry (data-before-manifest commit).
-    Snapshots record the same ``files`` meta as `ingest_warc`, so the two
-    loaders interoperate on one table: a later batch `ingest_warc` call
-    skips files the stream already committed, and vice versa.
-
-    ``available_now=True`` drains the current inventory then stops
-    (backfill/test mode); False keeps watching until ``query.stop()``.
-    Returns the streaming query.
-    """
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
-
-    catalog = ParquetCatalog(spark, warehouse)
-    paths = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_SCHEMA)
-        .option("pathGlobFilter", _ARCHIVE_GLOB)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(input_dir)
-        .select("path")
-    )
-
-    def ingest(batch_df, batch_id: int) -> None:
-        files = sorted(_local_path(r.path) for r in batch_df.collect())
-        if not files:
-            return
-        sized = [(p, _os.path.getsize(p)) for p in files]
-        snap = fingerprint_files(sized)
-        if catalog.has_snapshot(table, snap):
-            return
-        df = read_warc(spark, files, lenient=lenient)
-        catalog.write(
-            df, table, snap,
-            meta={"batch_id": batch_id, "files": [[p, sz] for p, sz in sized]},
-        )
-
-    writer = (
-        paths.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="2 seconds").start()
-
-
-# --- distributed export + CDX index ----------------------------------------
-
-
-def surt(url: str) -> str:
-    """Sort-friendly URI Reordering Transform (the CDX sort key).
-
-    ``https://ex3.test/doc/5`` → ``test,ex3)/doc/5``: scheme and default
-    port dropped, host lowercased and label-reversed so one site's records
-    sort contiguously. Simplified vs the full IA spec (no www-stripping or
-    query normalization) — deterministic and order-compatible for lookups
-    written and read by this engine.
-    """
-    from urllib.parse import urlsplit
-
-    p = urlsplit(url)
-    host = (p.hostname or "").lower()
-    key = ",".join(reversed(host.split("."))) if host else ""
-    path = p.path or "/"
-    if p.query:
-        path += "?" + p.query
-    return key + ")" + path
-
-
-def export_warc(pages, out_dir: str):
-    """pages DataFrame → one ``.warc.gz`` per partition + a CDX index.
-
-    The distributed mirror of `read_warc`: each task streams its partition
-    into ``part-<pid>.warc.gz`` (member-per-record gzip — Common Crawl's
-    layout) under ``out_dir`` (a shared filesystem path on a cluster) and
-    emits one CDX row per record with the byte ``offset``/``length`` of
-    that record's gzip member, so any record is retrievable with a ranged
-    read + single-member gunzip without touching the rest of the archive.
-    Returns the CDX DataFrame ``(surt_key, warc_ts, url, digest, offset,
-    length, filename)``; ``digest`` is the Common-Crawl-convention base32
-    SHA-1 of the payload. Sort/persist it with `write_cdx`.
-    """
-    import base64
-    import os
-    from typing import Iterator as _Iter
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
-    src = pages.withColumn("_pid", F.spark_partition_id())
-
-    def gen(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        fh = None
-        name = None
-        offset = 0
-        out_rows = []
-        for pdf in batches:
-            for url, warc_ts, html, text, lang, pid in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
-                pdf["lang"], pdf["_pid"],
-            ):
-                if fh is None:
-                    name = f"part-{int(pid):05d}.warc.gz"
-                    fh = open(os.path.join(out_dir, name), "wb")
-                ts = warc_ts.to_pydatetime().replace(tzinfo=dt.timezone.utc)
-                body = bytes(html) if html is not None else text.encode()
-                if html is not None:
-                    http = (
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html; "
-                        b"charset=UTF-8\r\nContent-Length: "
-                        + str(len(body)).encode() + b"\r\n\r\n" + body
-                    )
-                    rec = _record(
-                        "response",
-                        [("WARC-Target-URI", url), ("WARC-Date", _ts_str(ts)),
-                         ("Content-Type", 'application/http; msgtype="response"')],
-                        http,
-                    )
-                else:  # text-only row -> WET-style conversion record
-                    headers = [
-                        ("WARC-Target-URI", url), ("WARC-Date", _ts_str(ts)),
-                        ("Content-Type", "text/plain"),
-                    ]
-                    if lang:
-                        headers.append(("WARC-Identified-Content-Language", lang))
-                    rec = _record("conversion", headers, body)
-                member = _gzip_member(rec)
-                fh.write(member)
-                digest = base64.b32encode(hashlib.sha1(body).digest()).decode()
-                out_rows.append(
-                    (surt(url), ts.replace(tzinfo=None), url,
-                     "sha1:" + digest, offset, len(member), name)
-                )
-                offset += len(member)
-        if fh is not None:
-            fh.close()
-        yield pd.DataFrame(
-            out_rows,
-            columns=["surt_key", "warc_ts", "url", "digest",
-                     "offset", "length", "filename"],
-        )
-
-    schema = ("surt_key string, warc_ts timestamp, url string, digest string, "
-              "offset long, length long, filename string")
-    return src.mapInPandas(gen, schema=schema)
-
-
-def _cdxj_line(surt_key, warc_ts, url, digest, offset, length, filename) -> str:
-    import json
-
-    meta = {
-        "url": url, "digest": digest, "offset": str(offset),
-        "length": str(length), "filename": filename,
-    }
-    ts = warc_ts.strftime("%Y%m%d%H%M%S")
-    return f"{surt_key} {ts} {json.dumps(meta, sort_keys=True)}"
-
-
-def write_cdx(cdx, path: str) -> None:
-    """CDX rows → one globally sorted CDXJ text file (+ parquet twin).
-
-    Global sort on ``(surt_key, warc_ts)`` — the property CDX lookups
-    binary-search on. The text file is the interchange artifact; the
-    parquet twin beside it is the queryable form. The driver streams the
-    sorted partitions one at a time (``toLocalIterator`` — bounded memory),
-    but a single file is still a single writer: past sandbox scale use
-    `write_cdx_sharded`, where the tasks write range-partitioned shards.
-    """
-    ordered = cdx.orderBy("surt_key", "warc_ts")
-    ordered.write.mode("overwrite").parquet(path + ".parquet")
-    with open(path, "w", encoding="utf-8") as fh:
-        for r in ordered.toLocalIterator():
-            fh.write(
-                _cdxj_line(r.surt_key, r.warc_ts, r.url, r.digest,
-                           r.offset, r.length, r.filename) + "\n"
-            )
-
-
-def write_cdx_sharded(cdx, out_dir: str, shards: int = 32) -> list[dict]:
-    """CDX rows → range-partitioned CDXJ shards, written by the tasks.
-
-    The crawl-scale form of `write_cdx`: ``repartitionByRange`` on
-    ``(surt_key, warc_ts)`` gives globally ordered shards (shard *i*'s keys
-    all precede shard *i+1*'s), each internally sorted by
-    ``sortWithinPartitions`` — so the concatenation in shard order IS the
-    single sorted file, but every byte is written executor-side; the only
-    driver work is the |shards|-row boundary index (``index.json``:
-    first/last key per shard), which routes a lookup to its shard for the
-    binary search. Returns the boundary index rows.
-    """
-    import json
-    import os
-    from typing import Iterator as _Iter
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
-    ordered = (
-        cdx.repartitionByRange(shards, "surt_key", "warc_ts")
-        .sortWithinPartitions("surt_key", "warc_ts")
-        .withColumn("_pid", F.spark_partition_id())
-    )
-
-    def gen(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        fh = None
-        name = first = last = None
-        n = 0
-        for pdf in batches:
-            for sk, ts, url, dg, off, ln, fn, pid in zip(
-                pdf["surt_key"], pdf["warc_ts"], pdf["url"], pdf["digest"],
-                pdf["offset"], pdf["length"], pdf["filename"], pdf["_pid"],
-            ):
-                if fh is None:
-                    name = f"cdx-{int(pid):05d}.cdxj"
-                    fh = open(os.path.join(out_dir, name), "w", encoding="utf-8")
-                    first = sk
-                fh.write(_cdxj_line(sk, ts, url, dg, off, ln, fn) + "\n")
-                last = sk
-                n += 1
-        if fh is None:
-            yield pd.DataFrame(
-                columns=["filename", "first_key", "last_key", "n"]
-            ).astype({"n": "int64"})
-            return
-        fh.close()
-        yield pd.DataFrame(
-            [(name, first, last, n)],
-            columns=["filename", "first_key", "last_key", "n"],
-        )
-
-    meta_schema = "filename string, first_key string, last_key string, n long"
-    index = sorted(
-        (r.asDict() for r in ordered.mapInPandas(gen, schema=meta_schema).collect()),
-        key=lambda m: m["filename"],
-    )
-    with open(os.path.join(out_dir, "index.json"), "w", encoding="utf-8") as fh:
-        json.dump(index, fh, indent=1)
-    return index
-
-
-def fetch_record(archive_dir: str, cdx_row) -> tuple[dict[str, str], bytes]:
-    """Ranged-read one record via its CDX row (offset/length/filename).
-
-    The random-access path the index exists for: seek, read ``length``
-    bytes, gunzip the single member, parse the one record.
-    """
-    import os
-
-    with open(os.path.join(archive_dir, cdx_row.filename), "rb") as fh:
-        fh.seek(cdx_row.offset)
-        member = fh.read(cdx_row.length)
-    recs = list(iter_warc_records(io.BytesIO(member)))
-    if len(recs) != 1:
-        raise ValueError("CDX range did not contain exactly one record")
-    return recs[0]
-
-
-def read_cdx(spark, path: str):
-    """CDXJ shards / single file → the CDX DataFrame, parsed JVM-side.
-
-    The read twin of `write_cdx` / `write_cdx_sharded`: ``spark.read.text``
-    over the shard directory (one task per split — the inventory carries
-    the parallelism, same rule as `read_warc`), then pure native parsing —
-    two ``regexp_extract`` + one ``from_json`` + ``to_timestamp`` with an
-    explicit pattern under the engine's pinned UTC session zone. No Python
-    runs per line, so a 90k-shard crawl index scans at parquet-like rates;
-    schema matches `export_warc`'s output so the same frame feeds
-    `fetch_pages_by_cdx` or joins directly against dedup/curation outputs.
-    """
-    from pyspark.sql import functions as F
-
-    if _os.path.isdir(path):
-        src = _os.path.join(path, "*.cdxj")
-    else:
-        src = path
-    meta = (
-        "url string, digest string, offset string, length string, "
-        "filename string"
-    )
-    line = F.col("value")
-    m = F.from_json(F.regexp_extract(line, r"^\S+ \d{14} (.*)$", 1), meta)
-    return (
-        spark.read.text(src)
-        .filter(F.length(F.trim(line)) > 0)
-        .select(
-            F.regexp_extract(line, r"^(\S+) ", 1).alias("surt_key"),
-            F.to_timestamp(
-                F.regexp_extract(line, r"^\S+ (\d{14}) ", 1), "yyyyMMddHHmmss"
-            ).alias("warc_ts"),
-            m["url"].alias("url"),
-            m["digest"].alias("digest"),
-            m["offset"].cast("long").alias("offset"),
-            m["length"].cast("long").alias("length"),
-            m["filename"].alias("filename"),
-        )
-    )
-
-
-def fetch_pages_by_cdx(spark, archive_dir: str, cdx, *, lenient: bool = False):
-    """Index-driven selective fetch: CDX rows → pages rows, distributed.
-
-    THE Common-Crawl access pattern the index exists for: filter the
-    (tiny, columnar) CDX frame — by SURT prefix, language, digest
-    anti-join, crawl date — and range-read ONLY the matching records
-    instead of re-scanning archives. `fetch_record` is the driver-side
-    single-record probe; this is its cluster form: repartition by
-    ``filename`` so each archive is owned by one task, sort by
-    ``(filename, offset)`` within the task so member reads are sequential
-    and each file is opened exactly once per run, then seek/read/gunzip
-    the single gzip member and parse the one record. Only CDX rows (a few
-    hundred bytes each) cross the shuffle — never archive bytes. ``lang``
-    falls back to the native stopword detector like `read_warc`.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mmkg_rag_spark.functions.textstats import lang_id
-
-    src = cdx.select("filename", "offset", "length").repartition(
-        "filename"
-    ).sortWithinPartitions("filename", "offset")
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cur, fh = None, None
-        try:
-            for pdf in batches:
-                rows = []
-                for fn, off, ln in zip(
-                    pdf["filename"], pdf["offset"], pdf["length"]
-                ):
-                    if fn != cur:
-                        if fh is not None:
-                            fh.close()
-                        fh = open(_os.path.join(archive_dir, fn), "rb")
-                        cur = fn
-                    fh.seek(int(off))
-                    member = fh.read(int(ln))
-                    rows.extend(_archive_rows(io.BytesIO(member), lenient))
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "text", "lang"]
-                )
-        finally:
-            if fh is not None:
-                fh.close()
-
-    df = src.mapInPandas(gen, schema=_pages.PAGES_SCHEMA)
-    return df.withColumn(
-        "lang", F.coalesce(F.col("lang"), lang_id(F.col("text")))
-    )
-
-
-# --- incremental (manifest-diff) ingestion ----------------------------------
-
-
-def ingest_warc(spark, catalog, paths, *, table: str = "pages_warc",
-                lenient: bool = False):
-    """Idempotent file-level incremental ingestion of crawl archives.
-
-    Auto-loader pattern over the snapshot catalog: each call lists the
-    archive inventory, diffs it against the union of files recorded in
-    ``table``'s committed snapshot metadata, parses ONLY the new files
-    (`read_warc`), and commits them as one new snapshot whose meta records
-    exactly which ``(path, size)`` pairs it covers. Crash-safe by the
-    catalog's data-before-manifest commit: a death mid-ingest leaves no
-    manifest entry, and the re-run re-parses the same new files into the
-    same snapshot id (overwrite-idempotent). Archives are immutable by
-    convention (Common Crawl never rewrites), so ``(path, size)`` is the
-    identity; a size change is treated as a new file.
-
-    Returns ``(new_pages, all_pages, n_new_files)`` — ``new_pages`` is None
-    when the inventory is fully ingested (a no-op call). Feed ``new_pages``
-    through extract → `operators.incremental.incremental_canonicalize` for
-    O(batch + graph) KG growth, never O(corpus).
-    """
-    import os
-
-    if isinstance(paths, str):
-        files = sorted(_glob.glob(paths)) if _glob.has_magic(paths) else [paths]
-    else:
-        files = sorted(paths)
-    inventory = [(p, os.path.getsize(p)) for p in files]
-
-    seen: set[tuple[str, int]] = set()
-    for snap in catalog.snapshots(table):
-        # catalog spreads meta into the manifest entry (catalog.py:_commit)
-        for p, sz in snap.get("files", []):
-            seen.add((p, int(sz)))
-    new = [(p, sz) for p, sz in inventory if (p, sz) not in seen]
-
-    def _all_pages():
-        snaps = catalog.snapshots(table)
-        if not snaps:
-            return None
-        dfs = [catalog.read(table, s["id"]) for s in snaps]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    if not new:
-        return None, _all_pages(), 0
-
-    snap_id = fingerprint_files(new)
-    df = read_warc(spark, [p for p, _ in new], lenient=lenient)
-    catalog.write(df, table, snap_id, meta={"files": [[p, sz] for p, sz in new]})
-    return catalog.read(table, snap_id), _all_pages(), len(new)
-
-
-def fingerprint_files(files: list[tuple[str, int]]) -> str:
-    """Deterministic snapshot id for a set of (path, size) pairs."""
-    raw = "\n".join(f"{p}:{sz}" for p, sz in sorted(files))
-    return hashlib.sha256(raw.encode()).hexdigest()[:16]

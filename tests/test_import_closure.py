@@ -33,7 +33,6 @@ OFF_PATH = [
     "functions.heavyhitters",
     "functions.qsketch",
     "functions.timeops",
-    "functions.zorder",
 ]
 
 # removed from the package; an import of any of them must not come back
@@ -42,6 +41,8 @@ DELETED = [
     "kernels.jpeg",
     "kernels.avi",
     "kernels.y4m",
+    "functions.zorder",
+    "kernels.labels",
 ]
 
 

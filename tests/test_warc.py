@@ -166,138 +166,6 @@ def test_kg_build_from_warc_equals_synthetic(spark, tmp_path_factory):
     assert s_warc == s_gen  # identical node/edge counts and degree ranking
 
 
-def test_export_warc_cdx_roundtrip_and_ranged_fetch(spark, page_rows, tmp_path_factory):
-    """Distributed export mirrors the reader; CDX offsets support ranged
-    record fetch; the CDXJ file is globally sorted on (surt, ts)."""
-    import json
-
-    d = str(tmp_path_factory.mktemp("warc-out"))
-    df = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], r["html"], r["text"], "en") for r in page_rows],
-        pages.PAGES_SCHEMA,
-    ).repartition(3)
-    cdx = warc.export_warc(df, d).cache()
-    rows = cdx.collect()
-    assert len(rows) == len(page_rows)
-    assert len({r.filename for r in rows}) == 3  # one archive per partition
-
-    # reader round-trip over the exported archives
-    back = warc.read_warc(spark, d + "/*.warc.gz").orderBy("url").collect()
-    want = sorted(page_rows, key=lambda r: r["url"])
-    assert [b.url for b in back] == [w["url"] for w in want]
-    assert all(bytes(b.html) == bytes(w["html"]) for b, w in zip(back, want))
-    assert all(b.text == w["text"] for b, w in zip(back, want))
-
-    # ranged fetch: every CDX row resolves to its exact record
-    for r in rows[:5]:
-        headers, block = warc.fetch_record(d, r)
-        assert headers["warc-target-uri"] == r.url
-        assert warc._http_payload(block) == bytes(
-            next(w for w in page_rows if w["url"] == r.url)["html"]
-        )
-
-    # sorted CDXJ artifact
-    idx = d + "/index.cdxj"
-    warc.write_cdx(cdx, idx)
-    lines = open(idx).read().splitlines()
-    assert len(lines) == len(page_rows)
-    keys = [(ln.split(" ", 2)[0], ln.split(" ", 2)[1]) for ln in lines]
-    assert keys == sorted(keys)
-    meta = json.loads(lines[0].split(" ", 2)[2])
-    assert set(meta) == {"url", "digest", "offset", "length", "filename"}
-    assert meta["digest"].startswith("sha1:")
-
-    # distributed shards: concatenation in index order == the single file
-    shard_dir = d + "/cdx-shards"
-    index = warc.write_cdx_sharded(cdx, shard_dir, shards=4)
-    assert index == json.load(open(shard_dir + "/index.json"))
-    cat = []
-    for m in index:
-        cat.extend(open(f"{shard_dir}/{m['filename']}").read().splitlines())
-    assert cat == lines
-    # boundary index routes lookups: shard ranges are ordered and disjoint
-    assert all(m["first_key"] <= m["last_key"] for m in index)
-    bounds = [k for m in index for k in (m["first_key"], m["last_key"])]
-    assert bounds == sorted(bounds)
-    assert sum(m["n"] for m in index) == len(page_rows)
-
-
-def test_read_cdx_and_distributed_selective_fetch(
-    spark, page_rows, tmp_path_factory
-):
-    """read_cdx parses CDXJ shards back to the exact export frame; a
-    filtered index drives fetch_pages_by_cdx to range-read ONLY the
-    selected records, byte-identical to the source pages."""
-    d = str(tmp_path_factory.mktemp("warc-cdxread"))
-    df = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], r["html"], r["text"], "en") for r in page_rows],
-        pages.PAGES_SCHEMA,
-    ).repartition(3)
-    cdx = warc.export_warc(df, d).cache()
-    warc.write_cdx_sharded(cdx, d + "/cdx-shards", shards=4)
-
-    back = warc.read_cdx(spark, d + "/cdx-shards")
-    want = sorted(
-        (r.surt_key, r.warc_ts, r.url, r.digest, r.offset, r.length, r.filename)
-        for r in cdx.collect()
-    )
-    got = sorted(
-        (r.surt_key, r.warc_ts, r.url, r.digest, r.offset, r.length, r.filename)
-        for r in back.collect()
-    )
-    assert got == want
-
-    # selective fetch: filter the index to a URL subset, fetch only those
-    pick = sorted({r["url"] for r in page_rows})[::3]
-    sel = back.filter(back["url"].isin(pick))
-    fetched = (
-        warc.fetch_pages_by_cdx(spark, d, sel).orderBy("url").collect()
-    )
-    src = {r["url"]: r for r in page_rows}
-    assert [f.url for f in fetched] == pick
-    for f in fetched:
-        assert bytes(f.html) == bytes(src[f.url]["html"])
-        assert f.text == src[f.url]["text"]
-        assert f.warc_ts == src[f.url]["warc_ts"].replace(tzinfo=None)
-        assert f.lang == "en"  # detector fallback (export drops lang)
-
-
-def test_surt_keys_cluster_by_site():
-    assert warc.surt("https://ex3.test/doc/5") == "test,ex3)/doc/5"
-    assert warc.surt("http://A.B.example.ORG/x?q=1") == "org,example,b,a)/x?q=1"
-    assert warc.surt("https://host.test") == "test,host)/"
-
-
-def test_ingest_warc_incremental_manifest_diff(spark, page_rows, tmp_path_factory):
-    """File-level auto-loader: only new archives parse; no-op when the
-    inventory is fully ingested; snapshots union to the full table."""
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
-
-    d = tmp_path_factory.mktemp("warc-inc")
-    wh = str(tmp_path_factory.mktemp("wh-inc"))
-    catalog = ParquetCatalog(spark, wh)
-    (d / "a.warc.gz").write_bytes(warc.write_warc(page_rows[:10]))
-    (d / "b.warc.gz").write_bytes(warc.write_warc(page_rows[10:20]))
-
-    glob_pat = str(d / "*.warc.gz")
-    new1, all1, n1 = warc.ingest_warc(spark, catalog, glob_pat)
-    assert n1 == 2 and new1.count() == 20 and all1.count() == 20
-
-    # no-op call: nothing new, no extra snapshot
-    new2, all2, n2 = warc.ingest_warc(spark, catalog, glob_pat)
-    assert n2 == 0 and new2 is None and all2.count() == 20
-    assert len(catalog.snapshots("pages_warc")) == 1
-
-    # a third archive arrives: only IT parses
-    (d / "c.warc.gz").write_bytes(warc.write_warc(page_rows[20:]))
-    new3, all3, n3 = warc.ingest_warc(spark, catalog, glob_pat)
-    assert n3 == 1 and new3.count() == 10 and all3.count() == 30
-    assert len(catalog.snapshots("pages_warc")) == 2
-    assert sorted(r.url for r in new3.collect()) == sorted(
-        r["url"] for r in page_rows[20:]
-    )
-
-
 def test_stream_warc_matches_batch_read(spark, page_rows, tmp_path_factory):
     """Streaming discovery of a landing dir yields the same pages rows as
     the batch read; non-archive files are glob-filtered out."""
@@ -324,43 +192,6 @@ def test_stream_warc_matches_batch_read(spark, page_rows, tmp_path_factory):
         .collect()
     )
     assert len(got) == 20 and got == want
-
-
-def test_stream_ingest_warc_exactly_once_and_interop(
-    spark, page_rows, tmp_path_factory
-):
-    """Continuous ingestion commits idempotent snapshots keyed by file
-    fingerprints, resumes from the checkpoint (new files only), and
-    interoperates with the batch manifest-diff loader on the same table."""
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
-
-    d = tmp_path_factory.mktemp("warc-si")
-    wh = str(tmp_path_factory.mktemp("wh-si"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt-si"))
-    catalog = ParquetCatalog(spark, wh)
-    (d / "a.warc.gz").write_bytes(warc.write_warc(page_rows[:10]))
-    (d / "b.warc.gz").write_bytes(warc.write_warc(page_rows[10:20]))
-
-    warc.stream_ingest_warc(spark, str(d), wh, ckpt, max_files_per_trigger=1)
-    snaps1 = catalog.snapshots("pages_warc")
-    assert len(snaps1) == 2  # one file per trigger -> one snapshot per batch
-    assert sum(catalog.read("pages_warc", s["id"]).count() for s in snaps1) == 20
-
-    # drained re-run: checkpoint knows both files; no new snapshots
-    warc.stream_ingest_warc(spark, str(d), wh, ckpt)
-    assert len(catalog.snapshots("pages_warc")) == 2
-
-    # new arrival: exactly one new snapshot with only its rows
-    (d / "c.warc.gz").write_bytes(warc.write_warc(page_rows[20:]))
-    warc.stream_ingest_warc(spark, str(d), wh, ckpt)
-    snaps3 = catalog.snapshots("pages_warc")
-    assert len(snaps3) == 3
-    newest = max(snaps3, key=lambda s: s["seq"])
-    assert catalog.read("pages_warc", newest["id"]).count() == 10
-
-    # interop: the batch loader sees every streamed file as already ingested
-    new, all_pages, n = warc.ingest_warc(spark, catalog, str(d / "*.warc.gz"))
-    assert n == 0 and new is None and all_pages.count() == 30
 
 
 def test_http_payload_dechunks_transfer_encoding():
