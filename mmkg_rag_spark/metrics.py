@@ -16,8 +16,8 @@ to the same history.
 from __future__ import annotations
 
 import os
-import shutil
 import time
+import uuid
 from pathlib import Path
 
 import pyarrow as pa
@@ -38,6 +38,14 @@ METRICS_SCHEMA = pa.schema([
 ])
 
 
+def file_rows(catalog: ParquetCatalog, data_path: str) -> list[tuple[str, int]]:
+    """(file, rows) of a snapshot's non-empty data files, read from their
+    parquet footers on the driver — no Spark job. An empty write-task file
+    contributes no row to a scan."""
+    files = sorted(catalog._data_files(data_path))
+    return [(f, n) for f in files if (n := pq.read_metadata(f).num_rows)]
+
+
 def record_stage(
     catalog: ParquetCatalog,
     stage: str,
@@ -52,28 +60,28 @@ def record_stage(
 
     ``rows_in`` is the upstream snapshot's row count (-1 when unknown, e.g.
     streaming micro-batches) — with per-file ``rows`` out, each stage's
-    row fan-in/fan-out is auditable straight from the metrics table."""
+    row fan-in/fan-out is auditable straight from the metrics table.
+    Each call adds one file to ``_metrics/{stage}-{snapshot}``, so a
+    snapshot recomputed after a crash keeps its earlier rows."""
     ts = time.time()
-    rows = []
-    for path in sorted(catalog._data_files(data_path)):
-        n = pq.read_metadata(path).num_rows
-        if n:  # an empty write-task file contributes no row to a scan
-            rows.append({
-                "stage": stage,
-                "snapshot": snapshot,
-                "input_snapshot": input_snapshot,
-                "file": Path(path).absolute().as_uri(),
-                "rows": n,
-                "rows_in": int(rows_in),
-                "wall_ms": int(wall_ms),
-                "ts": ts,
-            })
+    rows = [
+        {
+            "stage": stage,
+            "snapshot": snapshot,
+            "input_snapshot": input_snapshot,
+            "file": Path(path).absolute().as_uri(),
+            "rows": n,
+            "rows_in": int(rows_in),
+            "wall_ms": int(wall_ms),
+            "ts": ts,
+        }
+        for path, n in file_rows(catalog, data_path)
+    ]
     out = os.path.join(catalog.warehouse, "_metrics", f"{stage}-{snapshot}")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
+    os.makedirs(out, exist_ok=True)
     pq.write_table(
         pa.Table.from_pylist(rows, schema=METRICS_SCHEMA),
-        os.path.join(out, "part-00000.parquet"),
+        os.path.join(out, f"part-{uuid.uuid4().hex}.parquet"),
     )
     return sum(r["rows"] for r in rows)
 

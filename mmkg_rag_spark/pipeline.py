@@ -1,12 +1,15 @@
 """End-to-end KG construction pipeline (engine composition root).
 
+build_kg:
 pages(url, warc_ts, html, text, lang)
   └─ extract_page_artifacts (one map pass: html→text, chunk, extract, image scan)
+graph_from_artifacts (also run.py's graph stage, over stored artifacts):
        ├─ entity mentions ─ canonicalize (D)
        ├─ relation mentions ─ remap+merge
        └─ image instances ─ describe ─ score/top8
             └─ link → #image edges (M)
-Outputs: nodes (canonical entities), edges (triples ∪ image edges), images.
+Outputs: nodes (canonical entities), edges (triples ∪ image edges), images —
+the three tables ``sinks.write_graph`` commits.
 
 Mirrors index_graph (reference pipe.py:47-111) restructured as a DAG of
 DataFrame stages; see operators/* for the per-stage scale notes.
@@ -157,6 +160,20 @@ def build_kg(
         pages, chunk_size, overlap, use_html=use_html,
         extractor_factory=extractor_factory, loop=loop,
     ).cache()
+    return graph_from_artifacts(spark, artifacts, manifest)
+
+
+def graph_from_artifacts(
+    spark: SparkSession,
+    artifacts: DataFrame,
+    manifest: DataFrame | None = None,
+) -> KGResult:
+    """The graph half of the build: extraction artifact rows (E/R mentions
+    and I image instances, ``extract_page_artifacts``' output) → nodes,
+    edges, image edges and images.
+
+    ``all_edges`` is the catalog's edge table: plain edges ∪ image edges,
+    the image edges carrying an empty ``chunks`` array."""
     entity_mentions, relation_mentions = split_mentions(artifacts)
     raw_instances = split_image_instances(artifacts)
 
@@ -175,10 +192,8 @@ def build_kg(
     image_edges = link_images(top).cache()
     images = images_table(described)
 
-    all_edges = edges.select(
-        "source", "label", "target", "description", "references"
-    ).unionByName(
-        image_edges.select("source", "label", "target", "description", "references")
+    all_edges = edges.unionByName(
+        image_edges.withColumn("chunks", F.array().cast("array<int>"))
     )
     return KGResult(
         nodes=nodes,

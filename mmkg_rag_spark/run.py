@@ -11,9 +11,11 @@ kill this process at any point and re-invoke with the same args to verify).
 Each stage also appends per-partition lineage/metrics rows (metrics.py).
 
 Stage DAG (SURVEY.md §3.1 restructured):
-  pages → mentions(map: E/R mentions + I image instances)
-            ├→ nodes+mapping(D-phase) → edges(remap)
-            └→ images+image_edges(M-phase, needs nodes)  → summary
+  pages [→ pages_dedup] → mentions(map: E/R mentions + I image instances)
+    → graph: pipeline.graph_from_artifacts (D + M phases), committed by
+      sinks.write_graph as one snapshot of nodes, edges, images → summary
+The warehouse is the one build_kg + write_graph leave, so a fold
+(streaming.process_pages_batch) extends it like any stored graph.
 """
 
 from __future__ import annotations
@@ -26,33 +28,49 @@ import time
 from pyspark.sql import functions as F
 
 
-# snapshot fingerprint → row count, so each stage's metrics row can carry
-# its upstream's rows_in without an extra count job (record_stage returns
-# the written rows; resumed snapshots pay one parquet-stats count)
+# snapshot fingerprint → rows the stage wrote, so each stage's metrics rows
+# can carry its upstream's rows_in without a count job (record_stage returns
+# the written rows; a resumed snapshot's come from its parquet footers)
 _STAGE_ROWS: dict[str, int] = {}
 
 
-def _stage(catalog, name, snap, input_snap, compute, force=False):
-    """Resume-or-compute one stage; returns the stage's DataFrame."""
-    t0 = time.time()
-    if not force and catalog.has_snapshot(name, snap):
-        print(f"[resume] {name} snap-{snap}: exists, skipping compute")
-        out = catalog.read(name, snap)
-        _STAGE_ROWS[snap] = out.count()
-        return out
-    df = compute()
-    path = catalog.write(df, name, snap, meta={"input": input_snap})
-    wall_ms = int((time.time() - t0) * 1000)
-    from mmkg_rag_spark.metrics import record_stage
+def _stage(catalog, tables, snap, input_snap, write, force=False):
+    """Resume-or-compute one stage: ``write()`` commits snapshot ``snap`` of
+    every table in ``tables``, and the stage resumes only when all of them
+    hold it. Prints and records lineage per table; returns table → the
+    stored snapshot's DataFrame."""
+    from mmkg_rag_spark.metrics import file_rows, record_stage
 
-    n = record_stage(
-        catalog, name, snap, input_snap, path, wall_ms,
-        rows_in=_STAGE_ROWS.get(input_snap, -1),
-    )
-    out = catalog.read(name, snap)
-    _STAGE_ROWS[snap] = n
-    print(f"[run   ] {name} snap-{snap}: {n} rows in {wall_ms} ms")
+    t0 = time.time()
+    resume = not force and all(catalog.has_snapshot(t, snap) for t in tables)
+    if not resume:
+        write()
+    wall_ms = int((time.time() - t0) * 1000)
+    out, total = {}, 0
+    for t in tables:
+        path = catalog.snapshot_dir(t, snap)
+        if resume:
+            n = sum(rows for _, rows in file_rows(catalog, path))
+            print(f"[resume] {t} snap-{snap}: exists, skipping compute")
+        else:
+            n = record_stage(
+                catalog, t, snap, input_snap, path, wall_ms,
+                rows_in=_STAGE_ROWS.get(input_snap, -1),
+            )
+            print(f"[run   ] {t} snap-{snap}: {n} rows in {wall_ms} ms")
+        total += n
+        out[t] = catalog.read(t, snap)
+    _STAGE_ROWS[snap] = total
     return out
+
+
+def _table_stage(catalog, name, snap, input_snap, compute, force=False):
+    """One-table stage whose snapshot is ``compute()``'s DataFrame."""
+    return _stage(
+        catalog, (name,), snap, input_snap,
+        lambda: catalog.write(compute(), name, snap, meta={"input": input_snap}),
+        force,
+    )[name]
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -101,19 +119,10 @@ def main(argv: list[str] | None = None) -> int:
                          "questions; the GraphRAG paper uses 5)")
     args = ap.parse_args(argv)
 
-    from mmkg_rag_spark.operators.dedup import canonicalize_entities, remap_and_merge_relations
-    from mmkg_rag_spark.operators.extract import (
-        extract_page_artifacts,
-        split_image_instances,
-        split_mentions,
-    )
-    from mmkg_rag_spark.operators.mmodal import (
-        describe_images,
-        filter_valid_images,
-        link_images,
-        score_image_entities,
-    )
+    from mmkg_rag_spark.operators.extract import extract_page_artifacts
+    from mmkg_rag_spark.pipeline import graph_from_artifacts
     from mmkg_rag_spark.session import get_spark
+    from mmkg_rag_spark.sinks import graph_snapshot, write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog, fingerprint
     from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
 
@@ -138,7 +147,7 @@ def main(argv: list[str] | None = None) -> int:
         from mmkg_rag_spark.sources.warc import read_warc
 
         pages_fp = fingerprint("pages", "warc", args.warc)
-        pages = _stage(
+        pages = _table_stage(
             catalog, "pages", pages_fp, "-",
             lambda: read_warc(spark, args.warc), args.force,
         )
@@ -146,13 +155,13 @@ def main(argv: list[str] | None = None) -> int:
         from mmkg_rag_spark.sources.docpages import pages_from_documents
 
         pages_fp = fingerprint("pages", "sf", args.sf_dir)
-        pages = _stage(
+        pages = _table_stage(
             catalog, "pages", pages_fp, "-",
             lambda: pages_from_documents(spark, args.sf_dir), args.force,
         )
     else:
         pages_fp = fingerprint("pages", "gen", args.n_docs, args.seed)
-        pages = _stage(
+        pages = _table_stage(
             catalog, "pages", pages_fp, "-",
             lambda: gen_pages_df(spark, args.n_docs, args.seed), args.force,
         )
@@ -162,7 +171,7 @@ def main(argv: list[str] | None = None) -> int:
         from mmkg_rag_spark.pipeline import dedup_pages_latest
 
         dedup_fp = fingerprint("pages_dedup", pages_fp)
-        pages = _stage(
+        pages = _table_stage(
             catalog, "pages_dedup", dedup_fp, pages_fp,
             lambda: dedup_pages_latest(pages).drop("canonical_url"),
             args.force,
@@ -176,88 +185,43 @@ def main(argv: list[str] | None = None) -> int:
     # "artifacts" tag keeps an older warehouse's E/R-only snapshot from
     # being resumed as artifacts.
     mentions_fp = fingerprint("artifacts", args.chunk_size, args.overlap, pages_fp)
-    mentions = _stage(
+    mentions = _table_stage(
         catalog, "mentions", mentions_fp, pages_fp,
         lambda: extract_page_artifacts(
             pages, args.chunk_size, args.overlap, use_html=not args.warc
         ),
         args.force,
     )
-    entity_mentions, relation_mentions = split_mentions(mentions)
 
-    # -- stage 3: canonical nodes + alias mapping (D-phase) ----------------
-    nodes_fp = fingerprint("nodes", mentions_fp)
-
-    def _nodes():
-        nodes, mapping = canonicalize_entities(entity_mentions)
-        # carry the mapping inside one snapshot: tag rows
-        n = nodes.select(
-            F.lit("node").alias("kind"), "name", "label", "description",
-            "aliases", "references", "chunks",
+    # -- stage 3: graph (D + M phases over the stored artifacts) -----------
+    def _graph():
+        manifest = spark.createDataFrame(
+            [(p,) for p in image_manifest()], "path string"
         )
-        m = mapping.select(
-            F.lit("map").alias("kind"),
-            F.col("member").alias("name"),
-            F.col("canonical").alias("label"),
-            F.lit(None).cast("string").alias("description"),
-            F.lit(None).cast("array<string>").alias("aliases"),
-            F.lit(None).cast("array<string>").alias("references"),
-            F.lit(None).cast("array<int>").alias("chunks"),
-        )
-        return n.unionByName(m)
+        r = graph_from_artifacts(spark, mentions, manifest)
+        write_graph(catalog, r.nodes, r.all_edges, mentions_fp, r.images)
 
-    nodes_all = _stage(catalog, "nodes", nodes_fp, mentions_fp, _nodes, args.force)
-    nodes = nodes_all.filter(F.col("kind") == "node").drop("kind")
-    mapping = nodes_all.filter(F.col("kind") == "map").select(
-        F.col("name").alias("member"), F.col("label").alias("canonical")
+    graph = _stage(
+        catalog, ("nodes", "edges", "images"), graph_snapshot(mentions_fp),
+        mentions_fp, _graph, args.force,
     )
-
-    # -- stage 4: canonical edges ------------------------------------------
-    edges_fp = fingerprint("edges", nodes_fp)
-    edges = _stage(
-        catalog, "edges", edges_fp, nodes_fp,
-        lambda: remap_and_merge_relations(relation_mentions, mapping), args.force,
-    )
-
-    # -- stage 5: multimodal image edges -----------------------------------
-    img_fp = fingerprint("image_edges", nodes_fp, pages_fp)
-    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
-    instances = filter_valid_images(split_image_instances(mentions), manifest)
-    described = describe_images(instances)
-
-    def _image_edges():
-        return link_images(score_image_entities(described, nodes))
-
-    image_edges = _stage(catalog, "image_edges", img_fp, nodes_fp, _image_edges, args.force)
-
-    # -- stage 5b: images table (only when QA needs it) --------------------
-    images = None
-    if args.ask:
-        from mmkg_rag_spark.operators.mmodal import images_table
-
-        images = _stage(
-            catalog, "images", img_fp, nodes_fp,
-            lambda: images_table(described), args.force,
-        )
+    nodes, edges, images = graph["nodes"], graph["edges"], graph["images"]
 
     # -- summary -----------------------------------------------------------
-    # plain + image edges, the shape the degree summary, QA and evaluation read
-    edge_cols = ("source", "label", "target", "description", "references")
-    all_edges = edges.select(*edge_cols).unionByName(image_edges.select(*edge_cols))
     deg = (
-        all_edges.select(F.col("source").alias("name"))
-        .unionAll(all_edges.select(F.col("target").alias("name")))
+        edges.select(F.col("source").alias("name"))
+        .unionAll(edges.select(F.col("target").alias("name")))
         .groupBy("name").count().orderBy(F.desc("count"), "name")
     )
-    n_nodes, n_edges, n_img = nodes.count(), edges.count(), image_edges.count()
-    print(f"nodes={n_nodes} edges={n_edges} image_edges={n_img}")
+    n_img = edges.filter(F.col("label").startswith("#image")).count()
+    print(f"nodes={nodes.count()} edges={edges.count() - n_img} image_edges={n_img}")
     print("top degrees:")
     for r in deg.limit(5).collect():
         print(f"  {r['name']}: {r['count']}")
 
     # -- optional maintenance: table compaction ------------------------------
     if args.compact:
-        for table in ("nodes", "edges", "image_edges"):
+        for table in graph:
             stats = catalog.compact(table)
             print(
                 f"[compact] {table}: {stats['files_before']} -> "
@@ -280,7 +244,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.ask:
         from mmkg_rag_spark.qa import agent_response
 
-        answer = agent_response(args.ask, nodes, all_edges, images, extractor)
+        answer = agent_response(args.ask, nodes, edges, images, extractor)
         print(f"question: {args.ask}")
         print(f"answer: {answer}")
 
@@ -291,7 +255,7 @@ def main(argv: list[str] | None = None) -> int:
         from mmkg_rag_spark.evaluation import evaluate
 
         judged, stats = evaluate(
-            args.evaluate, nodes, all_edges, images,
+            args.evaluate, nodes, edges, images,
             n=args.eval_n, extractor=extractor,
         )
         print(f"evaluated {len(judged)} questions (s vs m, 4 metrics):")

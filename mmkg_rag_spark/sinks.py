@@ -21,6 +21,11 @@ from pyspark.sql import functions as F
 from .sources.catalog import ParquetCatalog, fingerprint
 
 
+def graph_snapshot(input_fp: str) -> str:
+    """The snapshot id ``write_graph`` commits the graph of ``input_fp`` as."""
+    return fingerprint("graph", input_fp)
+
+
 def write_graph(
     catalog: ParquetCatalog,
     nodes: DataFrame,
@@ -28,21 +33,22 @@ def write_graph(
     input_fp: str,
     images: DataFrame | None = None,
 ) -> dict[str, str]:
-    """Sorted snapshot writes; returns table → snapshot id."""
-    out = {}
-    snap = fingerprint("graph", input_fp)
-    catalog.write(nodes.orderBy("name"), "nodes", snap, meta={"input": input_fp})
-    out["nodes"] = snap
-    # reference sorts relations by source+target concatenation (pipe.py:99-100)
-    catalog.write(
-        edges.orderBy(F.concat_ws("", "source", "target")),
-        "edges", snap, meta={"input": input_fp},
-    )
-    out["edges"] = snap
+    """Sorted snapshot writes, committed together; returns table →
+    snapshot id.
+
+    ``ParquetCatalog.write_all`` lands every table's data before any
+    manifest, so a failed write leaves each table's latest snapshot as it
+    was."""
+    snap = graph_snapshot(input_fp)
+    writes = [
+        (nodes.orderBy("name"), "nodes"),
+        # reference sorts relations by source+target concatenation (pipe.py:99-100)
+        (edges.orderBy(F.concat_ws("", "source", "target")), "edges"),
+    ]
     if images is not None:
-        catalog.write(images.orderBy("path"), "images", snap, meta={"input": input_fp})
-        out["images"] = snap
-    return out
+        writes.append((images.orderBy("path"), "images"))
+    catalog.write_all(writes, snap, meta={"input": input_fp})
+    return {table: snap for _, table in writes}
 
 
 def entity_json(nodes: DataFrame):

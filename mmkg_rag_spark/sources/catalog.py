@@ -119,10 +119,12 @@ class ParquetCatalog:
         """Multi-table snapshot commit: all data lands before any manifest.
 
         Pairing with an all-tables ``has_snapshot`` check gives crash-safe
-        idempotence for multi-table stages (streaming nodes+edges): a crash
-        between the two manifest commits leaves at most a prefix committed;
-        the replay sees a missing member and recomputes, and the data
-        rewrite is overwrite-idempotent (ADVICE r1: no lost-edges window).
+        idempotence for multi-table stages (a fold's nodes+edges,
+        ``sinks.write_graph``'s nodes+edges+images): a failed data write
+        commits no manifest, and a crash between manifest commits leaves
+        at most a prefix committed; the replay sees a missing member and
+        recomputes, and the data rewrite is overwrite-idempotent (ADVICE
+        r1: no lost-edges window).
         """
         paths: dict[str, str] = {}
         for df, table in writes:

@@ -23,6 +23,7 @@ ENTRY = [
     "session",
     "metrics",
     "kernels.refpipeline",
+    "run",
 ]
 
 # used by the analytics side of the package, never by build/fold/query

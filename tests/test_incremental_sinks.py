@@ -94,6 +94,30 @@ def test_incremental_bridging_merge(spark):
     }
 
 
+def test_write_graph_failed_write_commits_nothing(spark, tmp_path):
+    """write_graph lands every table's data before any manifest: when the
+    images write raises, no table's latest snapshot changes."""
+    from mmkg_rag_spark.sinks import write_graph
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+
+    em, rm = _mentions(spark, 0, 10)
+    nodes, mapping = canonicalize_entities(em)
+    edges = remap_and_merge_relations(rm, mapping)
+    images = spark.createDataFrame([("a.png", "cap")], "path string, caption string")
+
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    write_graph(cat, nodes, edges, "first", images)
+    tables = ("nodes", "edges", "images")
+    before = {t: cat.snapshots(t) for t in tables}
+
+    failing = images.withColumn(
+        "caption", F.raise_error(F.lit("images write failed")).cast("string")
+    )
+    with pytest.raises(Exception, match="images write failed"):
+        write_graph(cat, nodes, edges, "second", failing)
+    assert {t: cat.snapshots(t) for t in tables} == before
+
+
 def test_sinks_roundtrip_and_eris_schema(spark, tmp_path):
     from mmkg_rag_spark.sinks import export_eris_jsonl, write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog

@@ -286,9 +286,7 @@ def test_build_kg_graph_parity(spark, tmp_path_factory):
     cat = ParquetCatalog(spark, str(tmp_path_factory.mktemp("kg")))
     manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
     r = build_kg(spark, gen_pages_df(spark, 12), manifest)
-    edges = r.edges.unionByName(
-        r.image_edges.withColumn("chunks", F.array().cast("array<int>")))
-    write_graph(cat, r.nodes, edges, "kg", r.images)
+    write_graph(cat, r.nodes, r.all_edges, "kg", r.images)
     graph = cat.read("nodes"), cat.read("edges"), cat.read("images")
     names = sorted(row.name for row in graph[0].select("name").collect())
     _assert_parity(*graph, [

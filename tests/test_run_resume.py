@@ -13,12 +13,35 @@ from contextlib import redirect_stdout
 
 import pytest
 
+from mmkg_rag_spark.sources.catalog import ParquetCatalog
+from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
+
 
 @pytest.fixture(scope="module")
 def spark():
     from mmkg_rag_spark.session import get_spark
 
     yield get_spark(master="local[4]", shuffle_partitions=8, app_name="pytest-run")
+
+
+def _full_rows(df):
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+def _build_kg_catalog(spark, wh, n_docs):
+    """A warehouse holding build_kg + write_graph over ``n_docs`` generated
+    pages, with run.py's image manifest."""
+    from mmkg_rag_spark.pipeline import build_kg
+    from mmkg_rag_spark.sinks import write_graph
+
+    cat = ParquetCatalog(spark, wh)
+    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
+    r = build_kg(spark, gen_pages_df(spark, n_docs), manifest)
+    write_graph(cat, r.nodes, r.all_edges, "kg", r.images)
+    return cat
 
 
 def test_staged_run_resumes(spark, tmp_path_factory):
@@ -49,35 +72,42 @@ def test_staged_run_resumes(spark, tmp_path_factory):
     assert "[resume] pages" in third  # same input ⇒ reused
     assert "[run   ] mentions" in third  # new chunking params ⇒ recomputed
 
-
-    # stage 5 links the image instances of the stored artifacts snapshot:
-    # the same image edges as a one-shot build over the same pages
-    from mmkg_rag_spark.pipeline import build_kg
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
-    from mmkg_rag_spark.sources.pages import gen_pages_df, image_manifest
-
-    def edge_rows(df):
-        return sorted(
-            (
-                tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                for r in df.select(
-                    "source", "label", "target", "description", "references"
-                ).collect()
-            ),
-            key=repr,
-        )
-
+    # the runner's graph stage stores what build_kg + write_graph store
+    # over the same pages: nodes, edges (image edges included) and images
     cat = ParquetCatalog(spark, wh)
-    staged = cat.read("image_edges", cat.snapshots("image_edges")[0]["id"])
-    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
-    built = build_kg(spark, gen_pages_df(spark, 30, 42), manifest).image_edges
-    assert edge_rows(staged) == edge_rows(built) and staged.count() > 0
+    snap = cat.snapshots("nodes")[0]["id"]
+    kg = _build_kg_catalog(spark, str(tmp_path_factory.mktemp("wh_kg")), 30)
+    for table in ("nodes", "edges", "images"):
+        assert _full_rows(cat.read(table, snap)) == _full_rows(kg.read(table)), table
+    assert cat.read("images", snap).count() > 0
+
+
+def test_fold_into_runner_warehouse_equals_build_kg(spark, tmp_path_factory):
+    """A fold into the warehouse run.py built commits the same nodes and
+    edges, every column, as the same fold into a build_kg + write_graph
+    warehouse; every node label is one the extractor emits."""
+    from mmkg_rag_spark.kernels.mockllm import LABEL_PHRASES
+    from mmkg_rag_spark.run import main
+    from mmkg_rag_spark.streaming import process_pages_batch
+
+    wh = str(tmp_path_factory.mktemp("wh_fold_run"))
+    with redirect_stdout(io.StringIO()):
+        assert main(["--n-docs", "30", "--warehouse", wh, "--master", "local[4]"]) == 0
+    runner = ParquetCatalog(spark, wh)
+    kg = _build_kg_catalog(spark, str(tmp_path_factory.mktemp("wh_fold_kg")), 30)
+
+    batch = gen_pages_df(spark, 10, seed=7)
+    for cat in (runner, kg):
+        process_pages_batch(spark, cat, batch, batch_id=0)
+    for table in ("nodes", "edges"):
+        assert _full_rows(runner.read(table)) == _full_rows(kg.read(table)), table
+    labels = {r.label for r in runner.read("nodes").select("label").distinct().collect()}
+    assert labels and labels <= set(LABEL_PHRASES.values())
 
 
 def test_partial_failure_resumes_midway(spark, tmp_path_factory):
     """Simulate a crash after stage 2: later stages compute, earlier resume."""
     from mmkg_rag_spark.run import main
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
 
     wh = str(tmp_path_factory.mktemp("wh2"))
     args = ["--n-docs", "20", "--warehouse", wh, "--master", "local[4]"]
@@ -118,7 +148,7 @@ def test_metrics_lineage_rows(spark, tmp_path_factory):
     m = read_metrics(spark, wh)
     rows = m.collect()
     stages = {r.stage for r in rows}
-    assert {"pages", "mentions", "nodes", "edges", "image_edges"} <= stages
+    assert {"pages", "mentions", "nodes", "edges", "images"} <= stages
     assert all(r.rows >= 0 and r.wall_ms >= 0 and r.file for r in rows)
     # lineage chain: mentions' input snapshot is pages' snapshot
     pages_snap = next(r.snapshot for r in rows if r.stage == "pages")
@@ -135,7 +165,7 @@ def test_metrics_lineage_rows(spark, tmp_path_factory):
 
 
 def test_catalog_manifest_roundtrip(spark, tmp_path_factory):
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog, fingerprint
+    from mmkg_rag_spark.sources.catalog import fingerprint
 
     wh = str(tmp_path_factory.mktemp("wh4"))
     cat = ParquetCatalog(spark, wh)
