@@ -23,7 +23,7 @@ Package layout:
     pipeline.py   one-shot build (build_kg)
     streaming.py  fold of page micro-batches into the stored graph
                   (process_pages_batch) and its stream driver (stream_build)
-    sinks.py      graph snapshot writes and exports
+    sinks.py      graph snapshot writes (the catalog tables are the store)
     run.py        staged resumable runner
     metrics.py    per-stage lineage rows and scoring-throughput counters
 """

@@ -289,19 +289,6 @@ def win_rate_statistics(results: list[dict]) -> dict[str, dict[str, int]]:
     return statistics
 
 
-def winner_explanations(results: list[dict]) -> dict[str, str]:
-    """Concatenate judge explanations per winning method (reference
-    tests/evaluation/snippets.py:23-39 — the word-cloud prep step): the
-    returned {'s': ..., 'm': ...} blobs are what the reference writes to
-    s_text.txt / m_text.txt."""
-    out = {"s": "", "m": ""}
-    for q in results:
-        for m in q["metrics"]:
-            if m["winner"] in out:
-                out[m["winner"]] += m["explanation"]
-    return out
-
-
 def evaluate(
     dataset_desc: str,
     nodes: DataFrame,

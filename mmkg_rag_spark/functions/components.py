@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 
 # rounds of the distributed min-label loop before it gives up
 MAX_ITER = 25
+# edge lists up to this many rows take the driver union-find (0 forces the
+# distributed loop)
+COLLECT_THRESHOLD = 1_000_000
 
 
 def union_find_local(pairs: list[tuple]) -> dict:
@@ -49,7 +52,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    collect_threshold: int = 1_000_000,
     out_info: dict | None = None,
 ) -> DataFrame:
     """Return DataFrame(id, component) for every vertex appearing in edges.
@@ -61,7 +63,7 @@ def connected_components(
     Physical strategy is adaptive, like Spark's broadcast-join selection:
     the edge list is the *similarity graph* — orders of magnitude smaller
     than the corpus — so when it fits comfortably on the driver
-    (≤ ``collect_threshold`` edges) a local union-find replaces the
+    (≤ ``COLLECT_THRESHOLD`` edges) a local union-find replaces the
     O(diameter)-iteration distributed loop, eliminating ~10 serial shuffle
     jobs whose latency would otherwise be a fixed (Amdahl) cost at every
     scale. Above the threshold the iterative min-label loop runs — that is
@@ -77,8 +79,8 @@ def connected_components(
     # ONE bounded job decides the strategy: limit(threshold+1) short-circuits,
     # so the decision never materializes a huge graph just to count it
     # (count() would), and when the graph is small the same rows ARE the data.
-    probe = edges.select(src, dst).limit(collect_threshold + 1).collect()
-    if len(probe) <= collect_threshold:
+    probe = edges.select(src, dst).limit(COLLECT_THRESHOLD + 1).collect()
+    if len(probe) <= COLLECT_THRESHOLD:
         pairs = [(r[0], r[1]) for r in probe]
         spark = edges.sparkSession
         schema_t = dict(edges.dtypes)[src]

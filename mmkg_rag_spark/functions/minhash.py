@@ -191,10 +191,3 @@ def lsh_candidate_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-def jaccard(set_a: Column, set_b: Column) -> Column:
-    """Exact Jaccard similarity of two array columns (native)."""
-    inter = F.size(F.array_intersect(set_a, set_b))
-    union = F.size(F.array_union(set_a, set_b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)

@@ -132,64 +132,6 @@ def parse_alias(text: str) -> list[tuple[str, list[str]]]:
     return out
 
 
-def parse_merged_entity(text: str) -> tuple[bool, Entity | None]:
-    """Parse the entity-merge LLM verdict ``{"same_entity": ..., "entity": {...}}``.
-
-    Parity with ``parse_merged_e`` (parser.py:175-208): first object carrying a
-    ``same_entity`` key decides; missing/false → (False, None).
-    """
-    for m in _GREEDY_JSON_OBJ.finditer(text):
-        try:
-            data = json.loads(m.group(0))
-        except (json.JSONDecodeError, ValueError):
-            continue
-        if not isinstance(data, dict) or "same_entity" not in data:
-            continue
-        if not data["same_entity"]:
-            return False, None
-        e = data.get("entity") or {}
-        return True, Entity(
-            name=e.get("name", ""),
-            label=e.get("label", ""),
-            description=e.get("description", ""),
-            aliases=e.get("aliases", []),
-            references=e.get("references", []),
-        )
-    return False, None
-
-
-def parse_merged_relations(text: str) -> tuple[bool, list[Relation]]:
-    """Parse the relation-merge LLM verdict.
-
-    Parity with ``parse_merged_r`` (parser.py:211-246) including the quirk that
-    a falsy ``same_relationship`` short-circuits to (False, []) while a missing
-    key just skips the match, and overall success is reported once the scan
-    completes.
-    """
-    merged: list[Relation] = []
-    for m in _GREEDY_JSON_OBJ.finditer(text):
-        try:
-            data = json.loads(m.group(0))
-        except (json.JSONDecodeError, ValueError):
-            continue
-        if not isinstance(data, dict) or "same_relationship" not in data:
-            continue
-        if data["same_relationship"] and "relationship" in data:
-            r = data["relationship"]
-            merged.append(
-                Relation(
-                    source=r.get("source", ""),
-                    label=r.get("label", ""),
-                    target=r.get("target", ""),
-                    description=r.get("description", ""),
-                    references=r.get("references", []),
-                )
-            )
-        else:
-            return False, []
-    return True, merged
-
-
 def parse_image_description(text: str) -> tuple[str, list, str]:
     """Parse ``{caption, text_snippets, description}`` with empty defaults.
 

@@ -101,13 +101,6 @@ def pair_similarity(s1: str, s2: str) -> float:
     return token_sort_ratio(s1.upper(), s2.upper()) / 100.0
 
 
-def list_max_token_ratio(keywords: list[str], fields: list[str]) -> float:
-    """Retrieval score: max token_ratio over keyword×field (search.py:66-72)."""
-    if not keywords or not fields:
-        return 0.0
-    return max(token_ratio(k, f) for k in keywords for f in fields)
-
-
 def avg_pair_similarity(list1: list[str], list2: list[str]) -> float:
     """Mean pairwise ``pair_similarity`` (mmodal.py:179-187)."""
     if not list1 or not list2:

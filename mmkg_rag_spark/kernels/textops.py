@@ -118,36 +118,3 @@ def relation_pair_key(source: str, target: str) -> tuple[str, str]:
     """
     a, b = sorted([source, target])
     return a.upper(), b.upper()
-
-
-def rename_markdown_images_text(
-    text: str, base_name: str
-) -> tuple[str, list[tuple[str, str]]]:
-    """Ingestion-time image-ref normalization (utils/helper.py:150-183).
-
-    Rewrites every markdown image ref in document order to
-    ``<base_name>_<i>.<ext>`` (counter starts at 0; alt text dropped —
-    the reference emits ``![](...)``) and returns the rewritten text plus
-    the (old_path, new_path) rename plan. The reference renames files on
-    disk as a side effect; here the plan is data (an assets-manifest remap
-    table) — the engine applies it with a join, not filesystem calls.
-    """
-    import re as _re
-
-    counter = 0
-    plan: list[tuple[str, str]] = []
-
-    def _sub(m: "_re.Match[str]") -> str:
-        nonlocal counter
-        full_path = m.group(1)
-        folder, _ = full_path.rsplit("/", 1) if "/" in full_path else ("", full_path)
-        folder = folder + "/" if folder else ""
-        ext = full_path.split(".")[-1]
-        new_name = f"{base_name}_{counter}.{ext}"
-        counter += 1
-        plan.append((full_path, f"{folder}{new_name}"))
-        return f"![]({folder}{new_name})"
-
-    # same (greedy) pattern as the reference, helper.py:178
-    new_text = _re.sub(r"\!\[.*\]\((.+)\)", _sub, text)
-    return new_text, plan

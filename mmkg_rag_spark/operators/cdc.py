@@ -8,7 +8,8 @@ recrawls append new (url, warc_ts) rows, so "latest snapshot per url" is
 the first stage of any incremental build):
 
 - ``latest_snapshot``  : one surviving row per key — the newest by a caller-
-  supplied total order. ONE shuffle, implemented as a map-side-combinable
+  supplied total order; the KG path's step 0 (``pipeline.
+  dedup_pages_latest``). ONE shuffle, implemented as a map-side-combinable
   ``max(struct(order..., payload))`` aggregate, NOT a window: a window
   row_number materializes and sorts every version of every key on the
   reducer, while the struct-max collapses versions to one row per key in
@@ -88,40 +89,3 @@ def scd2_intervals(
         nxt if current_sentinel is None else F.coalesce(nxt, current_sentinel),
     )
     return out.withColumn("is_current", F.col("valid_to").isNull() if current_sentinel is None else F.col("valid_to") == current_sentinel)
-
-
-def merge_snapshot(
-    target: DataFrame,
-    changes: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    payload_cols: list[str] | None = None,
-    tombstone_col: str | None = None,
-) -> DataFrame:
-    """MERGE a change batch into a latest-snapshot table (the Delta/Iceberg
-    ``MERGE INTO`` upsert, expressed algebraically).
-
-    ``latest_snapshot(target ∪ changes)`` IS the merge: inserts appear
-    (new keys), updates win (newer order), stale re-deliveries lose
-    (older order) — so the fold is **idempotent** (max is) and
-    **associative** (merging batch A then B ≡ merging A∪B), which is
-    exactly the property that makes exactly-once snapshot commits cheap:
-    a re-delivered micro-batch folds to the identical table, no
-    read-modify-write bookkeeping.
-
-    Deletes ride as tombstones: if ``tombstone_col`` is given (boolean,
-    true = delete), a key whose LATEST version is a tombstone drops out of
-    the snapshot — but only after winning the order race, so a late
-    out-of-order delete older than the current row correctly loses.
-
-    One shuffle on the keys, map-side partial combine, no window sort —
-    same plan as latest_snapshot because it is latest_snapshot.
-    """
-    merged = latest_snapshot(
-        target.unionByName(changes), key_cols, order_cols, payload_cols
-    )
-    if tombstone_col is not None:
-        merged = merged.filter(
-            ~F.coalesce(F.col(tombstone_col), F.lit(False))
-        ).drop(tombstone_col)
-    return merged

@@ -45,6 +45,10 @@ MERGED_ENTITY_SCHEMA = (
 )
 
 _SEP = "\x1f"
+# distinct name norms up to this many take similarity_edges' driver pairwise
+# pass (≤ ~45k ratio calls); above it, MinHash-LSH + the verify UDF (0 forces
+# the LSH path)
+PAIRWISE_THRESHOLD = 300
 
 
 def _norm_expr(col):
@@ -69,10 +73,7 @@ def collapse_exact(entity_mentions: DataFrame) -> DataFrame:
     )
 
 
-def similarity_edges(
-    units: DataFrame,
-    pairwise_threshold: int = 300,
-) -> DataFrame:
+def similarity_edges(units: DataFrame) -> DataFrame:
     """Stages 2-4: uid pairs whose any-name/alias similarity ≥ DEDUP_SIMILARITY."""
     strings = units.select(
         "uid",
@@ -96,14 +97,14 @@ def similarity_edges(
     # fuzzy: candidate pairs over DISTINCT norms + exact indel-ratio check (D1).
     # Adaptive physical strategy: the distinct-norm set is the *entity
     # vocabulary*, vastly smaller than the mention stream. When it fits a
-    # driver-side pairwise pass (≤ pairwise_threshold strings ⇒ ≤ ~45k ratio
+    # driver-side pairwise pass (≤ PAIRWISE_THRESHOLD strings ⇒ ≤ ~45k ratio
     # calls) that beats the LSH machinery's ~6 fixed shuffle jobs; above it,
     # MinHash-LSH banding + a vectorized re-check UDF is the 10^12-row path.
     norms = strings.select("norm").distinct()
     # one bounded job decides the strategy AND fetches the data when small
     # (limit short-circuits; a count() would materialize the whole distinct)
-    probe = norms.limit(pairwise_threshold + 1).collect()
-    if len(probe) <= pairwise_threshold:
+    probe = norms.limit(PAIRWISE_THRESHOLD + 1).collect()
+    if len(probe) <= PAIRWISE_THRESHOLD:
         import time as _time
 
         from ..kernels.similarity import ratio as _ratio_fn
@@ -167,20 +168,15 @@ def similarity_edges(
     return exact.unionByName(fuzzy).dropDuplicates(["src", "dst"])
 
 
-def canonicalize_entities(
-    entity_mentions: DataFrame,
-    pairwise_threshold: int = 300,
-    cc_collect_threshold: int = 1_000_000,
-) -> tuple[DataFrame, DataFrame]:
+def canonicalize_entities(entity_mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full D-phase for entities → (merged_entities, name→canonical mapping).
 
-    The two thresholds select the physical strategy for the similarity pass
-    and the component computation (driver-side below, distributed above);
-    set them to 0 to force the distributed path (the scale tests do).
+    ``PAIRWISE_THRESHOLD`` and ``components.COLLECT_THRESHOLD`` select the
+    physical strategy for the similarity pass and the component computation
+    (driver-side below, distributed above); the scale tests set them to 0
+    to force the distributed path.
     """
-    return canonicalize_units(
-        collapse_exact(entity_mentions), pairwise_threshold, cc_collect_threshold
-    )
+    return canonicalize_units(collapse_exact(entity_mentions))
 
 
 def nodes_as_units(nodes: DataFrame) -> DataFrame:
@@ -216,22 +212,15 @@ def merge_unit_tables(*unit_tables: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize_units(
-    units: DataFrame,
-    pairwise_threshold: int = 300,
-    cc_collect_threshold: int = 1_000_000,
-) -> tuple[DataFrame, DataFrame]:
+def canonicalize_units(units: DataFrame) -> tuple[DataFrame, DataFrame]:
     """D-phase from pre-collapsed units (shared by batch + incremental paths)."""
     # units feeds three consumers (similarity edges, merge, mapping) and the
     # CC loop forces several actions — cache to avoid re-aggregating mentions.
     units = units.cache()
-    edges = similarity_edges(units, pairwise_threshold)
+    edges = similarity_edges(units)
     cc_info: dict = {}
-    comp = connected_components(
-        edges, src="src", dst="dst", collect_threshold=cc_collect_threshold,
-        out_info=cc_info,
-    )
-    # driver-path component tables are ≤ cc_collect_threshold rows by
+    comp = connected_components(edges, src="src", dst="dst", out_info=cc_info)
+    # driver-path component tables are ≤ COLLECT_THRESHOLD rows by
     # construction — broadcast them so the units join is map-side (AQE could
     # only discover this after materializing both shuffle sides)
     comp_r = comp.withColumnRenamed("id", "uid")
@@ -277,7 +266,7 @@ def canonicalize_units(
     merged = merged.cache()
     canon = merged.select(F.col("component"), F.col("name").alias("canonical"))
     if cc_info.get("driver_path"):
-        # |merged with component| ≤ |CC vertices| ≤ cc_collect_threshold:
+        # |merged with component| ≤ |CC vertices| ≤ COLLECT_THRESHOLD:
         # broadcast the 2-col canonical dictionary, skipping two exchanges
         canon = F.broadcast(canon)
     mapping = (

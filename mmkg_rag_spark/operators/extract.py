@@ -26,9 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.chunker import split_markdown
-from ..kernels.refpipeline import extract_chunk
+from ..kernels.parsers import parse_er
 from ..kernels.records import Chunk
+from ..kernels.refpipeline import extract_chunk_from_responses
 from ..kernels.textops import extract_images_with_context
+from ..llm import INDEX_PROMPT, LOOP_PROMPT, MockExtractor
 from ..sources.pages import html_to_text
 
 CHUNK_SCHEMA = "url string, chunk_id int, text string"
@@ -66,17 +68,9 @@ def chunk_pages(
 def _extract_chunks(chunks: list[Chunk], extractor, loop: int) -> list[tuple]:
     """Per-chunk (entities, relations) for one Arrow batch of chunks.
 
-    ``extractor`` None = the deterministic mock kernel; otherwise every
-    model call (index, gleaning rounds, continuation, alias) is batched
-    over the whole list.
+    Every model call (index, gleaning rounds, continuation, alias) is
+    batched over the whole list.
     """
-    if extractor is None:
-        return [extract_chunk(c) for c in chunks]
-
-    from ..kernels.parsers import parse_er as _parse_er
-    from ..kernels.refpipeline import extract_chunk_from_responses
-    from ..llm import INDEX_PROMPT, LOOP_PROMPT
-
     texts = [c.text for c in chunks]
     index_texts = extractor.index(texts)
     responses: list[list[str]] = [[ix] for ix in index_texts]
@@ -104,7 +98,7 @@ def _extract_chunks(chunks: list[Chunk], extractor, loop: int) -> list[tuple]:
             cont = extractor.should_continue([histories[i] for i in active])
             # reference text.py:129: break when "NO" in answer
             active = [i for i, c in zip(active, cont) if "NO" not in c.upper()]
-    names = [[e.name for resp in rs for e in _parse_er(resp)[0]] for rs in responses]
+    names = [[e.name for resp in rs for e in parse_er(resp)[0]] for rs in responses]
     alias_texts = extractor.alias(texts, names)
     return [
         extract_chunk_from_responses(c, rs, al)
@@ -130,7 +124,7 @@ def _er_rows(urls, chunks: list[Chunk], results: list[tuple]) -> list[tuple]:
 
 
 def extract_mentions(
-    chunks: DataFrame, extractor_factory=None, loop: int = 1
+    chunks: DataFrame, extractor_factory=MockExtractor, loop: int = 1
 ) -> DataFrame:
     """chunks → union mention table (kind 'E' | 'R'); map-only, one model pass.
 
@@ -141,8 +135,8 @@ def extract_mentions(
 
     ``extractor_factory``: picklable zero-arg callable building an
     ``mmkg_rag_spark.llm`` Extractor per python worker (e.g.
-    ``lambda: EndpointExtractor(base_url=..., ...)``). Default None = the
-    deterministic mock kernel path (hermetic, fastest).
+    ``lambda: EndpointExtractor(base_url=..., ...)``). The default is the
+    deterministic mock model (hermetic, fastest).
 
     ``loop``: gleaning rounds (reference text.py:97-130, default 1 = none).
     Each extra round re-prompts with the conversation history, extends the
@@ -152,7 +146,7 @@ def extract_mentions(
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extractor = extractor_factory() if extractor_factory is not None else None
+        extractor = extractor_factory()
         for pdf in batches:
             chunk_objs = [
                 Chunk(id=int(cid), text=t)
@@ -179,42 +173,13 @@ def split_mentions(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
     return entity_mentions, relation_mentions
 
 
-NORMALIZED_SCHEMA = (
-    "url string, text string, renames array<struct<old:string, new:string>>"
-)
-
-
-def normalize_image_refs(pages: DataFrame) -> DataFrame:
-    """Ingestion-time image-ref normalization (helper.py:150-183, §2.7).
-
-    Rewrites markdown image refs to ``<md5(url)>_<i>.<ext>`` per document and
-    carries the (old,new) rename plan as data — downstream the plan joins
-    against the assets manifest instead of renaming files imperatively.
-    Map-only; deterministic per url.
-    """
-    from ..kernels.textops import md5 as _md5
-    from ..kernels.textops import rename_markdown_images_text
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, texts, plans = [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                new_text, plan = rename_markdown_images_text(text, _md5(url)[:12])
-                urls.append(url)
-                texts.append(new_text)
-                plans.append([{"old": o, "new": n} for o, n in plan])
-            yield pd.DataFrame({"url": urls, "text": texts, "renames": plans})
-
-    return pages.select("url", "text").mapInPandas(gen, schema=NORMALIZED_SCHEMA)
-
-
 def extract_page_artifacts(
     pages: DataFrame,
     chunk_size: int = 8000,
     overlap: int = 400,
     *,
     use_html: bool = True,
-    extractor_factory=None,
+    extractor_factory=MockExtractor,
     loop: int = 1,
 ) -> DataFrame:
     """S2+S3+E1+M1 in ONE ``mapInPandas`` pass: html→text (``use_html``;
@@ -239,7 +204,7 @@ def extract_page_artifacts(
     src_col = "html" if use_html else "text"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        extractor = extractor_factory() if extractor_factory is not None else None
+        extractor = extractor_factory()
         for pdf in batches:
             rows: list[tuple] = []
             urls: list[str] = []

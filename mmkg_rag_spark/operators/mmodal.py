@@ -16,7 +16,8 @@ Scale design:
     to (token, id) with a SALT column on the skewed token side (head
     entities/stopword captions), join on token, dedupe pairs, then score.
     This is the 100 TB path: candidate count ∝ shared-token pairs, not |I|·|E|.
-  ``auto`` picks broadcast under a size threshold, else blocked.
+  ``score_image_entities`` picks broadcast under the size bounds below,
+  else blocked.
 - Top-8 via Window(partitionBy image instance, orderBy score desc, name) —
   the deterministic tie rule shared with the replica oracle.
 """
@@ -34,10 +35,13 @@ from ..kernels.textops import VALID_IMAGE_SUFFIXES
 
 IMAGE_CANDIDATE_CAP = 8  # mmodal.py:69-71
 IMAGE_MIN_RELEVANCE = 0.1  # mmodal.py:223
-# ``auto`` strategy switches of score_image_entities: entity rows that can
-# still broadcast, and scored (image × entity) pairs the cross product may cost
+# score_image_entities' strategy switches: entity rows that can still
+# broadcast, and scored (image × entity) pairs the cross product may cost
+# (−1 forces the blocked path)
 BROADCAST_LIMIT = 2_000_000
 PAIR_LIMIT = 500_000
+# sub-keys per image token on the blocked path's salted join
+SALT_BUCKETS = 16
 
 
 def filter_valid_images(instances: DataFrame, manifest: DataFrame) -> DataFrame:
@@ -109,16 +113,10 @@ def _entity_terms(entities: DataFrame) -> DataFrame:
     )
 
 
-def score_image_entities(
-    images: DataFrame,
-    entities: DataFrame,
-    strategy: str = "auto",
-    salt_buckets: int = 16,
-    candidate_cap: int = IMAGE_CANDIDATE_CAP,
-) -> DataFrame:
+def score_image_entities(images: DataFrame, entities: DataFrame) -> DataFrame:
     """M4: relevance-scored (image instance × entity) pairs ≥ 0.1, top-8/image.
 
-    ``auto`` picks on BOTH axes: blocked when the entity table can't
+    The strategy is picked on BOTH axes: blocked when the entity table can't
     broadcast, AND when the cross-product |images|·|entities| would push
     more than ``PAIR_LIMIT`` pairs through the relevance UDF — the UDF is
     the cost, not the join, so a broadcastable entity table can still lose
@@ -126,27 +124,20 @@ def score_image_entities(
     the documented scale approximation (not exact): char-level indel
     similarity can lift token-disjoint pairs to ~0.3-0.45, and those are
     pruned; every ≥0.5 pair survives (tests/test_mmodal_strategies.py).
-    Callers needing reference-exact cross-product semantics pass
-    ``strategy="broadcast"`` explicitly.
+    Below both bounds the broadcast cross product gives reference-exact
+    semantics.
     """
     ents = _entity_terms(entities)
     imgs = images.filter(
         (F.coalesce(F.size("texts"), F.lit(0)) > 0) | (F.col("caption") != "")
     )
 
-    if strategy == "auto":
-        n = ents.limit(BROADCAST_LIMIT + 1).count()
-        if n > BROADCAST_LIMIT:
-            strategy = "blocked"
-        else:
-            n_imgs = imgs.count()
-            strategy = "broadcast" if n * n_imgs <= PAIR_LIMIT else "blocked"
-
-    if strategy == "broadcast":
+    n = ents.limit(BROADCAST_LIMIT + 1).count()
+    if n <= BROADCAST_LIMIT and n * imgs.count() <= PAIR_LIMIT:
         pairs = imgs.crossJoin(F.broadcast(ents))
     else:
         # token-overlap blocking with salt on the (skewed) image-token side:
-        # every (token) key is split into salt_buckets sub-keys; the entity
+        # every (token) key is split into SALT_BUCKETS sub-keys; the entity
         # side is replicated per bucket — classic salted join (north star).
         tok = lambda c: F.filter(  # noqa: E731
             F.split(F.upper(c), r"[^0-9A-ZÀ-ÖØ-Þ]+"), lambda t: t != ""
@@ -161,13 +152,13 @@ def score_image_entities(
                     )
                 )
             ).alias("token"),
-        ).withColumn("salt", F.pmod(F.xxhash64("url", "path"), F.lit(salt_buckets)))
+        ).withColumn("salt", F.pmod(F.xxhash64("url", "path"), F.lit(SALT_BUCKETS)))
         ent_tokens = (
             ents.select("entity", F.explode(F.array_distinct(F.flatten(F.transform("terms", tok)))).alias("token"))
-            # light side replicated ×salt_buckets (classic salted-join shape)
+            # light side replicated ×SALT_BUCKETS (classic salted-join shape)
             .withColumn(
                 "salt",
-                F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
+                F.explode(F.array(*[F.lit(i) for i in range(SALT_BUCKETS)])),
             )
             .select("entity", "token", F.col("salt").cast("bigint"))
         )
@@ -190,7 +181,7 @@ def score_image_entities(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= candidate_cap)
+        .filter(F.col("rank") <= IMAGE_CANDIDATE_CAP)
         .select("url", "path", "context", "caption", "entity", "score", "rank")
     )
 

@@ -48,6 +48,7 @@ def aqe_size_coalesce(spark: SparkSession):
     finally:
         spark.conf.set(key, old)
 
+from .llm import MockExtractor
 from .operators.dedup import canonicalize_entities, remap_and_merge_relations
 from .operators.extract import (
     extract_page_artifacts,
@@ -63,16 +64,15 @@ from .operators.mmodal import (
 )
 
 
-def dedup_pages_latest(pages: DataFrame, canonical_url: bool = True) -> DataFrame:
+def dedup_pages_latest(pages: DataFrame) -> DataFrame:
     """Latest-version-per-page compaction — step 0 of building over a
     recrawled page store.
 
     A Common-Crawl-style table carries every fetch of every page; the KG
-    build wants one row per page, the newest. With ``canonical_url=True``
-    the page identity is the CANONICAL url (``functions/urls``:
-    scheme/host case, ``www.``, default ports, trailing slash, ``utm_*``
-    params, param order, fragments all collapse), so re-spellings of the
-    same page dedup together — otherwise raw ``url`` string equality.
+    build wants one row per page, the newest. The page identity is the
+    CANONICAL url (``functions/urls``: scheme/host case, ``www.``, default
+    ports, trailing slash, ``utm_*`` params, param order, fragments all
+    collapse), so re-spellings of the same page dedup together.
 
     One map-side-combinable ``max_by`` aggregate (operators/cdc.
     latest_snapshot): versions collapse BEFORE the shuffle, the single
@@ -84,11 +84,8 @@ def dedup_pages_latest(pages: DataFrame, canonical_url: bool = True) -> DataFram
     from .functions.urls import canonicalize_url
     from .operators.cdc import latest_snapshot
 
-    key = (
-        canonicalize_url(F.col("url")) if canonical_url else F.col("url")
-    )
     out = latest_snapshot(
-        pages.withColumn("canonical_url", key),
+        pages.withColumn("canonical_url", canonicalize_url(F.col("url"))),
         key_cols=["canonical_url"],
         order_cols=["warc_ts", "url"],
         payload_cols=["html", "text", "lang"],
@@ -116,7 +113,7 @@ def build_kg(
     chunk_size: int = 8000,
     overlap: int = 400,
     use_html: bool = True,
-    extractor_factory=None,
+    extractor_factory=MockExtractor,
     loop: int = 1,
 ) -> KGResult:
     """Run the full construction pipeline on a pages DataFrame.
@@ -128,8 +125,8 @@ def build_kg(
 
     ``extractor_factory``: picklable zero-arg callable building an
     ``mmkg_rag_spark.llm`` Extractor per python worker (e.g.
-    ``functools.partial(EndpointExtractor, base_url=...)``); None = the
-    hermetic mock kernel. ``loop`` = gleaning rounds (reference
+    ``functools.partial(EndpointExtractor, base_url=...)``); the default is
+    the hermetic mock model. ``loop`` = gleaning rounds (reference
     text.py:97-130). Both are forwarded to the extraction pass.
     """
     # Re-split under-partitioned inputs: per-page UDF cost varies ~50×
@@ -177,8 +174,8 @@ def graph_from_artifacts(
     entity_mentions, relation_mentions = split_mentions(artifacts)
     raw_instances = split_image_instances(artifacts)
 
+    # nodes is a projection of canonicalize_units' cached merge
     nodes, mapping = canonicalize_entities(entity_mentions)
-    nodes = nodes.cache()
     edges = remap_and_merge_relations(relation_mentions, mapping).cache()
 
     if manifest is None:
@@ -187,8 +184,8 @@ def graph_from_artifacts(
     described = describe_images(instances).cache()
     top = score_image_entities(described, nodes)
     # edges/image_edges each feed two consumers (their own output + the
-    # all_edges union consumed by degree/exports) — cache or the whole
-    # M-phase scoring join re-runs per downstream action.
+    # all_edges union) — cache or the whole M-phase scoring join re-runs
+    # per downstream action.
     image_edges = link_images(top).cache()
     images = images_table(described)
 

@@ -36,6 +36,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# ``compact``'s target data-file size: Spark's default read split
+# (spark.sql.files.maxPartitionBytes), so one compacted file is one scan task
+COMPACT_FILE_BYTES = 128 * 1024 * 1024
+
 
 def fingerprint(*parts: Any) -> str:
     """Deterministic 16-hex-char fingerprint of stage name + params + inputs."""
@@ -155,7 +159,7 @@ class ParquetCatalog:
     def snapshots(self, table: str) -> list[dict]:
         return self._load_manifest(table)
 
-    # -- maintenance (Iceberg rewrite_data_files / expire_snapshots) --------
+    # -- maintenance (Iceberg rewrite_data_files) ---------------------------
     def _data_files(self, path: str) -> list[str]:
         return [
             os.path.join(path, f)
@@ -163,19 +167,13 @@ class ParquetCatalog:
             if f.endswith(".parquet") and not f.startswith(".")
         ]
 
-    def compact(
-        self,
-        table: str,
-        snap: str | None = None,
-        *,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> dict:
+    def compact(self, table: str, snap: str | None = None) -> dict:
         """Small-file compaction — the ``rewrite_data_files`` maintenance
         action every long-running table needs: streaming commits and
         per-stage snapshots accumulate KB-sized files whose per-file open
         cost eventually dominates scans (at 100 TB a table of 10 MB files
         is 10^7 opens per query). Rewrites the snapshot's data into
-        ~``target_file_bytes`` files as a NEW snapshot; the source
+        ~``COMPACT_FILE_BYTES`` files as a NEW snapshot; the source
         snapshot stays readable (time travel preserved — compaction is a
         data-identical re-layout, never a destructive rewrite).
 
@@ -187,7 +185,7 @@ class ParquetCatalog:
         entry = self._entry(table, snap)
         files = self._data_files(entry["path"])
         total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, -(-total // target_file_bytes))
+        n_out = max(1, -(-total // COMPACT_FILE_BYTES))
         # already at or under the target file count (a one-file snapshot too)
         if len(files) <= n_out:
             return {
@@ -198,7 +196,7 @@ class ParquetCatalog:
                 "bytes": total,
                 "compacted": False,
             }
-        new_snap = fingerprint("compact", entry["id"], target_file_bytes)
+        new_snap = fingerprint("compact", entry["id"], COMPACT_FILE_BYTES)
         df = self.read(table, entry["id"]).coalesce(int(n_out))
         path = self.snapshot_dir(table, new_snap)
         df.write.mode("overwrite").parquet(path)
@@ -217,23 +215,3 @@ class ParquetCatalog:
             "bytes": total,
             "compacted": True,
         }
-
-    def expire_snapshots(self, table: str, *, keep_last: int = 2) -> list[str]:
-        """Drop all but the newest ``keep_last`` snapshots (manifest entry
-        AND data files) — the ``expire_snapshots`` maintenance action that
-        bounds storage growth of append-forever tables. NOTE: expired
-        fingerprints can no longer serve stage-resume hits; run this on
-        serving tables, not on in-flight pipeline stages."""
-        import shutil
-
-        manifest = self._load_manifest(table)
-        manifest.sort(key=lambda s: (s.get("seq", 0), s["ts"]))
-        keep = manifest[-keep_last:] if keep_last > 0 else []
-        expired = [s for s in manifest if s not in keep]
-        # commit the shrunk manifest FIRST (atomic), then delete data —
-        # a crash between the two leaves unreferenced dirs, never a
-        # manifest entry pointing at deleted data
-        self._save_manifest(table, keep)
-        for s in expired:
-            shutil.rmtree(s["path"], ignore_errors=True)
-        return [s["id"] for s in expired]

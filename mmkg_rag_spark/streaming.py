@@ -18,7 +18,11 @@ The graph tables stay Iceberg-semantics snapshots (sources/catalog.py), so a
 crashed stream resumes from the last committed snapshot AND the streaming
 checkpoint — exactly-once per micro-batch comes from the pairing of Spark's
 checkpoint (offsets) with the catalog's atomic manifest commit keyed by
-batch id (re-delivered batches hit an existing snapshot and skip).
+batch id (re-delivered batches hit an existing snapshot and skip). Each
+commit records the streaming query's id, which the checkpoint keeps across
+restarts; a batch whose snapshot another query committed (a fresh
+checkpoint on a used warehouse) raises instead of skipping pages it never
+folded.
 
 KG canonicalization needs no streaming operator state — it lives in the
 graph tables, which is what lets the stream resume from snapshots.
@@ -30,6 +34,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .llm import MockExtractor
 from .operators.extract import extract_page_artifacts, split_mentions
 from .operators.incremental import incremental_canonicalize
 from .sources.catalog import ParquetCatalog, fingerprint
@@ -43,24 +48,35 @@ def process_pages_batch(
     batch_id: int,
     chunk_size: int = 8000,
     overlap: int = 400,
-    extractor_factory=None,
+    extractor_factory=MockExtractor,
     loop: int = 1,
 ) -> dict[str, int]:
     """Fold one micro-batch of pages into the stored graph (idempotent).
 
     The snapshot id is the fingerprint of (stream, batch_id): a re-delivered
-    batch (restart replay) finds its snapshot committed and no-ops.
+    batch (restart replay) finds its snapshot committed and no-ops. Inside
+    ``foreachBatch`` the commit also records the streaming query id (None
+    outside a stream); a committed snapshot whose id differs means another
+    query folded this batch id, and the fold raises.
 
     ``extractor_factory``/``loop``: same contract as
     operators.extract.extract_page_artifacts — swap the mock for an
     endpoint client and/or enable gleaning rounds on the streaming path too.
     """
     snap = fingerprint("stream-batch", batch_id, chunk_size, overlap, loop)
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
     # Idempotence must check BOTH tables: a crash between the nodes and
     # edges manifest commits would otherwise make the replay skip the batch
     # and permanently drop its edges (ADVICE r1). write_all() below orders
     # data-before-manifest so at most a manifest prefix can be committed.
     if catalog.has_snapshot("nodes", snap) and catalog.has_snapshot("edges", snap):
+        committed = catalog._entry("nodes", snap).get("query_id")
+        if committed is not None and committed != query_id:
+            raise RuntimeError(
+                f"batch {batch_id} of streaming query {query_id} is already "
+                f"committed by query {committed}: a fresh checkpoint on this "
+                "warehouse would skip its pages"
+            )
         return {"batch_id": batch_id, "skipped": 1}
 
     t0 = time.time()
@@ -81,7 +97,8 @@ def process_pages_batch(
     nodes = nodes.localCheckpoint()
     edges = edges.localCheckpoint()
     paths = catalog.write_all(
-        [(nodes, "nodes"), (edges, "edges")], snap, meta={"batch_id": batch_id}
+        [(nodes, "nodes"), (edges, "edges")], snap,
+        meta={"batch_id": batch_id, "query_id": query_id},
     )
 
     from .metrics import record_stage
@@ -105,7 +122,7 @@ def stream_build(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int = 4,
-    extractor_factory=None,
+    extractor_factory=MockExtractor,
     loop: int = 1,
     source: str = "parquet",
 ):

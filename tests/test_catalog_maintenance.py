@@ -1,11 +1,10 @@
-"""Catalog maintenance actions: compaction (rewrite_data_files analog)
-and snapshot expiry (expire_snapshots analog) — the table-hygiene ops a
-long-running 100 TB pipeline needs between builds.
+"""Catalog maintenance: compaction (the rewrite_data_files analog), the
+table-hygiene op a long-running pipeline needs between builds, and the
+stored-schema read every snapshot gets.
 """
 
 from __future__ import annotations
 
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ def test_compact_reduces_files_data_identical(spark, tmp_path):
     before = cat._data_files(cat.snapshot_dir("t", "snapA"))
     assert len(before) == 40
 
-    stats = cat.compact("t", target_file_bytes=1 << 30)  # everything → 1 file
+    stats = cat.compact("t")  # KiB of data → 1 file
     assert stats["compacted"] is True
     assert stats["files_before"] == 40
     assert stats["files_after"] < 40
@@ -62,25 +61,11 @@ def test_compact_reduces_files_data_identical(spark, tmp_path):
 def test_compact_noop_when_already_compact(spark, tmp_path):
     cat = _cat(spark, tmp_path)
     cat.write(spark.range(100).coalesce(1), "t", "one")
-    stats = cat.compact("t", target_file_bytes=1 << 30)
+    stats = cat.compact("t")
     assert stats["compacted"] is False
     assert stats["files_before"] == stats["files_after"] == 1
     # no new snapshot was committed
     assert [s["id"] for s in cat.snapshots("t")] == ["one"]
-
-
-def test_expire_snapshots_keeps_newest(spark, tmp_path):
-    cat = _cat(spark, tmp_path)
-    for i in range(3):
-        cat.write(spark.range(10 * (i + 1)), "t", f"s{i}")
-    dropped = cat.expire_snapshots("t", keep_last=1)
-    assert dropped == ["s0", "s1"]
-    assert [s["id"] for s in cat.snapshots("t")] == ["s2"]
-    assert cat.read("t").count() == 30
-    # expired data dirs are gone
-    assert not os.path.exists(cat.snapshot_dir("t", "s0"))
-    assert not os.path.exists(cat.snapshot_dir("t", "s1"))
-    assert os.path.exists(cat.snapshot_dir("t", "s2"))
 
 
 def test_compact_plan_is_narrow_no_shuffle(spark, tmp_path):
@@ -114,7 +99,7 @@ def test_read_uses_stored_schema_without_a_job(spark, tmp_path):
         [("a", 1, ["x", "y"], {"k": 1.0}), ("b", None, None, None)], schema)
     cat.write(df.repartition(3), "t", "w1")
     cat.write_all([(df, "u"), (df.select("name"), "v")], "w2")
-    cat.compact("t", target_file_bytes=1 << 30)
+    cat.compact("t")
     sc = spark.sparkContext
     probes = iter(range(100))
 

@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import pytest
 
+from mmkg_rag_spark.functions import components
 from mmkg_rag_spark.functions.components import (
     connected_components,
     union_find_local,
 )
+from mmkg_rag_spark.operators import dedup
 from mmkg_rag_spark.operators.dedup import canonicalize_entities
 
 
@@ -49,27 +51,25 @@ def _result_sets(nodes, mapping):
     return n, m
 
 
-def test_small_and_distributed_paths_agree(mentions):
+def test_small_and_distributed_paths_agree(mentions, monkeypatch):
     fast = canonicalize_entities(mentions)
-    slow = canonicalize_entities(
-        mentions, pairwise_threshold=0, cc_collect_threshold=0
-    )
+    monkeypatch.setattr(dedup, "PAIRWISE_THRESHOLD", 0)
+    monkeypatch.setattr(components, "COLLECT_THRESHOLD", 0)
+    slow = canonicalize_entities(mentions)
     assert _result_sets(*fast) == _result_sets(*slow)
     names = {r.name for r in fast[0].collect()}
     # token-sorted fuzzy match merges 'Ada Lovelace'/'Lovelace Ada'/'ADA LOVELACE'
     assert len(names) == 3 and "Grace Hopper" in names and "Acme Systems" in names
 
 
-def test_connected_components_both_paths(spark):
+def test_connected_components_both_paths(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")],
         "src string, dst string",
     )
     for thr in (0, 10**6):
-        comp = {
-            (r.id, r.component)
-            for r in connected_components(edges, collect_threshold=thr).collect()
-        }
+        monkeypatch.setattr(components, "COLLECT_THRESHOLD", thr)
+        comp = {(r.id, r.component) for r in connected_components(edges).collect()}
         assert {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "f")} == comp
 
 

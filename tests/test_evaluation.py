@@ -201,20 +201,3 @@ def test_evaluate_end_to_end_hermetic(spark, graph):
         "A tiny corpus about Ada Lovelace.", nodes, edges, images, n=1
     )
     assert stats2 == stats
-
-
-def test_winner_explanations_blobs():
-    """snippets.py word-cloud prep parity: explanations concatenate per
-    winning method; ties contribute to neither."""
-    results = [
-        {
-            "question": "q",
-            "metrics": [
-                {"metric": "Diversity", "winner": "s", "explanation": "A."},
-                {"metric": "Directness", "winner": "m", "explanation": "B."},
-                {"metric": "Empowerment", "winner": "0", "explanation": "C."},
-                {"metric": "Comprehensiveness", "winner": "s", "explanation": "D."},
-            ],
-        }
-    ]
-    assert ev.winner_explanations(results) == {"s": "A.D.", "m": "B."}

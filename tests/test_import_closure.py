@@ -100,3 +100,46 @@ def test_kg_closure_excludes_off_path_modules():
 
 def test_deleted_modules_stay_deleted():
     assert [m for m in DELETED if _file(f"{PKG}.{m}")] == []
+
+
+# public closure names with no caller outside tests/: the lineage reader the
+# verify recipe documents and the fixture writers tests build WARC input with
+KEEP_UNCALLED = {
+    "metrics.read_metrics",
+    "sources.warc.write_warc",
+    "sources.warc.write_wet",
+}
+
+
+def _referenced_names() -> set[str]:
+    """Every Name, Attribute and import alias in ``.py`` files outside
+    ``tests/`` (a definition alone is not a reference)."""
+    out: set[str] = set()
+    for p in ROOT.rglob("*.py"):
+        rel = p.relative_to(ROOT).parts
+        if rel[0] == "tests" or any(s.startswith(".") for s in rel):
+            continue
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.rpartition(".")[2])
+    return out
+
+
+def test_closure_public_names_have_callers():
+    used = _referenced_names()
+    uncalled = []
+    for mod in sorted(kg_closure()):
+        tree = ast.parse(_file(mod).read_text())
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or node.name.startswith("_"):
+                continue
+            qual = f"{mod.removeprefix(PKG + '.')}.{node.name}"
+            if node.name not in used and qual not in KEEP_UNCALLED:
+                uncalled.append(qual)
+    assert uncalled == [], f"only tests reach {uncalled}"

@@ -8,7 +8,6 @@ Spark analogue of the reference's incremental pickles (pipe.py:85-87).
 
 from __future__ import annotations
 
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,7 +118,7 @@ def test_write_graph_failed_write_commits_nothing(spark, tmp_path):
 
 
 def test_sinks_roundtrip_and_eris_schema(spark, tmp_path):
-    from mmkg_rag_spark.sinks import export_eris_jsonl, write_graph
+    from mmkg_rag_spark.sinks import write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog
 
     em, rm = _mentions(spark, 0, 20)
@@ -132,93 +131,6 @@ def test_sinks_roundtrip_and_eris_schema(spark, tmp_path):
     # sorted write: first row is the lexicographically smallest name
     first = cat.read("nodes", snaps["nodes"]).limit(1).collect()[0].name
     assert first == min(r.name for r in nodes.collect())
-
-    out = str(tmp_path / "eris")
-    export_eris_jsonl(nodes, edges, out)
-    lines = [json.loads(r.value) for r in spark.read.text(out).collect()]
-    n_nodes = nodes.count()
-    ent_lines = [l for l in lines if "name" in l]
-    rel_lines = [l for l in lines if "source" in l]
-    assert len(ent_lines) == n_nodes and len(rel_lines) == edges.count()
-    # origin_str field ORDER parity (entity.py:40-47 / relation.py:41-48)
-    assert list(ent_lines[0].keys()) == [
-        "name", "label", "description", "aliases", "references"
-    ]
-    assert list(rel_lines[0].keys()) == [
-        "source", "label", "target", "description", "references"
-    ]
-
-
-def test_neo4j_bulk_export(spark, tmp_path):
-    """W3: bulk-import CSVs carry the reference's exact property model
-    (storage/index.py:140-193): Entity/Image node spaces, :TYPE RELATION
-    with label as a property, '#image' edges split into the Image space."""
-    from mmkg_rag_spark.sinks import export_neo4j_bulk
-
-    nodes = spark.createDataFrame(
-        [("Ada Lovelace", "PERSON", "pioneer", ["Ada"], ["ref1"])],
-        "name string, label string, description string, "
-        "aliases array<string>, references array<string>",
-    )
-    edges = spark.createDataFrame(
-        [
-            ("Ada Lovelace", "worked on", "Analytical Engine", "d", ["r"]),
-            ("Ada Lovelace", "#imagedepicts", "img/a.png", "d2", []),
-        ],
-        "source string, label string, target string, description string, "
-        "references array<string>",
-    )
-    images = spark.createDataFrame(
-        [("img/a.png", "cap", "desc", ["t1", "t2"])],
-        "path string, caption string, description string, texts array<string>",
-    )
-    out = export_neo4j_bulk(
-        nodes, edges, str(tmp_path / "neo4j"), images=images, single_file=True
-    )
-    ents = spark.read.option("header", True).csv(out["entities"]).collect()
-    assert ents[0]["name:ID(Entity)"] == "Ada Lovelace"
-    assert ents[0]["aliases:string[]"] == "Ada"
-    rels = spark.read.option("header", True).csv(out["relations"]).collect()
-    assert len(rels) == 1  # image edge excluded from the Entity-Entity file
-    assert rels[0][":TYPE"] == "RELATION" and rels[0]["label"] == "worked on"
-    irels = spark.read.option("header", True).csv(out["image_relations"]).collect()
-    assert irels[0][":END_ID(Image)"] == "img/a.png"
-    imgs = spark.read.option("header", True).csv(out["images"]).collect()
-    from mmkg_rag_spark.sinks import NEO4J_ARRAY_SEP
-
-    assert imgs[0]["texts:string[]"] == f"t1{NEO4J_ARRAY_SEP}t2"
-
-
-def test_neo4j_bulk_export_semicolon_safe(spark, tmp_path):
-    """ADVICE r2: web-text aliases/references contain semicolons; the array
-    delimiter must not be ';' (which neo4j-admin would mis-split) and stray
-    delimiter chars inside elements are stripped."""
-    from mmkg_rag_spark.sinks import NEO4J_ARRAY_SEP, export_neo4j_bulk
-
-    assert NEO4J_ARRAY_SEP != ";"
-    nodes = spark.createDataFrame(
-        [
-            (
-                "X; Y Corp",
-                "ORG",
-                "a; b",
-                ["alias; with semicolon", f"evil{NEO4J_ARRAY_SEP}elem"],
-                ["http://e.com/a;b"],
-            )
-        ],
-        "name string, label string, description string, "
-        "aliases array<string>, references array<string>",
-    )
-    edges = spark.createDataFrame(
-        [],
-        "source string, label string, target string, description string, "
-        "references array<string>",
-    )
-    out = export_neo4j_bulk(nodes, edges, str(tmp_path / "n4j"), single_file=True)
-    row = spark.read.option("header", True).csv(out["entities"]).collect()[0]
-    aliases = row["aliases:string[]"].split(NEO4J_ARRAY_SEP)
-    assert aliases == ["alias; with semicolon", "evilelem"]
-    assert row["references:string[]"] == "http://e.com/a;b"
 
 
 def test_streaming_commit_crash_idempotence(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""Extractor abstraction: mock-injected path ≡ default path; endpoint client.
+"""Extractor abstraction: the mock extractor ≡ the oracle's per-chunk
+extraction; endpoint client.
 
 Mirrors the reference's LLM-client test layer (tests/llm_test.py: mocked
 AsyncOpenAI) — the endpoint client is exercised with an injected transport,
@@ -31,11 +32,19 @@ def test_injected_mock_extractor_equals_default(spark):
             tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows
         )
 
+    # the one extraction path (MockExtractor, batched model calls) emits
+    # the rows of the P/R oracle's own per-chunk extraction
+    from mmkg_rag_spark.kernels.records import Chunk
+    from mmkg_rag_spark.kernels.refpipeline import extract_chunk
+    from mmkg_rag_spark.operators.extract import _er_rows
+
     default = norm(extract_mentions(chunks).collect())
-    injected = norm(
-        extract_mentions(chunks, extractor_factory=MockExtractor).collect()
+    rows = chunks.collect()
+    objs = [Chunk(id=r.chunk_id, text=r.text) for r in rows]
+    oracle = norm(
+        _er_rows([r.url for r in rows], objs, [extract_chunk(c) for c in objs])
     )
-    assert injected == default and len(default) > 0
+    assert oracle == default and len(default) > 0
 
 
 def test_endpoint_extractor_request_and_parse():

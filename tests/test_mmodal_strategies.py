@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pytest
 
+from mmkg_rag_spark.operators import mmodal
 from mmkg_rag_spark.operators.dedup import canonicalize_entities
 from mmkg_rag_spark.operators.extract import (
     extract_page_artifacts,
@@ -36,7 +37,7 @@ def spark():
     yield get_spark(master="local[4]", shuffle_partitions=8, app_name="pytest-mst")
 
 
-def test_blocked_equals_broadcast_on_accepted_links(spark):
+def test_blocked_equals_broadcast_on_accepted_links(spark, monkeypatch):
     pages = gen_pages_df(spark, 60).select("url", "text")
     manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
     art = extract_page_artifacts(pages, use_html=False).cache()
@@ -47,12 +48,14 @@ def test_blocked_equals_broadcast_on_accepted_links(spark):
         filter_valid_images(split_image_instances(art), manifest)
     ).cache()
 
+    cap = mmodal.IMAGE_CANDIDATE_CAP
+    monkeypatch.setattr(mmodal, "SALT_BUCKETS", 4)
+    monkeypatch.setattr(mmodal, "IMAGE_CANDIDATE_CAP", 10**6)
     pairs = {}
-    for strategy in ("broadcast", "blocked"):
-        top = score_image_entities(
-            described, nodes, strategy=strategy, salt_buckets=4,
-            candidate_cap=10**6,
-        )
+    # PAIR_LIMIT −1 forces the blocked path, an unreachable one broadcast
+    for strategy, pair_limit in (("broadcast", 10**12), ("blocked", -1)):
+        monkeypatch.setattr(mmodal, "PAIR_LIMIT", pair_limit)
+        top = score_image_entities(described, nodes)
         pairs[strategy] = {
             (r.url, r.path, r.entity, r.score) for r in top.collect()
         }
@@ -60,7 +63,6 @@ def test_blocked_equals_broadcast_on_accepted_links(spark):
     high_conf = {p for p in pairs["broadcast"] if p[3] >= 0.5}
     assert high_conf and high_conf <= pairs["blocked"]
     # and the capped blocked path still produces links
-    capped = link_images(
-        score_image_entities(described, nodes, strategy="blocked", salt_buckets=4)
-    )
+    monkeypatch.setattr(mmodal, "IMAGE_CANDIDATE_CAP", cap)
+    capped = link_images(score_image_entities(described, nodes))
     assert capped.count() > 0

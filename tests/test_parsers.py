@@ -10,8 +10,6 @@ from mmkg_rag_spark.kernels.parsers import (
     parse_er,
     parse_image_description,
     parse_json_list,
-    parse_merged_entity,
-    parse_merged_relations,
     parse_string_list,
     scan_json_objects,
 )
@@ -230,27 +228,6 @@ class TestJsonList:
 
     def test_no_list(self):
         assert parse_json_list("nothing here") == []
-
-
-class TestMergedParsers:
-    def test_merged_entity_true(self):
-        text = '{"same_entity": true, "entity": {"name": "John Smith", "label": "person", "description": "d", "aliases": ["John"], "references": []}}'
-        merged, e = parse_merged_entity(text)
-        assert merged and e.name == "John Smith" and e.aliases == ["John"]
-
-    def test_merged_entity_false(self):
-        assert parse_merged_entity('{"same_entity": false}') == (False, None)
-
-    def test_merged_entity_absent(self):
-        assert parse_merged_entity("no json") == (False, None)
-
-    def test_merged_relations(self):
-        text = '{"same_relationship": true, "relationship": {"source": "A", "label": "knows", "target": "B", "description": "d", "references": []}}'
-        merged, rels = parse_merged_relations(text)
-        assert merged and len(rels) == 1 and rels[0].label == "knows"
-
-    def test_merged_relations_false(self):
-        assert parse_merged_relations('{"same_relationship": false}') == (False, [])
 
 
 class TestClassify:

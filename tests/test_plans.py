@@ -40,19 +40,6 @@ def test_fuzzy_topk_is_take_ordered(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_expand_seeds_cap_is_take_ordered(spark):
-    from mmkg_rag_spark.operators.retrieval import expand_seeds
-
-    edges = spark.createDataFrame(
-        [("a", f"n{i}") for i in range(50)], "source string, target string"
-    )
-    seeds = spark.createDataFrame([("a",)], "name string")
-    out = expand_seeds(edges, seeds, hops=1, max_related=5)
-    plan = _plan(out)
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange SinglePartition" not in plan
-
-
 def test_pricing_summary_pushdown(spark):
     """Filter must reach the parquet scan; scan must be column-pruned."""
     import __spark_entry__ as se

@@ -403,50 +403,6 @@ def test_robust_outliers_zero_mad_fallback(spark):
     assert r.n_outliers == 2  # fallback: values != median
 
 
-# ------------------------------------------------------------ cdc merge
-
-
-def test_merge_snapshot_upsert_delete_and_stale(spark):
-    from mmkg_rag_spark.operators.cdc import merge_snapshot
-
-    target = spark.createDataFrame(
-        [("a", 5, "va", False), ("b", 5, "vb", False)],
-        ["k", "ver", "val", "del"],
-    )
-    changes = spark.createDataFrame(
-        [
-            ("a", 6, "va2", False),   # update wins (newer)
-            ("b", 4, "stale", False), # stale re-delivery loses
-            ("c", 1, "vc", False),    # insert
-            ("d", 2, "vd", True),     # delete of an unseen key: stays gone
-            ("b", 7, None, True),     # tombstone wins: b drops out
-        ],
-        ["k", "ver", "val", "del"],
-    )
-    out = {r.k: (r.ver, r.val) for r in
-           merge_snapshot(target, changes, ["k"], ["ver"],
-                          tombstone_col="del").collect()}
-    assert out == {"a": (6, "va2"), "c": (1, "vc")}
-
-
-def test_merge_snapshot_idempotent_and_associative(spark):
-    from mmkg_rag_spark.operators.cdc import merge_snapshot
-
-    t = spark.createDataFrame([("a", 1, "x")], ["k", "ver", "val"])
-    c1 = spark.createDataFrame([("a", 2, "y"), ("b", 1, "z")], ["k", "ver", "val"])
-    c2 = spark.createDataFrame([("a", 3, "w")], ["k", "ver", "val"])
-
-    def snap(df):
-        return sorted((r.k, r.ver, r.val) for r in df.collect())
-
-    seq = merge_snapshot(merge_snapshot(t, c1, ["k"], ["ver"]), c2, ["k"], ["ver"])
-    one = merge_snapshot(t, c1.unionByName(c2), ["k"], ["ver"])
-    assert snap(seq) == snap(one)
-    # re-delivering c2 changes nothing (idempotent)
-    again = merge_snapshot(seq, c2, ["k"], ["ver"])
-    assert snap(again) == snap(seq)
-
-
 # ------------------------------------------------- yoy / anomaly classes
 
 

@@ -8,7 +8,6 @@ from mmkg_rag_spark.kernels.similarity import (
     _lcs_len,
     image_entity_relevance,
     indel_distance,
-    list_max_token_ratio,
     pair_similarity,
     ratio,
     token_ratio,
@@ -73,13 +72,6 @@ def test_pair_similarity_case_insensitive():
     assert pair_similarity("John", "john") == 1.0
     assert pair_similarity("John Smith", "smith john") == 1.0
     assert 0 <= pair_similarity("alpha", "omega") < 0.95
-
-
-def test_list_max_token_ratio():
-    assert list_max_token_ratio([], ["x"]) == 0.0
-    assert list_max_token_ratio(["john"], ["John Smith", "acme"]) == token_ratio(
-        "john", "John Smith"
-    )
 
 
 def test_image_entity_relevance_weights():

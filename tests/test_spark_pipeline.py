@@ -178,9 +178,9 @@ def test_one_pass_artifacts_equal_staged(spark, kw):
 
 
 def test_build_kg_extractor_equals_default(spark, engine_result):
-    """build_kg with an injected MockExtractor runs the same one pass and
-    builds the same graph as the default mock kernel: nodes, every edge
-    (image edges included) and images."""
+    """build_kg with an explicitly passed MockExtractor factory builds the
+    same graph as the default: nodes, every edge (image edges included) and
+    images."""
     from mmkg_rag_spark.pipeline import build_kg
 
     manifest = spark.createDataFrame(

@@ -14,7 +14,6 @@ from mmkg_rag_spark.operators.dedup import canonicalize_entities, remap_and_merg
 from mmkg_rag_spark.operators.extract import (
     chunk_pages,
     extract_mentions,
-    normalize_image_refs,
     split_mentions,
 )
 from mmkg_rag_spark.sources.catalog import ParquetCatalog
@@ -67,6 +66,31 @@ def test_stream_equals_batch(spark, tmp_path_factory):
     assert len(cat.snapshots("nodes")) == n_before
 
 
+def test_fresh_checkpoint_on_used_warehouse_raises(spark, tmp_path_factory):
+    """A second stream (its own checkpoint and pages) into a warehouse an
+    earlier stream folded into restarts at batch 0, whose snapshot id the
+    first stream committed: the fold must raise, not skip the new pages."""
+    root = tmp_path_factory.mktemp("stream-ids")
+    wh = str(root / "wh")
+    pages = gen_pages_df(spark, 16).cache()
+    urls = sorted(r.url for r in pages.select("url").distinct().collect())
+    firsts = pages.filter(F.col("url").isin(urls[: len(urls) // 2]))
+    seconds = pages.filter(~F.col("url").isin(urls[: len(urls) // 2]))
+    for name, part in (("a", firsts), ("b", seconds)):
+        part.write.parquet(str(root / f"in_{name}"))
+
+    q = stream_build(spark, str(root / "in_a"), wh, str(root / "ckpt_a"))
+    q.awaitTermination(300)
+    cat = ParquetCatalog(spark, wh)
+    committed = cat.snapshots("nodes")
+
+    q2 = stream_build(spark, str(root / "in_b"), wh, str(root / "ckpt_b"))
+    with pytest.raises(Exception, match="already committed by query"):
+        q2.awaitTermination(300)
+    assert cat.snapshots("nodes") == committed
+    assert committed and all(s["query_id"] == str(q.id) for s in committed)
+
+
 def test_stream_build_from_warc_equals_batch(spark, tmp_path_factory):
     """source='warc': continuous KG construction straight off a crawl-archive
     landing dir matches the batch build over the same archives."""
@@ -97,20 +121,6 @@ def test_stream_build_from_warc_equals_batch(spark, tmp_path_factory):
     edges_b = remap_and_merge_relations(rm, mapping)
     assert got_nodes == {(r.name, r.label) for r in nodes_b.collect()}
     assert got_edges == {(r.source, r.label, r.target) for r in edges_b.collect()}
-
-
-def test_normalize_image_refs(spark):
-    pages = spark.createDataFrame(
-        [("u1", "a ![x](images/p.png)\nb ![y](q.gif)"), ("u2", "no images")],
-        "url string, text string",
-    )
-    out = {r.url: r for r in normalize_image_refs(pages).collect()}
-    assert len(out["u1"].renames) == 2
-    (o1, n1), (o2, n2) = [(x["old"], x["new"]) for x in out["u1"].renames]
-    assert o1 == "images/p.png" and n1.startswith("images/") and n1.endswith("_0.png")
-    assert o2 == "q.gif" and n2.endswith("_1.gif")
-    assert "![](" in out["u1"].text and "![x](" not in out["u1"].text
-    assert out["u2"].renames == [] and out["u2"].text == "no images"
 
 
 # Per-batch state the stream side relies on: NTZ epochs that no session zone

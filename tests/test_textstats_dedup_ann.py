@@ -134,7 +134,7 @@ def test_ngram_cap_disclosure(docs):
     assert textdedup.cap_dropped_shingles({}) is None
 
 
-def test_similarity_throughput_accounting(spark, docs):
+def test_similarity_throughput_accounting(spark, docs, monkeypatch):
     # the dedup-verify UDF ticks the pair accumulators (VERDICT r3 item 5)
     from mmkg_rag_spark import metrics
     from mmkg_rag_spark.operators import dedup
@@ -154,8 +154,9 @@ def test_similarity_throughput_accounting(spark, docs):
         .withColumn("chunk_id", F.lit(1))
         .withColumn("images", F.array())
     )
-    # pairwise_threshold=0 forces the distributed (UDF) path
-    dedup.similarity_edges(units, pairwise_threshold=0).collect()
+    # PAIRWISE_THRESHOLD 0 forces the distributed (UDF) path
+    monkeypatch.setattr(dedup, "PAIRWISE_THRESHOLD", 0)
+    dedup.similarity_edges(units).collect()
     tp = metrics.similarity_throughput()
     assert "dedup_verify" in tp
     assert tp["dedup_verify"]["pairs"] > 0

@@ -378,6 +378,3 @@ def test_dedup_pages_latest_collapses_canonical_respellings(spark):
         "HTTP://EX.COM:80/p/?a=1&b=2#x", "http://ex.com/p/?utm_s=1&a=1&b=2"
     )
     assert winner.text == "tie"
-    # raw-url mode: no collapsing across spellings
-    raw = dedup_pages_latest(pages, canonical_url=False)
-    assert raw.count() == 5

@@ -6,9 +6,10 @@ in ~10% of pages (sources/pages.py:125) plus an ~8% image-bearing slice.
 This tool builds the mention/image tables from such a corpus, then runs
 
   - D1: similarity_edges with the MinHash-LSH band + vectorized verify
-    path forced (pairwise_threshold=0), and
+    path forced (dedup.PAIRWISE_THRESHOLD = 0), and
   - M4: score_image_entities with the salted token-blocked join forced
-    (strategy="blocked"),
+    (mmodal.PAIR_LIMIT = -1), plus an unsalted control
+    (mmodal.SALT_BUCKETS = 1),
 
 each under its own Spark job group, and reads PER-TASK executorRunTime
 quantiles for every stage of each group from the Spark UI REST API
@@ -97,6 +98,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F  # noqa: F401
 
+    from mmkg_rag_spark.operators import dedup, mmodal
     from mmkg_rag_spark.operators.dedup import collapse_exact, similarity_edges
     from mmkg_rag_spark.operators.extract import (
         extract_page_artifacts,
@@ -126,8 +128,10 @@ def main() -> int:
 
     # --- D1: LSH banding + vectorized verify, scale path forced ---
     sc.setJobGroup("d1_lsh_verify", "similarity_edges LSH path")
-    edges = similarity_edges(units, pairwise_threshold=0)
+    pairwise_threshold, dedup.PAIRWISE_THRESHOLD = dedup.PAIRWISE_THRESHOLD, 0
+    edges = similarity_edges(units)
     n_sim_edges = edges.count()
+    dedup.PAIRWISE_THRESHOLD = pairwise_threshold
     sc.setJobGroup("default", "")
 
     # nodes for M4 (outside the measured groups)
@@ -144,17 +148,17 @@ def main() -> int:
 
     # --- M4: salted token-blocked relevance join, forced ---
     sc.setJobGroup("m4_salted_join", "score_image_entities blocked")
-    top = score_image_entities(described, nodes, strategy="blocked")
+    mmodal.PAIR_LIMIT = -1
+    top = score_image_entities(described, nodes)
     n_scored = top.count()
     sc.setJobGroup("default", "")
 
-    # --- control: same join with the salt disabled (salt_buckets=1) —
+    # --- control: same join with the salt disabled (SALT_BUCKETS 1) —
     # the hub token key lands on a single reduce task; the delta between
     # this group's max/median and the salted one IS the salt's effect ---
     sc.setJobGroup("m4_unsalted_control", "score_image_entities salt=1")
-    ctl = score_image_entities(
-        described, nodes, strategy="blocked", salt_buckets=1
-    )
+    mmodal.SALT_BUCKETS = 1
+    ctl = score_image_entities(described, nodes)
     n_ctl = ctl.count()
     sc.setJobGroup("default", "")
 
