@@ -5,7 +5,7 @@ A from-scratch reimplementation of the query & data-processing capabilities of
 re-expressed Spark-first:
 
 - ingestion from a Common-Crawl-style ``pages(url, warc_ts, html, text, lang)``
-  table (Iceberg in production; snapshot-manifest parquet warehouse in-sandbox),
+  table (Iceberg in production; snapshot-log parquet warehouse in-sandbox),
 - chunking / mention extraction / alias discovery as vectorized Arrow UDFs,
 - canonicalization as MinHash-LSH blocking + connected components + grouped merge,
 - multi-modal image→entity linking as a salted, windowed top-k join,

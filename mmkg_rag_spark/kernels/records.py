@@ -7,14 +7,10 @@ Reference: pydantic models at /root/reference/src/mmkg_rag/types/
   - Chunk    (chunk.py:5-14)
 
 Implemented as plain dataclasses (no pydantic dependency on executors).
-``origin_str`` reproduces the canonical JSON field order used by the reference
-prompts and by the north-star triple schema
-(entity.py:40-47, relation.py:41-48).
 """
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 
 
@@ -47,18 +43,6 @@ class Entity:
             and self.description == other.description
         )
 
-    def origin_str(self) -> str:  # entity.py:40-47
-        ref_str = (
-            "[" + ", ".join(json.dumps(r) for r in self.references) + "]"
-            if self.references
-            else "[]"
-        )
-        return (
-            f'{{"name": "{self.name}", "label": "{self.label}", '
-            f'"description": "{self.description}", "aliases": {self.aliases}, '
-            f'"references": {ref_str}}}'
-        )
-
 
 @dataclass
 class Relation:
@@ -81,18 +65,6 @@ class Relation:
             and self.target == other.target
             and self.label == other.label
             and self.description == other.description
-        )
-
-    def origin_str(self) -> str:  # relation.py:41-48
-        ref_str = (
-            "[" + ", ".join(json.dumps(r) for r in self.references) + "]"
-            if self.references
-            else "[]"
-        )
-        return (
-            f'{{"source": "{self.source}", "label": "{self.label}", '
-            f'"target": "{self.target}", "description": "{self.description}", '
-            f'"references": {ref_str}}}'
         )
 
 

@@ -124,13 +124,6 @@ JUDGE_SYSTEM_PROMPT = (
     '"explanation": "..."}.'
 )
 
-DESCRIBE_PROMPT = (
-    "Describe the image at the given path using its surrounding text. Reply "
-    'ONLY with JSON {{"caption": ..., "text_snippets": [...], "description": ...}}.'
-    "\nPATH: {path}\nCONTEXT:\n"
-)
-
-
 class MockExtractor:
     """Deterministic extractor — emits the mock model's response strings."""
 
@@ -139,11 +132,6 @@ class MockExtractor:
 
     def alias(self, texts: list[str], names: list[list[str]]) -> list[str]:
         return [mockllm.alias_response(t, n) for t, n in zip(texts, names)]
-
-    def describe_image(self, paths: list[str], contexts: list[str]) -> list[str]:
-        return [
-            mockllm.describe_image_response(p, c) for p, c in zip(paths, contexts)
-        ]
 
     def glean(self, histories: list[list[dict]]) -> list[str]:
         """Gleaning round (reference text.py:97-122): the mock's first pass is
@@ -290,15 +278,6 @@ class EndpointExtractor:
                 ALIAS_PROMPT.format(names=", ".join(n)) + t,
             )
             for t, n in zip(texts, names)
-        ]
-
-    def describe_image(self, paths: list[str], contexts: list[str]) -> list[str]:
-        return [
-            self._call(
-                "You describe images from context.",
-                DESCRIBE_PROMPT.format(path=p) + c,
-            )
-            for p, c in zip(paths, contexts)
         ]
 
     def glean(self, histories: list[list[dict]]) -> list[str]:

@@ -1,12 +1,14 @@
 """Per-stage lineage + metrics rows (north-rule ops requirement).
 
-Every materialized stage appends one row per non-empty output *data file*
-(file ↔ write-task partition) to the catalog's ``_metrics`` table:
+Every catalog commit appends, per table it commits, one row per non-empty
+output *data file* (file ↔ write-task partition) to the catalog's
+``_metrics`` table, the stage being the table's name:
 
     (stage, snapshot, input_snapshot, file, rows, rows_in, wall_ms, ts)
 
-File-level row counts come from the just-written files' parquet footers,
-read on the driver — no Spark job, no re-scan of the snapshot. ``file`` is
+File-level row counts are the commit's log-entry counts, read from the
+just-written files' parquet footers on the driver — no Spark job, no
+re-scan of the snapshot. ``file`` is
 the data file's ``file://`` URI, the form ``input_file_name()`` reports.
 This is the explicit accounting the north star asks for beyond what the
 Spark UI provides, and it lives next to the data so a resumed run appends
@@ -19,12 +21,14 @@ import os
 import time
 import uuid
 from pathlib import Path
+from typing import TYPE_CHECKING
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.catalog import ParquetCatalog
+if TYPE_CHECKING:
+    from .sources.catalog import ParquetCatalog
 
 METRICS_SCHEMA = pa.schema([
     ("stage", pa.string()),
@@ -55,14 +59,32 @@ def record_stage(
     wall_ms: int,
     rows_in: int = -1,
 ) -> int:
-    """Append per-file lineage rows for a just-written snapshot; returns
-    the snapshot's total row count (the sum of its files' ``rows``).
+    """Append per-file lineage rows for a just-written data directory, its
+    rows read from the footers; returns its total row count. A catalog
+    commit records its own lineage (``record_files``), so this is for
+    data written outside one."""
+    return record_files(
+        catalog, stage, snapshot, input_snapshot,
+        file_rows(catalog, data_path), wall_ms, rows_in,
+    )
 
-    ``rows_in`` is the upstream snapshot's row count (-1 when unknown, e.g.
-    streaming micro-batches) — with per-file ``rows`` out, each stage's
-    row fan-in/fan-out is auditable straight from the metrics table.
-    Each call adds one file to ``_metrics/{stage}-{snapshot}``, so a
-    snapshot recomputed after a crash keeps its earlier rows."""
+
+def record_files(
+    catalog: ParquetCatalog,
+    stage: str,
+    snapshot: str,
+    input_snapshot: str,
+    files: list[tuple[str, int]],
+    wall_ms: int,
+    rows_in: int,
+) -> int:
+    """Append one lineage row per (data file, rows); returns the rows' sum.
+
+    ``rows_in`` is the upstream snapshot's row count (-1 when there is
+    none) — with per-file ``rows`` out, each stage's row fan-in/fan-out is
+    auditable straight from the metrics table. Each call adds one file to
+    ``_metrics/{stage}-{snapshot}``, so a snapshot recomputed after a
+    crash keeps its earlier rows."""
     ts = time.time()
     rows = [
         {
@@ -75,7 +97,7 @@ def record_stage(
             "wall_ms": int(wall_ms),
             "ts": ts,
         }
-        for path, n in file_rows(catalog, data_path)
+        for path, n in files
     ]
     out = os.path.join(catalog.warehouse, "_metrics", f"{stage}-{snapshot}")
     os.makedirs(out, exist_ok=True)

@@ -8,12 +8,12 @@ snapshot keyed by the fingerprint of (stage, params, input snapshot); a
 re-run — e.g. after a crash — **skips every stage whose snapshot already
 exists** and resumes at the first missing one (north-rule resume semantics;
 kill this process at any point and re-invoke with the same args to verify).
-Each stage also appends per-partition lineage/metrics rows (metrics.py).
+Each stage's commit also appends per-file lineage rows (metrics.py).
 
 Stage DAG (SURVEY.md §3.1 restructured):
   pages [→ pages_dedup] → mentions(map: E/R mentions + I image instances)
     → graph: pipeline.graph_from_artifacts (D + M phases), committed by
-      sinks.write_graph as one snapshot of nodes, edges, images → summary
+      sinks.write_graph as one log entry of nodes, edges, images → summary
 The warehouse is the one build_kg + write_graph leave, so a fold
 (streaming.process_pages_batch) extends it like any stored graph.
 """
@@ -28,46 +28,31 @@ import time
 from pyspark.sql import functions as F
 
 
-# snapshot fingerprint → rows the stage wrote, so each stage's metrics rows
-# can carry its upstream's rows_in without a count job (record_stage returns
-# the written rows; a resumed snapshot's come from its parquet footers)
-_STAGE_ROWS: dict[str, int] = {}
-
-
-def _stage(catalog, tables, snap, input_snap, write, force=False):
-    """Resume-or-compute one stage: ``write()`` commits snapshot ``snap`` of
-    every table in ``tables``, and the stage resumes only when all of them
-    hold it. Prints and records lineage per table; returns table → the
-    stored snapshot's DataFrame."""
-    from mmkg_rag_spark.metrics import file_rows, record_stage
+def _stage(catalog, snap, write, force=False):
+    """Resume-or-compute one stage: ``write()`` commits snapshot ``snap``
+    as one log entry (whose commit records the lineage rows), and the
+    stage resumes when that entry exists. Prints one line per table the
+    entry holds; returns table → its DataFrame at ``snap``."""
+    from mmkg_rag_spark.sources.catalog import entry_rows
 
     t0 = time.time()
-    resume = not force and all(catalog.has_snapshot(t, snap) for t in tables)
+    resume = not force and catalog.has_snapshot(snap)
     if not resume:
         write()
     wall_ms = int((time.time() - t0) * 1000)
-    out, total = {}, 0
-    for t in tables:
-        path = catalog.snapshot_dir(t, snap)
+    entry = catalog.entry(snap)
+    for t in entry["tables"]:
         if resume:
-            n = sum(rows for _, rows in file_rows(catalog, path))
             print(f"[resume] {t} snap-{snap}: exists, skipping compute")
         else:
-            n = record_stage(
-                catalog, t, snap, input_snap, path, wall_ms,
-                rows_in=_STAGE_ROWS.get(input_snap, -1),
-            )
-            print(f"[run   ] {t} snap-{snap}: {n} rows in {wall_ms} ms")
-        total += n
-        out[t] = catalog.read(t, snap)
-    _STAGE_ROWS[snap] = total
-    return out
+            print(f"[run   ] {t} snap-{snap}: {entry_rows(entry, t)} rows in {wall_ms} ms")
+    return {t: catalog.read(t, snap) for t in entry["tables"]}
 
 
 def _table_stage(catalog, name, snap, input_snap, compute, force=False):
     """One-table stage whose snapshot is ``compute()``'s DataFrame."""
     return _stage(
-        catalog, (name,), snap, input_snap,
+        catalog, snap,
         lambda: catalog.write(compute(), name, snap, meta={"input": input_snap}),
         force,
     )[name]
@@ -136,9 +121,10 @@ def main(argv: list[str] | None = None) -> int:
         q = stream_build(spark, args.stream_warc, args.warehouse, ckpt,
                          available_now=True, source="warc")
         q.awaitTermination()
-        n = catalog.read("nodes").count()
-        e = catalog.read("edges").count()
-        print(f"[stream] graph now {n} nodes / {e} edges "
+        snap = catalog.entry()["id"]
+        n = catalog.read("nodes", snap).count()
+        e = catalog.read("edges", snap).count()
+        print(f"[stream] graph now {n} nodes / {e} edges at snapshot {snap} "
               f"(warehouse {args.warehouse})")
         return 0
 
@@ -201,10 +187,7 @@ def main(argv: list[str] | None = None) -> int:
         r = graph_from_artifacts(spark, mentions, manifest)
         write_graph(catalog, r.nodes, r.all_edges, mentions_fp, r.images)
 
-    graph = _stage(
-        catalog, ("nodes", "edges", "images"), graph_snapshot(mentions_fp),
-        mentions_fp, _graph, args.force,
-    )
+    graph = _stage(catalog, graph_snapshot(mentions_fp), _graph, args.force)
     nodes, edges, images = graph["nodes"], graph["edges"], graph["images"]
 
     # -- summary -----------------------------------------------------------

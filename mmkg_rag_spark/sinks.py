@@ -1,11 +1,13 @@
 """Materialization sink (SURVEY.md §2.5 W1).
 
-``write_graph`` commits sorted snapshot writes of nodes/edges/images into
-the catalog (reference pipe.py:98-100 global sorts + storage/index.py:50-58
-pickle persistence, re-expressed as sorted partitioned table snapshots; on
-Iceberg the sort becomes the table's sortOrder). Those catalog tables are
-the graph's store: build, fold and query read and write only them, so there
-is no ``eris.txt`` or Neo4j export.
+``write_graph`` is the only graph commit: build callers, ``run.py``'s graph
+stage and the fold (``streaming.process_pages_batch``) all commit sorted
+nodes/edges(/images) through it as ONE catalog log entry (reference
+pipe.py:98-100 global sorts + storage/index.py:50-58 pickle persistence,
+re-expressed as sorted partitioned table snapshots; on Iceberg the sort
+becomes the table's sortOrder). Those catalog tables are the graph's store:
+build, fold and query read and write only them, so there is no ``eris.txt``
+or Neo4j export.
 """
 
 from __future__ import annotations
@@ -30,12 +32,13 @@ def write_graph(
     input_fp: str,
     images: DataFrame | None = None,
 ) -> dict[str, str]:
-    """Sorted snapshot writes, committed together; returns table →
+    """Sorted snapshot writes, committed as one log entry; returns table →
     snapshot id.
 
-    ``ParquetCatalog.write_all`` lands every table's data before any
-    manifest, so a failed write leaves each table's latest snapshot as it
-    was."""
+    ``ParquetCatalog.write_all`` lands every table's data before the entry,
+    so a failed write commits nothing. Tables left out (a fold's images)
+    keep their state at the previous entries. The entry's ``input`` meta
+    names the lineage input; the catalog records the query id itself."""
     snap = graph_snapshot(input_fp)
     writes = [
         (nodes.orderBy("name"), "nodes"),

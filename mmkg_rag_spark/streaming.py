@@ -12,17 +12,18 @@ Shape:
           micro-batch pages → extract_page_artifacts (the build's one
             extraction pass, over the ``text`` column; its image rows are
             dropped — folds link no images yet)
-          → incremental_canonicalize(batch ∪ stored graph)
-          → snapshot write (nodes/edges) + lineage metrics row
+          → incremental_canonicalize(batch ∪ graph at the newest snapshot)
+          → sinks.write_graph(nodes, edges): one catalog log entry, whose
+            commit also writes the lineage rows
 The graph tables stay Iceberg-semantics snapshots (sources/catalog.py), so a
 crashed stream resumes from the last committed snapshot AND the streaming
 checkpoint — exactly-once per micro-batch comes from the pairing of Spark's
-checkpoint (offsets) with the catalog's atomic manifest commit keyed by
-batch id (re-delivered batches hit an existing snapshot and skip). Each
-commit records the streaming query's id, which the checkpoint keeps across
-restarts; a batch whose snapshot another query committed (a fresh
-checkpoint on a used warehouse) raises instead of skipping pages it never
-folded.
+checkpoint (offsets) with the catalog's atomic log entry keyed by batch id
+(a re-delivered batch finds its entry and skips; a crash before the entry
+leaves none, so the replay recomputes). Each entry records the streaming
+query's id, which the checkpoint keeps across restarts; a batch whose entry
+another query committed (a fresh checkpoint on a used warehouse) raises
+instead of skipping pages it never folded.
 
 KG canonicalization needs no streaming operator state — it lives in the
 graph tables, which is what lets the stream resume from snapshots.
@@ -30,14 +31,13 @@ graph tables, which is what lets the stream resume from snapshots.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .llm import MockExtractor
 from .operators.extract import extract_page_artifacts, split_mentions
 from .operators.incremental import incremental_canonicalize
-from .sources.catalog import ParquetCatalog, fingerprint
+from .sinks import graph_snapshot, write_graph
+from .sources.catalog import ParquetCatalog, entry_rows, fingerprint
 from .sources.pages import PAGES_SCHEMA
 
 
@@ -53,24 +53,22 @@ def process_pages_batch(
 ) -> dict[str, int]:
     """Fold one micro-batch of pages into the stored graph (idempotent).
 
-    The snapshot id is the fingerprint of (stream, batch_id): a re-delivered
-    batch (restart replay) finds its snapshot committed and no-ops. Inside
-    ``foreachBatch`` the commit also records the streaming query id (None
-    outside a stream); a committed snapshot whose id differs means another
-    query folded this batch id, and the fold raises.
+    The snapshot id is ``graph_snapshot`` of the (stream, batch_id)
+    fingerprint: a re-delivered batch (restart replay) finds its log entry
+    and no-ops. Each entry records the streaming query id (None outside a
+    stream); an entry whose id differs means another query folded this
+    batch id, and the fold raises. Returns the committed node and edge
+    counts, from the entry's footer counts.
 
     ``extractor_factory``/``loop``: same contract as
     operators.extract.extract_page_artifacts — swap the mock for an
     endpoint client and/or enable gleaning rounds on the streaming path too.
     """
-    snap = fingerprint("stream-batch", batch_id, chunk_size, overlap, loop)
-    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-    # Idempotence must check BOTH tables: a crash between the nodes and
-    # edges manifest commits would otherwise make the replay skip the batch
-    # and permanently drop its edges (ADVICE r1). write_all() below orders
-    # data-before-manifest so at most a manifest prefix can be committed.
-    if catalog.has_snapshot("nodes", snap) and catalog.has_snapshot("edges", snap):
-        committed = catalog._entry("nodes", snap).get("query_id")
+    batch_fp = fingerprint("stream-batch", batch_id, chunk_size, overlap, loop)
+    snap = graph_snapshot(batch_fp)
+    if catalog.has_snapshot(snap):
+        committed = catalog.entry(snap)["query_id"]
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         if committed is not None and committed != query_id:
             raise RuntimeError(
                 f"batch {batch_id} of streaming query {query_id} is already "
@@ -79,7 +77,6 @@ def process_pages_batch(
             )
         return {"batch_id": batch_id, "skipped": 1}
 
-    t0 = time.time()
     artifacts = extract_page_artifacts(
         batch_pages, chunk_size, overlap, use_html=False,
         extractor_factory=extractor_factory, loop=loop,
@@ -88,30 +85,16 @@ def process_pages_batch(
 
     prior_nodes = prior_edges = None
     try:
-        prior_nodes = catalog.read("nodes")
-        prior_edges = catalog.read("edges")
+        base = catalog.entry()["id"]  # one resolved snapshot for both reads
+        prior_nodes = catalog.read("nodes", base)
+        prior_edges = catalog.read("edges", base)
     except FileNotFoundError:
         pass
 
     nodes, _, edges = incremental_canonicalize(em, rm, prior_nodes, prior_edges)
-    nodes = nodes.localCheckpoint()
-    edges = edges.localCheckpoint()
-    paths = catalog.write_all(
-        [(nodes, "nodes"), (edges, "edges")], snap,
-        meta={"batch_id": batch_id, "query_id": query_id},
-    )
-
-    from .metrics import record_stage
-
-    wall = int((time.time() - t0) * 1000)
-    # the lineage rows count the written files' footers; their sums are the
-    # batch's node/edge counts, so no count job runs over the tables
-    counts = {
-        table: record_stage(
-            catalog, f"stream-{table}", snap, f"batch-{batch_id}", path, wall
-        )
-        for table, path in paths.items()
-    }
+    write_graph(catalog, nodes.localCheckpoint(), edges.localCheckpoint(), batch_fp)
+    entry = catalog.entry(snap)
+    counts = {t: entry_rows(entry, t) for t in ("nodes", "edges")}
     return {"batch_id": batch_id, **counts, "skipped": 0}
 
 

@@ -59,29 +59,6 @@ def test_reference_completion_roundtrip(spark):
     assert refs and all("..." not in r for r in refs)
 
 
-def test_catalog_seq_backward_compat(spark, tmp_path):
-    """Manifests written before the seq field existed (ts-only entries) must
-    still resolve 'latest' correctly, and new commits must win over them."""
-    from mmkg_rag_spark.sources.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
-    df1 = spark.createDataFrame([(1,)], "v long")
-    cat.write(df1, "t", "snapA")
-    # strip seq to simulate a legacy manifest entry
-    m = cat._load_manifest("t")
-    for e in m:
-        e.pop("seq", None)
-    cat._save_manifest("t", m)
-    assert cat.read("t").first().v == 1
-    # a new commit (seq=1) beats the legacy entry even with an older ts
-    df2 = spark.createDataFrame([(2,)], "v long")
-    cat.write(df2, "t", "snapB")
-    m = cat._load_manifest("t")
-    next(e for e in m if e["id"] == "snapB")["ts"] = 0.0  # clock skew
-    cat._save_manifest("t", m)
-    assert cat.read("t").first().v == 2
-
-
 def test_decontaminate_empty_benchmark(spark):
     from mmkg_rag_spark.operators.curation import decontaminate
 

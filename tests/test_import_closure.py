@@ -102,8 +102,9 @@ def test_deleted_modules_stay_deleted():
     assert [m for m in DELETED if _file(f"{PKG}.{m}")] == []
 
 
-# public closure names with no caller outside tests/: the lineage reader the
-# verify recipe documents and the fixture writers tests build WARC input with
+# public closure names (functions, classes and their methods) with no caller
+# outside tests/: the lineage reader the verify recipe documents and the
+# fixture writers tests build WARC input with
 KEEP_UNCALLED = {
     "metrics.read_metrics",
     "sources.warc.write_warc",
@@ -129,17 +130,25 @@ def _referenced_names() -> set[str]:
     return out
 
 
+def _public_defs(body, prefix: str):
+    """(qualified name, name) of the public functions and classes in
+    ``body`` and of the public methods of its public classes."""
+    for node in body:
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ) or node.name.startswith("_"):
+            continue
+        yield f"{prefix}.{node.name}", node.name
+        if isinstance(node, ast.ClassDef):
+            yield from _public_defs(node.body, f"{prefix}.{node.name}")
+
+
 def test_closure_public_names_have_callers():
     used = _referenced_names()
     uncalled = []
     for mod in sorted(kg_closure()):
         tree = ast.parse(_file(mod).read_text())
-        for node in tree.body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or node.name.startswith("_"):
-                continue
-            qual = f"{mod.removeprefix(PKG + '.')}.{node.name}"
-            if node.name not in used and qual not in KEEP_UNCALLED:
+        for qual, name in _public_defs(tree.body, mod.removeprefix(PKG + ".")):
+            if name not in used and qual not in KEEP_UNCALLED:
                 uncalled.append(qual)
     assert uncalled == [], f"only tests reach {uncalled}"

@@ -8,6 +8,7 @@ Spark analogue of the reference's incremental pickles (pipe.py:85-87).
 
 from __future__ import annotations
 
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,6 +45,13 @@ def _edge_set(edges):
         (r.source, r.label, r.target, r.description, tuple(r.references or []))
         for r in edges.collect()
     }
+
+
+def _full_rows(df):
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()),
+        key=repr,
+    )
 
 
 def test_incremental_equals_full_build(spark):
@@ -94,8 +102,8 @@ def test_incremental_bridging_merge(spark):
 
 
 def test_write_graph_failed_write_commits_nothing(spark, tmp_path):
-    """write_graph lands every table's data before any manifest: when the
-    images write raises, no table's latest snapshot changes."""
+    """write_graph lands every table's data before its log entry: when the
+    images write raises, nothing is committed."""
     from mmkg_rag_spark.sinks import write_graph
     from mmkg_rag_spark.sources.catalog import ParquetCatalog
 
@@ -106,15 +114,14 @@ def test_write_graph_failed_write_commits_nothing(spark, tmp_path):
 
     cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     write_graph(cat, nodes, edges, "first", images)
-    tables = ("nodes", "edges", "images")
-    before = {t: cat.snapshots(t) for t in tables}
+    before = list(cat._entries())
 
     failing = images.withColumn(
         "caption", F.raise_error(F.lit("images write failed")).cast("string")
     )
     with pytest.raises(Exception, match="images write failed"):
         write_graph(cat, nodes, edges, "second", failing)
-    assert {t: cat.snapshots(t) for t in tables} == before
+    assert list(cat._entries()) == before and len(before) == 1
 
 
 def test_sinks_roundtrip_and_eris_schema(spark, tmp_path):
@@ -133,11 +140,11 @@ def test_sinks_roundtrip_and_eris_schema(spark, tmp_path):
     assert first == min(r.name for r in nodes.collect())
 
 
-def test_streaming_commit_crash_idempotence(spark, tmp_path):
-    """A crash between the nodes and edges manifest commits must NOT make
-    the replayed batch skip (ADVICE r1: the lost-edges window). Torn state
-    is simulated by committing a real batch, then deleting its edges
-    manifest entry — exactly what a crash after the nodes commit leaves."""
+def test_streaming_commit_crash_idempotence(spark, tmp_path, monkeypatch):
+    """A crash between a fold's data write and its log entry leaves no
+    entry, so the replayed batch recomputes instead of skipping. The crash
+    is a hook that raises in place of publishing batch 1's entry."""
+    from mmkg_rag_spark.sinks import graph_snapshot
     from mmkg_rag_spark.sources.catalog import ParquetCatalog, fingerprint
     from mmkg_rag_spark.streaming import process_pages_batch
 
@@ -154,20 +161,18 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
         process_pages_batch(spark, ctl, pages1, batch_id=1),
     ]
 
-    # each fold's lineage rows: one per non-empty data file, under the file
-    # URI a scan reports, summing to the committed snapshot's rows and to
-    # the counts the fold returned
+    # each fold's lineage rows, written at commit: one per non-empty data
+    # file, under the file URI a scan reports, summing to the committed
+    # snapshot's rows and to the counts the fold returned
     from mmkg_rag_spark.metrics import read_metrics
 
     lineage = read_metrics(spark, ctl.warehouse).collect()
     for batch_id, out in enumerate(outs):
-        snap = fingerprint("stream-batch", batch_id, 8000, 400, 1)
+        batch_fp = fingerprint("stream-batch", batch_id, 8000, 400, 1)
+        snap = graph_snapshot(batch_fp)
         for table in ("nodes", "edges"):
-            got = [
-                r for r in lineage
-                if r.stage == f"stream-{table}" and r.snapshot == snap
-            ]
-            assert {r.input_snapshot for r in got} == {f"batch-{batch_id}"}
+            got = [r for r in lineage if r.stage == table and r.snapshot == snap]
+            assert {(r.input_snapshot, r.rows_in) for r in got} == {(batch_fp, -1)}
             scan = {
                 r.file: r.rows
                 for r in ctl.read(table, snap)
@@ -178,28 +183,28 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
             assert {r.file: r.rows for r in got} == scan
             assert sum(scan.values()) == out[table] > 0
 
-    # torn run: batch 1's edges manifest entry is removed post-commit
-    torn = ParquetCatalog(spark, str(tmp_path / "wh_torn"))
-    process_pages_batch(spark, torn, pages0, batch_id=0)
-    process_pages_batch(spark, torn, pages1, batch_id=1)
-    snap1 = fingerprint("stream-batch", 1, 8000, 400, 1)
-    manifest = [s for s in torn._load_manifest("edges") if s["id"] != snap1]
-    torn._save_manifest("edges", manifest)
-    assert torn.has_snapshot("nodes", snap1) and not torn.has_snapshot("edges", snap1)
+    # crashed run: batch 1's data lands, then the process dies before
+    # its log entry is published
+    crashed = ParquetCatalog(spark, str(tmp_path / "wh_crashed"))
+    process_pages_batch(spark, crashed, pages0, batch_id=0)
 
-    out = process_pages_batch(spark, torn, pages1, batch_id=1)  # replay
+    def crash(self, entry):
+        raise OSError("crashed before the log entry")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetCatalog, "_publish", crash)
+        with pytest.raises(OSError, match="crashed before the log entry"):
+            process_pages_batch(spark, crashed, pages1, batch_id=1)
+    snap1 = graph_snapshot(fingerprint("stream-batch", 1, 8000, 400, 1))
+    assert os.path.isdir(crashed.snapshot_dir("edges", snap1))
+    assert not crashed.has_snapshot(snap1)
+
+    out = process_pages_batch(spark, crashed, pages1, batch_id=1)  # replay
     assert out["skipped"] == 0  # recomputed, NOT skipped
-    assert torn.has_snapshot("edges", snap1)
+    assert crashed.has_snapshot(snap1)
 
-    def rows(cat, table):
-        return {
-            tuple(r) for r in cat.read(table).select("source", "label", "target").collect()
-        } if table == "edges" else {
-            tuple(r) for r in cat.read(table).select("name", "label").collect()
-        }
-
-    assert rows(torn, "edges") == rows(ctl, "edges") and len(rows(ctl, "edges")) > 0
-    assert rows(torn, "nodes") == rows(ctl, "nodes")
+    for table in ("nodes", "edges"):
+        assert _full_rows(crashed.read(table)) == _full_rows(ctl.read(table)), table
 
     # an injected extractor folds through the same extraction pass and
     # commits the same nodes and edges, every column, as the default
@@ -211,14 +216,44 @@ def test_streaming_commit_crash_idempotence(spark, tmp_path):
             spark, mock, batch, batch_id=batch_id, extractor_factory=MockExtractor
         )
 
-    def full_rows(cat, table):
-        return sorted(
-            (
-                tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                for r in cat.read(table).collect()
-            ),
-            key=repr,
-        )
+    for table in ("nodes", "edges"):
+        assert _full_rows(mock.read(table)) == _full_rows(ctl.read(table)), table
+
+
+def test_reader_at_fold_snapshot_sees_one_graph(spark, tmp_path, monkeypatch):
+    """A reader that resolved a fold's snapshot id reads that fold's nodes
+    and edges and the build's images at it, after a later fold committed."""
+    from mmkg_rag_spark.pipeline import build_kg
+    from mmkg_rag_spark.sinks import write_graph
+    from mmkg_rag_spark.sources.catalog import ParquetCatalog
+    from mmkg_rag_spark.sources.pages import image_manifest
+    from mmkg_rag_spark.streaming import process_pages_batch
+
+    committed = []  # hook: the snapshot id of every commit, in order
+    write_all = ParquetCatalog.write_all
+
+    def spy(self, writes, snap, meta=None):
+        out = write_all(self, writes, snap, meta)
+        committed.append(snap)
+        return out
+
+    monkeypatch.setattr(ParquetCatalog, "write_all", spy)
+    pages = gen_pages_df(spark, 12).cache()
+    doc = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("int")
+    manifest = spark.createDataFrame([(p,) for p in image_manifest()], "path string")
+    r = build_kg(spark, pages.filter(doc < 6), manifest)
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    write_graph(cat, r.nodes, r.all_edges, "build", r.images)
+    images = _full_rows(cat.read("images"))
+    assert images
+
+    folds = [pages.filter(doc.between(lo, lo + 2)).select("url", "text") for lo in (6, 9)]
+    process_pages_batch(spark, cat, folds[0], batch_id=0)
+    snap = committed[-1]
+    want = {t: _full_rows(cat.read(t)) for t in ("nodes", "edges")}
+    process_pages_batch(spark, cat, folds[1], batch_id=1)
+    assert committed[-1] != snap
 
     for table in ("nodes", "edges"):
-        assert full_rows(mock, table) == full_rows(ctl, table), table
+        assert _full_rows(cat.read(table, snap)) == want[table], table
+    assert _full_rows(cat.read("images", snap)) == images

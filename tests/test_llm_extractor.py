@@ -74,11 +74,9 @@ def test_endpoint_extractor_request_and_parse():
     ents, rels = parse_er(out[0])
     assert ents[0].name == "Ada Lovelace" and rels == []
 
-    # alias + describe calls use the same transport
+    # alias calls use the same transport
     ex.alias(["text"], [["Ada Lovelace"]])
-    ex.describe_image(["img/x.png"], ["context"])
-    assert len(calls) == 3
-    assert "img/x.png" in calls[2]["messages"][1]["content"]
+    assert len(calls) == 2
 
 
 def test_gleaning_loop_extends_and_stops_on_no(spark):

@@ -1,7 +1,7 @@
 """Staged-runner checkpoint/resume semantics (north-rule ops requirements).
 
-Covers: snapshot-fingerprint stage skipping (kill/rerun ⇒ resume), snapshot
-catalog manifest atomicity, and per-partition lineage/metrics rows.
+Covers: snapshot-fingerprint stage skipping (kill/rerun ⇒ resume), the
+catalog's log entries, and per-file lineage/metrics rows.
 """
 
 from __future__ import annotations
@@ -11,6 +11,7 @@ import json
 import os
 from contextlib import redirect_stdout
 
+import pyarrow.parquet as pq
 import pytest
 
 from mmkg_rag_spark.sources.catalog import ParquetCatalog
@@ -75,7 +76,7 @@ def test_staged_run_resumes(spark, tmp_path_factory):
     # the runner's graph stage stores what build_kg + write_graph store
     # over the same pages: nodes, edges (image edges included) and images
     cat = ParquetCatalog(spark, wh)
-    snap = cat.snapshots("nodes")[0]["id"]
+    snap = [e["id"] for e in cat._entries() if "nodes" in e["tables"]][-1]  # first run
     kg = _build_kg_catalog(spark, str(tmp_path_factory.mktemp("wh_kg")), 30)
     for table in ("nodes", "edges", "images"):
         assert _full_rows(cat.read(table, snap)) == _full_rows(kg.read(table)), table
@@ -114,10 +115,10 @@ def test_partial_failure_resumes_midway(spark, tmp_path_factory):
     with redirect_stdout(io.StringIO()):
         main(args)
 
-    # wipe the manifest of a mid-pipeline stage ⇒ "crash before stage 3"
+    # drop the graph stage's log entry ⇒ "crash before stage 3's commit"
     cat = ParquetCatalog(spark, wh)
-    nodes_manifest = cat._manifest_path("nodes")
-    os.remove(nodes_manifest)
+    os.remove(os.path.join(wh, "_log", f"v{cat.entry()['seq']}.json"))
+    assert "nodes" not in cat.entry()["tables"]
 
     out = io.StringIO()
     with redirect_stdout(out):
@@ -172,14 +173,24 @@ def test_catalog_manifest_roundtrip(spark, tmp_path_factory):
     df = spark.range(10).withColumnRenamed("id", "x")
     fp = fingerprint("t", 1)
     cat.write(df, "t", fp, meta={"input": "-"})
-    assert cat.has_snapshot("t", fp)
-    assert not cat.has_snapshot("t", fingerprint("t", 2))
+    assert cat.has_snapshot(fp)
+    assert not cat.has_snapshot(fingerprint("t", 2))
     assert cat.read("t", fp).count() == 10
     assert cat.read("t").count() == 10  # latest
-    snaps = cat.snapshots("t")
-    assert len(snaps) == 1 and snaps[0]["input"] == "-"
-    manifest = json.load(open(os.path.join(wh, "t", "manifest.json")))
-    assert manifest[0]["id"] == fp
+    # the log entry: its id, meta and the table's warehouse-relative data
+    # path, schema and footer row counts
+    entry = json.load(open(os.path.join(wh, "_log", "v1.json")))
+    assert entry == cat.entry(fp)
+    assert entry["id"] == fp and entry["seq"] == 1 and entry["meta"] == {"input": "-"}
+    assert entry["query_id"] is None and list(entry["tables"]) == ["t"]
+    t = entry["tables"]["t"]
+    assert t["path"] == os.path.join("t", f"snap-{fp}")
+    assert [f["name"] for f in t["schema"]["fields"]] == ["x"]
+    assert sum(t["files"].values()) == 10
+    assert sorted(t["files"]) == sorted(
+        f for f in os.listdir(cat.snapshot_dir("t", fp)) if f.endswith(".parquet")
+        and pq.read_metadata(os.path.join(cat.snapshot_dir("t", fp), f)).num_rows
+    )
 
 def test_cli_evaluate_prints_win_rates(spark, tmp_path_factory):
     """--evaluate runs the hermetic evaluation harness over the built graph

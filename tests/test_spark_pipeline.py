@@ -178,17 +178,22 @@ def test_one_pass_artifacts_equal_staged(spark, kw):
 
 
 def test_build_kg_extractor_equals_default(spark, engine_result):
-    """build_kg with an explicitly passed MockExtractor factory builds the
-    same graph as the default: nodes, every edge (image edges included) and
-    images."""
+    """build_kg forwards an explicitly passed extractor factory: a
+    MockExtractor whose descriptions carry a tag builds nodes that all
+    carry it, which the default extractor's nodes never do."""
     from mmkg_rag_spark.pipeline import build_kg
+
+    class Tagged(MockExtractor):
+        def index(self, texts):
+            return [
+                r.replace('"description": "', '"description": "tagged ')
+                for r in super().index(texts)
+            ]
 
     manifest = spark.createDataFrame(
         [(p,) for p in image_manifest()], "path string"
     )
-    pages = gen_pages_df(spark, N_DOCS).drop("text")
-    res = build_kg(spark, pages, manifest, extractor_factory=MockExtractor)
-
-    for table in ("nodes", "edges", "image_edges", "images"):
-        assert _rows(getattr(res, table)) == _norm(engine_result[table]), table
-    assert len(engine_result["image_edges"]) > 0
+    pages = gen_pages_df(spark, 6).drop("text")
+    nodes = build_kg(spark, pages, manifest, extractor_factory=Tagged).nodes.collect()
+    assert nodes and all("tagged " in r["description"] for r in nodes)
+    assert not any("tagged " in r["description"] for r in engine_result["nodes"])

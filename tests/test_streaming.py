@@ -60,10 +60,10 @@ def test_stream_equals_batch(spark, tmp_path_factory):
     assert got_nodes == want_nodes
     assert got_edges == want_edges
     # restart with nothing new → no further snapshots
-    n_before = len(cat.snapshots("nodes"))
+    n_before = cat.entry()["seq"]
     q2 = stream_build(spark, in_dir, wh, ckpt, available_now=True)
     q2.awaitTermination(120)
-    assert len(cat.snapshots("nodes")) == n_before
+    assert cat.entry()["seq"] == n_before
 
 
 def test_fresh_checkpoint_on_used_warehouse_raises(spark, tmp_path_factory):
@@ -82,12 +82,12 @@ def test_fresh_checkpoint_on_used_warehouse_raises(spark, tmp_path_factory):
     q = stream_build(spark, str(root / "in_a"), wh, str(root / "ckpt_a"))
     q.awaitTermination(300)
     cat = ParquetCatalog(spark, wh)
-    committed = cat.snapshots("nodes")
+    committed = list(cat._entries())
 
     q2 = stream_build(spark, str(root / "in_b"), wh, str(root / "ckpt_b"))
     with pytest.raises(Exception, match="already committed by query"):
         q2.awaitTermination(300)
-    assert cat.snapshots("nodes") == committed
+    assert list(cat._entries()) == committed
     assert committed and all(s["query_id"] == str(q.id) for s in committed)
 
 

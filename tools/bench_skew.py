@@ -18,7 +18,8 @@ evidence the round needs is max/median task time ≤ 3× on the heavy stages
 — i.e. the salt/banding actually flattens the hub key.
 
 Usage:  python tools/bench_skew.py [--docs 200000] [--out skew_results.json]
-Prints one JSON line; exit code 1 if any heavy stage exceeds the 3× gate.
+Prints one JSON line; exit code 1 if any heavy stage exceeds the 3× gate
+or a gated phase ran no stage with ≥ 2 tasks (no evidence).
 """
 
 from __future__ import annotations
@@ -175,20 +176,23 @@ def main() -> int:
         )[:6],
     }
     # the gate applies to the stages that do real work (top-3 by max task
-    # time per phase) — tail stages with 2-3 tiny tasks aren't skew evidence
-    fails = [
-        s
-        for key in ("d1_lsh_verify", "m4_salted_join")
-        for s in report[key][:3]
-        if s["ratio"] > args.gate
-    ]
-    report["gate_pass"] = not fails
+    # time per phase) — tail stages with 2-3 tiny tasks aren't skew evidence;
+    # a gated phase with no such stage is no evidence either way, so it fails
+    gated = ("d1_lsh_verify", "m4_salted_join")
+    fails = [s for key in gated for s in report[key][:3] if s["ratio"] > args.gate]
+    empty = [key for key in gated if not report[key]]
+    report["gate_pass"] = not fails and not empty
+    if empty:
+        report["gate_reason"] = (
+            f"no stage with >= 2 tasks in {', '.join(empty)}: input too small "
+            "to measure skew"
+        )
     line = json.dumps(report)
     print(line)
     if args.out:
         with open(args.out, "w") as f:
             f.write(line + "\n")
-    return 1 if fails else 0
+    return 0 if report["gate_pass"] else 1
 
 
 if __name__ == "__main__":
