@@ -25,7 +25,8 @@ Package layout:
                   (process_pages_batch) and its stream driver (stream_build)
     sinks.py      graph snapshot writes (the catalog tables are the store)
     run.py        staged resumable runner
-    metrics.py    per-stage lineage rows and scoring-throughput counters
+    metrics.py    lineage rows read from the commit log and scoring-throughput
+                  counters
 """
 
 __version__ = "0.1.0"

@@ -32,31 +32,15 @@ from .textops import relation_pair_key
 DEDUP_SIMILARITY = 0.95  # deduplicate.py:25
 
 # Collision-proof separator for merged descriptions (ADVICE r1): U+241F
-# (SYMBOL FOR UNIT SEPARATOR) never occurs in real web text, unlike the
-# previous " | " which silently split source descriptions containing pipes.
-# Kept printable so the eris text dump stays human-readable.
+# (SYMBOL FOR UNIT SEPARATOR) never occurs in real web text, unlike " | ",
+# which would split source descriptions containing pipes. Kept printable so
+# a stored description stays human-readable.
 DESC_SEP = " ␟ "
-# Pre-r2 snapshots joined descriptions with this; _split_description migrates
-# them on read so incremental-equals-full-rebuild holds across the upgrade.
-LEGACY_DESC_SEP = " | "
 
 
 def _split_description(description: str) -> list[str]:
-    """Split a stored description into its merge atoms.
-
-    New-format composites use DESC_SEP; catalogs committed before the
-    DESC_SEP change joined with ``" | "`` (ADVICE r2) — a string with no
-    DESC_SEP but a legacy separator is treated as a legacy composite and
-    split, which migrates it on the next merge. A legitimate ``" | "``
-    inside a never-merged description is split too — identical to the old
-    format's (lossy) behavior, and once merged the result is stored with
-    DESC_SEP so the loss does not compound.
-    """
-    if DESC_SEP in description:
-        return description.split(DESC_SEP)
-    if LEGACY_DESC_SEP in description:
-        return description.split(LEGACY_DESC_SEP)
-    return [description]
+    """Split a stored description into its merge atoms."""
+    return description.split(DESC_SEP)
 
 
 def entities_match(e1: Entity, e2: Entity, similarity: float = DEDUP_SIMILARITY) -> bool:

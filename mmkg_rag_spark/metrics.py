@@ -1,25 +1,22 @@
 """Per-stage lineage + metrics rows (north-rule ops requirement).
 
-Every catalog commit appends, per table it commits, one row per non-empty
-output *data file* (file ↔ write-task partition) to the catalog's
-``_metrics`` table, the stage being the table's name:
+A catalog commit's log entry (sources/catalog.py) is its lineage record: it
+holds the commit's id, meta ``input``, ``wall_ms``, ``ts`` and, per table,
+each non-empty data file's footer row count, read on the driver when the
+commit lands — no Spark job, no re-scan of the snapshot. ``read_metrics``
+turns the log into one row per (entry, table, non-empty file), the stage
+being the table's name:
 
     (stage, snapshot, input_snapshot, file, rows, rows_in, wall_ms, ts)
 
-File-level row counts are the commit's log-entry counts, read from the
-just-written files' parquet footers on the driver — no Spark job, no
-re-scan of the snapshot. ``file`` is
-the data file's ``file://`` URI, the form ``input_file_name()`` reports.
-This is the explicit accounting the north star asks for beyond what the
-Spark UI provides, and it lives next to the data so a resumed run appends
-to the same history.
+``file`` is the data file's ``file://`` URI, the form ``input_file_name()``
+reports. ``rows_in`` is resolved at read time. This is the explicit
+accounting the north star asks for beyond what the Spark UI provides, and it
+lives next to the data, so a resumed run extends the same history.
 """
 
 from __future__ import annotations
 
-import os
-import time
-import uuid
 from pathlib import Path
 from typing import TYPE_CHECKING
 
@@ -59,61 +56,42 @@ def record_stage(
     wall_ms: int,
     rows_in: int = -1,
 ) -> int:
-    """Append per-file lineage rows for a just-written data directory, its
-    rows read from the footers; returns its total row count. A catalog
-    commit records its own lineage (``record_files``), so this is for
-    data written outside one."""
-    return record_files(
-        catalog, stage, snapshot, input_snapshot,
-        file_rows(catalog, data_path), wall_ms, rows_in,
-    )
+    """Total footer row count of a just-written data directory.
 
-
-def record_files(
-    catalog: ParquetCatalog,
-    stage: str,
-    snapshot: str,
-    input_snapshot: str,
-    files: list[tuple[str, int]],
-    wall_ms: int,
-    rows_in: int,
-) -> int:
-    """Append one lineage row per (data file, rows); returns the rows' sum.
-
-    ``rows_in`` is the upstream snapshot's row count (-1 when there is
-    none) — with per-file ``rows`` out, each stage's row fan-in/fan-out is
-    auditable straight from the metrics table. Each call adds one file to
-    ``_metrics/{stage}-{snapshot}``, so a snapshot recomputed after a
-    crash keeps its earlier rows."""
-    ts = time.time()
-    rows = [
-        {
-            "stage": stage,
-            "snapshot": snapshot,
-            "input_snapshot": input_snapshot,
-            "file": Path(path).absolute().as_uri(),
-            "rows": n,
-            "rows_in": int(rows_in),
-            "wall_ms": int(wall_ms),
-            "ts": ts,
-        }
-        for path, n in files
-    ]
-    out = os.path.join(catalog.warehouse, "_metrics", f"{stage}-{snapshot}")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=METRICS_SCHEMA),
-        os.path.join(out, f"part-{uuid.uuid4().hex}.parquet"),
-    )
-    return sum(r["rows"] for r in rows)
+    Records nothing: lineage is the catalog's log entry, so data committed
+    through ``ParquetCatalog`` already has it, and data written outside a
+    commit is not part of any snapshot a reader resolves. The signature is
+    kept for the callers that still pass a stage's lineage fields."""
+    return sum(n for _, n in file_rows(catalog, data_path))
 
 
 def read_metrics(spark: SparkSession, warehouse: str) -> DataFrame:
-    return (
-        spark.read.option("basePath", os.path.join(warehouse, "_metrics"))
-        .option("mergeSchema", "true")  # tolerate pre-rows_in history
-        .parquet(os.path.join(warehouse, "_metrics", "*"))
-    )
+    """The warehouse's lineage rows (``METRICS_SCHEMA``), read from its log.
+
+    ``rows_in`` is the row total of the newest earlier entry whose id is
+    the entry's meta ``input`` (-1 when there is none)."""
+    from .sources.catalog import ParquetCatalog, entry_rows
+
+    rows, committed = [], {}
+    for e in reversed(list(ParquetCatalog(spark, warehouse)._entries())):
+        inp = e["meta"].get("input", "-")
+        rows_in = committed.get(inp, -1)
+        for table, t in e["tables"].items():
+            rows += [
+                {
+                    "stage": table,
+                    "snapshot": e["id"],
+                    "input_snapshot": inp,
+                    "file": Path(warehouse, t["path"], f).absolute().as_uri(),
+                    "rows": n,
+                    "rows_in": rows_in,
+                    "wall_ms": e["wall_ms"],
+                    "ts": e["ts"],
+                }
+                for f, n in t["files"].items()
+            ]
+        committed[e["id"]] = entry_rows(e)
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=METRICS_SCHEMA))
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,8 @@ snapshot keyed by the fingerprint of (stage, params, input snapshot); a
 re-run — e.g. after a crash — **skips every stage whose snapshot already
 exists** and resumes at the first missing one (north-rule resume semantics;
 kill this process at any point and re-invoke with the same args to verify).
-Each stage's commit also appends per-file lineage rows (metrics.py).
+Each stage's commit is one log entry, which is also its lineage record
+(metrics.read_metrics).
 
 Stage DAG (SURVEY.md §3.1 restructured):
   pages [→ pages_dedup] → mentions(map: E/R mentions + I image instances)
@@ -30,8 +31,8 @@ from pyspark.sql import functions as F
 
 def _stage(catalog, snap, write, force=False):
     """Resume-or-compute one stage: ``write()`` commits snapshot ``snap``
-    as one log entry (whose commit records the lineage rows), and the
-    stage resumes when that entry exists. Prints one line per table the
+    as one log entry (its lineage record), and the stage resumes when that
+    entry exists. Prints one line per table the
     entry holds; returns table → its DataFrame at ``snap``."""
     from mmkg_rag_spark.sources.catalog import entry_rows
 

@@ -1,11 +1,13 @@
 """Materialization sink (SURVEY.md §2.5 W1).
 
 ``write_graph`` is the only graph commit: build callers, ``run.py``'s graph
-stage and the fold (``streaming.process_pages_batch``) all commit sorted
+stage and the fold (``streaming.process_pages_batch``) all commit
 nodes/edges(/images) through it as ONE catalog log entry (reference
-pipe.py:98-100 global sorts + storage/index.py:50-58 pickle persistence,
-re-expressed as sorted partitioned table snapshots; on Iceberg the sort
-becomes the table's sortOrder). Those catalog tables are the graph's store:
+storage/index.py:50-58 pickle persistence, re-expressed as table
+snapshots). Tables are written as their frames arrive: row order is not part
+of the graph and no reader uses a clustering, so the reference's global
+sorts (pipe.py:98-100) are not reproduced; on Iceberg a ``sortOrder`` is set
+only once a reader needs one. Those catalog tables are the graph's store:
 build, fold and query read and write only them, so there is no ``eris.txt``
 or Neo4j export.
 """
@@ -15,7 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .sources.catalog import ParquetCatalog, fingerprint
 
@@ -32,7 +33,7 @@ def write_graph(
     input_fp: str,
     images: DataFrame | None = None,
 ) -> dict[str, str]:
-    """Sorted snapshot writes, committed as one log entry; returns table →
+    """Snapshot writes, committed as one log entry; returns table →
     snapshot id.
 
     ``ParquetCatalog.write_all`` lands every table's data before the entry,
@@ -40,13 +41,9 @@ def write_graph(
     keep their state at the previous entries. The entry's ``input`` meta
     names the lineage input; the catalog records the query id itself."""
     snap = graph_snapshot(input_fp)
-    writes = [
-        (nodes.orderBy("name"), "nodes"),
-        # reference sorts relations by source+target concatenation (pipe.py:99-100)
-        (edges.orderBy(F.concat_ws("", "source", "target")), "edges"),
-    ]
+    writes = [(nodes, "nodes"), (edges, "edges")]
     if images is not None:
-        writes.append((images.orderBy("path"), "images"))
+        writes.append((images, "images"))
     catalog.write_all(writes, snap, meta={"input": input_fp})
     return {table: snap for _, table in writes}
 

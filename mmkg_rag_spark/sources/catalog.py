@@ -15,7 +15,6 @@ semantics run on a directory layout:
 
     {warehouse}/_log/v{seq}.json              — one immutable entry per commit
     {warehouse}/{table}/snap-{fingerprint}/   — parquet data files
-    {warehouse}/_metrics/{table}-{fingerprint}/ — lineage rows (metrics.py)
 
 A commit lands every table's data, then publishes ONE log entry for all of
 them: the entry is written to a temp file and hard-linked to the next
@@ -24,14 +23,17 @@ loses the race re-lists the log and takes the next seq (the Hadoop-catalog
 commit of Iceberg and Delta Lake's log). A crash leaves the whole entry or
 none: data without an entry is invisible, and a replay overwrites it.
 
-An entry records its id, seq, meta, the committing streaming query id
-(``sql.streaming.queryId``, None outside a stream) and, for each table it
-commits, the warehouse-relative data path, the schema the files read back as
-(so ``read`` starts no schema-inference job) and each non-empty data file's
-footer row count. A table's state at a snapshot is its newest entry at or
-before that snapshot's seq, so the tables read at one resolved snapshot id
-are one whole graph — a fold that commits nodes and edges leaves images at
-the build's entry. Paths are relative, so a byte copy of a warehouse reads.
+An entry records its id, seq, meta, commit time (``ts``, ``wall_ms``), the
+committing streaming query id (``sql.streaming.queryId``, None outside a
+stream) and, for each table it commits, the warehouse-relative data path, the
+schema the files read back as (so ``read`` starts no schema-inference job)
+and each non-empty data file's footer row count. The log is also the
+lineage record: ``metrics.read_metrics`` reads its rows from the entries, as
+Iceberg manifests carry each data file's record count. A table's state at a
+snapshot is its newest entry at or before that snapshot's seq, so the tables
+read at one resolved snapshot id are one whole graph — a fold that commits
+nodes and edges leaves images at the build's entry. Paths are relative, so a
+byte copy of a warehouse reads.
 
 Fingerprints are content-addressed: sha256 of (stage name, params, input
 fingerprints) — deterministic across runs, so resume needs no mutable state.
@@ -49,7 +51,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..metrics import file_rows, record_files
+from ..metrics import file_rows
 
 # ``compact``'s target data-file size: Spark's default read split
 # (spark.sql.files.maxPartitionBytes), so one compacted file is one scan task
@@ -162,9 +164,8 @@ class ParquetCatalog:
     ) -> dict[str, str]:
         """Multi-table snapshot commit; returns table → data dir.
 
-        Every table's data lands, then one log entry publishes them all and
-        their lineage rows are written from its footer counts, with
-        ``rows_in`` the row total of the entry ``meta["input"]`` names."""
+        Every table's data lands, then one log entry publishes them all;
+        the entry is the commit's lineage record (``metrics.read_metrics``)."""
         t0 = time.time()
         paths: dict[str, str] = {}
         tables: dict[str, dict] = {}
@@ -176,23 +177,17 @@ class ParquetCatalog:
                 "schema": _file_schema(df),
                 "files": {os.path.basename(f): n for f, n in file_rows(self, path)},
             }
-        meta = meta or {}
-        entry = {
+        ts = time.time()
+        self._publish({
             "id": snap,
-            "ts": time.time(),
-            "meta": meta,
+            "ts": ts,
+            "wall_ms": int((ts - t0) * 1000),
+            "meta": meta or {},
             "query_id": self.spark.sparkContext.getLocalProperty(
                 "sql.streaming.queryId"
             ),
             "tables": tables,
-        }
-        inp = meta.get("input", "-")
-        rows_in = next((entry_rows(e) for e in self._entries() if e["id"] == inp), -1)
-        self._publish(entry)
-        wall_ms = int((time.time() - t0) * 1000)
-        for table, t in tables.items():
-            files = [(os.path.join(paths[table], f), n) for f, n in t["files"].items()]
-            record_files(self, table, snap, inp, files, wall_ms, rows_in)
+        })
         return paths
 
     def read(self, table: str, snap: str | None = None) -> DataFrame:

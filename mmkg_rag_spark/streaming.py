@@ -13,8 +13,8 @@ Shape:
             extraction pass, over the ``text`` column; its image rows are
             dropped — folds link no images yet)
           → incremental_canonicalize(batch ∪ graph at the newest snapshot)
-          → sinks.write_graph(nodes, edges): one catalog log entry, whose
-            commit also writes the lineage rows
+          → sinks.write_graph(nodes, edges): one catalog log entry, which
+            is also the batch's lineage record (metrics.read_metrics)
 The graph tables stay Iceberg-semantics snapshots (sources/catalog.py), so a
 crashed stream resumes from the last committed snapshot AND the streaming
 checkpoint — exactly-once per micro-batch comes from the pairing of Spark's
@@ -92,7 +92,7 @@ def process_pages_batch(
         pass
 
     nodes, _, edges = incremental_canonicalize(em, rm, prior_nodes, prior_edges)
-    write_graph(catalog, nodes.localCheckpoint(), edges.localCheckpoint(), batch_fp)
+    write_graph(catalog, nodes, edges, batch_fp)
     entry = catalog.entry(snap)
     counts = {t: entry_rows(entry, t) for t in ("nodes", "edges")}
     return {"batch_id": batch_id, **counts, "skipped": 0}

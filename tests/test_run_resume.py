@@ -106,19 +106,27 @@ def test_fold_into_runner_warehouse_equals_build_kg(spark, tmp_path_factory):
     assert labels and labels <= set(LABEL_PHRASES.values())
 
 
-def test_partial_failure_resumes_midway(spark, tmp_path_factory):
-    """Simulate a crash after stage 2: later stages compute, earlier resume."""
+def test_partial_failure_resumes_midway(spark, tmp_path_factory, monkeypatch):
+    """Simulate a crash before the graph stage's commit: later stages
+    compute, earlier resume."""
     from mmkg_rag_spark.run import main
 
     wh = str(tmp_path_factory.mktemp("wh2"))
     args = ["--n-docs", "20", "--warehouse", wh, "--master", "local[4]"]
-    with redirect_stdout(io.StringIO()):
-        main(args)
 
-    # drop the graph stage's log entry ⇒ "crash before stage 3's commit"
-    cat = ParquetCatalog(spark, wh)
-    os.remove(os.path.join(wh, "_log", f"v{cat.entry()['seq']}.json"))
-    assert "nodes" not in cat.entry()["tables"]
+    # crash in place of publishing the graph stage's log entry
+    publish = ParquetCatalog._publish
+
+    def crash(self, entry):
+        if "nodes" in entry["tables"]:
+            raise OSError("crashed before the graph entry")
+        publish(self, entry)
+
+    with monkeypatch.context() as m, redirect_stdout(io.StringIO()):
+        m.setattr(ParquetCatalog, "_publish", crash)
+        with pytest.raises(OSError, match="crashed before the graph entry"):
+            main(args)
+    assert "nodes" not in ParquetCatalog(spark, wh).entry()["tables"]
 
     out = io.StringIO()
     with redirect_stdout(out):
@@ -127,16 +135,15 @@ def test_partial_failure_resumes_midway(spark, tmp_path_factory):
     assert "[resume] pages" in text and "[resume] mentions" in text
     assert "[run   ] nodes" in text  # recomputed from the surviving inputs
 
-    # the recomputed stage flushed a fresh metrics row, and its rows_in is
-    # the surviving mentions snapshot's row count (lineage survives resume)
+    # the recomputed stage's lineage: its rows_in is the surviving mentions
+    # snapshot's row count (lineage survives resume)
     from mmkg_rag_spark.metrics import read_metrics
 
     m = read_metrics(spark, wh).filter("stage = 'nodes'").collect()
-    assert len(m) >= 2  # original run + post-crash recompute
     mention_rows = sum(
         r.rows for r in read_metrics(spark, wh).filter("stage = 'mentions'").collect()
     )
-    assert any(r.rows_in == mention_rows for r in m)
+    assert m and all(r.rows_in == mention_rows for r in m)
 
 
 def test_metrics_lineage_rows(spark, tmp_path_factory):
@@ -163,6 +170,10 @@ def test_metrics_lineage_rows(spark, tmp_path_factory):
         r.rows_in == pages_total for r in rows if r.stage == "mentions"
     )
     assert all(r.rows_in == -1 for r in rows if r.stage == "pages")
+    # the warehouse holds the log and the committed tables, no side table
+    assert sorted(os.listdir(wh)) == [
+        "_log", "edges", "images", "mentions", "nodes", "pages"
+    ]
 
 
 def test_catalog_manifest_roundtrip(spark, tmp_path_factory):
